@@ -239,8 +239,10 @@ def run_bench(parallelism: int, sf_dir: str) -> dict:
     # same caches), so do NOT clearCache inside the pass loop (measured:
     # it doubles the cache-heavy stages and measures recompute, not
     # operator work). Memory stays bounded by LRU + the session heap;
-    # deterministic reclamation belongs to pipelines (plans/pipeline.py
-    # uses the track hook), not to this warm-min bench.
+    # the queries run unscoped, so their caches sit in the default cache
+    # scope (session.py); deterministic reclamation belongs to pipelines
+    # (plans/manifest.run_stage opens a cache_scope per stage), not to
+    # this warm-min bench.
     total = min(totals)
     spark.stop()
     result = {

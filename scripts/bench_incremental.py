@@ -145,25 +145,24 @@ def run_resolve(spark, n: int) -> dict:
     verdict invariants in-run (one row per doc, keeps == clusters found
     by the pair graph, >= 90% of clusters fully collapsed)."""
     from setsm_postprocessing_python_spark.operators import dedup as DD
+    from setsm_postprocessing_python_spark.session import (cache_scope,
+                                                           cached)
 
-    docs = synth_cluster_docs(spark, n).persist()
-    n_docs = docs.count()
-    assert n_docs == n
-    track: list = []
     kept_seen: list = []
+    with cache_scope():  # docs + every cache deduplicate makes
+        docs = cached(synth_cluster_docs(spark, n))
+        n_docs = docs.count()
+        assert n_docs == n
 
-    def resolve():
-        out = DD.deduplicate(docs, track=track)
-        kept = out.where("keep").count()
-        total = out.count()
-        assert total == n, f"verdict rows {total} != docs {n}"
-        kept_seen.append(kept)
+        def resolve():
+            out = DD.deduplicate(docs)
+            kept = out.where("keep").count()
+            total = out.count()
+            assert total == n, f"verdict rows {total} != docs {n}"
+            kept_seen.append(kept)
 
-    t = timed_min(resolve)  # warmup inside timed_min captures kept too
+        t = timed_min(resolve)  # warmup inside timed_min captures kept too
     kept = kept_seen[0]
-    for c in track:
-        c.unpersist()
-    docs.unpersist()
     n_clusters = n // RESOLVE_DUP
     # LSH links ~J=0.9 pairs with high probability; allow a small tail of
     # split clusters but require >= 90% full collapse

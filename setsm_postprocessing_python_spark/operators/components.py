@@ -31,6 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..session import cached, checkpointed
 from ..sql import dialect as D
 from .knn import ring_offsets
 
@@ -65,10 +66,12 @@ def cc_from_edges(nodes: DataFrame, edges: DataFrame,
     Deterministic: labels are min node ids, propagation order-insensitive.
     Raises RuntimeError if max_iter rounds do not reach the fixpoint (with
     pointer jumping, rounds needed ~ log2(component diameter), so 25 covers
-    diameters up to ~2^25 nodes). Caller owns the persistence of `edges`
-    (it is re-read every round)."""
+    diameters up to ~2^25 nodes). Caller caches `edges` (it is re-read
+    every round). Every round's labels are a local checkpoint owned by the
+    caller's cache_scope — the returned labels read the last one, so no
+    scope may close inside the operator."""
     labels = nodes.select("cell", F.col("cell").alias("component"))
-    labels = labels.localCheckpoint()
+    labels = checkpointed(labels)
     converged = False
     for _ in range(max_iter):
         # HashMin: push each node's label to its neighbors, take the min seen
@@ -83,7 +86,7 @@ def cc_from_edges(nodes: DataFrame, edges: DataFrame,
                              F.col("component").alias("component2"))
         new_labels = (hashmin.join(lut, "component")
                       .select("cell", F.col("component2").alias("component")))
-        new_labels = new_labels.localCheckpoint()
+        new_labels = checkpointed(new_labels)
         changed = (new_labels.alias("n")
                    .join(labels.alias("o"), "cell")
                    .where(F.col("n.component") != F.col("o.component"))
@@ -105,11 +108,8 @@ def connected_components(cells: DataFrame, max_iter: int = 25) -> DataFrame:
     cells: distinct occupied cells with (cell, cell_x, cell_y); 8-adjacency
     edges derived grid-side (_neighbor_pairs), labels via cc_from_edges.
     """
-    edges = _neighbor_pairs(cells).persist()
-    try:
-        return cc_from_edges(cells.select("cell"), edges, max_iter)
-    finally:
-        edges.unpersist()
+    return cc_from_edges(cells.select("cell"), cached(_neighbor_pairs(cells)),
+                         max_iter)
 
 
 def bwareaopen(cells: DataFrame, min_size: int, max_iter: int = 25) -> DataFrame:

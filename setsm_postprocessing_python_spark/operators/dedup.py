@@ -22,6 +22,7 @@ import random
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..session import cached
 from ..sql import dialect as D
 
 MERSENNE31 = 2147483647  # 2^31 - 1
@@ -217,8 +218,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def near_dup_pipeline(df: DataFrame, id_col: str = "doc_id",
-                      text: str = "text",
-                      track: list | None = None) -> DataFrame:
+                      text: str = "text") -> DataFrame:
     """Production composition: EXACT dedup first, MinHash-LSH on the
     representatives only. At web scale most duplication is byte-identical
     (mirrors, boilerplate reposts); collapsing it first removes the
@@ -235,8 +235,6 @@ def near_dup_pipeline(df: DataFrame, id_col: str = "doc_id",
     short rows per distinct text) because BOTH sides of the candidate
     self-join read it and no exchange reuse fires across the aliased
     sides — without it the whole shingle+minhash pipeline ran twice.
-    `track` receives the persisted handle (caller-owned release, the
-    engine-wide convention).
 
     Output: (id_a < id_b, n_shared_bands, n_docs_a, n_docs_b) — candidate
     pairs between exact-duplicate GROUPS, weighted by group sizes so
@@ -245,15 +243,12 @@ def near_dup_pipeline(df: DataFrame, id_col: str = "doc_id",
     # bands twice (the self-join sides) — both are per-distinct-text tiny,
     # so persist them rather than re-running the full-text aggregation /
     # the shingle+minhash pipeline per reference
-    reps = (df.groupBy(F.md5(text).alias("_md5"))
-            .agg(F.min(id_col).alias(id_col),
-                 F.first(text).alias(text),
-                 F.count(F.lit(1)).alias("n_dups"))
-            .drop("_md5")
-            .persist())
-    bands = band_signatures(reps, id_col).persist()
-    if track is not None:
-        track.extend([reps, bands])
+    reps = cached(df.groupBy(F.md5(text).alias("_md5"))
+                  .agg(F.min(id_col).alias(id_col),
+                       F.first(text).alias(text),
+                       F.count(F.lit(1)).alias("n_dups"))
+                  .drop("_md5"))
+    bands = cached(band_signatures(reps, id_col))
     a = bands.select(F.col(id_col).alias("id_a"), "band", "band_sig")
     b = bands.select(F.col(id_col).alias("id_b"), "band", "band_sig")
     pairs = (a.join(b, ["band", "band_sig"])
@@ -330,15 +325,11 @@ def incremental_lsh_pairs(batch_sigs: DataFrame, corpus_sigs: DataFrame,
 
 
 def incremental_near_dup(batch: DataFrame, corpus_sigs: DataFrame,
-                         id_col: str = "doc_id",
-                         track: list | None = None) -> DataFrame:
-    """Convenience composition: signature the batch once (persisted — the
+                         id_col: str = "doc_id") -> DataFrame:
+    """Convenience composition: signature the batch once (cached — the
     frame feeds both the vs-corpus and the within-batch join) and probe
-    the corpus signature state. `track` receives the persisted frame for
-    caller-owned release (the engine-wide cache-hatch convention)."""
-    sigs = band_signatures(batch, id_col).persist()
-    if track is not None:
-        track.append(sigs)
+    the corpus signature state."""
+    sigs = cached(band_signatures(batch, id_col))
     return incremental_lsh_pairs(sigs, corpus_sigs, id_col)
 
 
@@ -444,11 +435,7 @@ def dedup_decisions(pairs: DataFrame, ids: DataFrame,
                        F.col("id_b").alias("nbr_cell"))
     rev = pairs.select(F.col("id_b").alias("cell"),
                        F.col("id_a").alias("nbr_cell"))
-    edges = fwd.unionByName(rev).persist()
-    try:
-        labels = cc_from_edges(nodes, edges, max_iter)
-    finally:
-        edges.unpersist()
+    labels = cc_from_edges(nodes, cached(fwd.unionByName(rev)), max_iter)
     return labels.select(
         F.col("cell").alias(id_col),
         F.col("component").alias("canonical_id"),
@@ -457,8 +444,7 @@ def dedup_decisions(pairs: DataFrame, ids: DataFrame,
 
 def deduplicate(df: DataFrame, id_col: str = "doc_id",
                 text: str = "text", max_iter: int = 25,
-                min_shared_bands: int = 1,
-                track: list | None = None) -> DataFrame:
+                min_shared_bands: int = 1) -> DataFrame:
     """End-to-end near-dup removal — the full production composition:
     exact collapse -> LSH over representatives -> component resolution
     -> per-DOCUMENT verdicts. Output one row per input doc:
@@ -479,8 +465,7 @@ def deduplicate(df: DataFrame, id_col: str = "doc_id",
 
     Every step is a bounded equi-join or the log-rounds CC loop — no
     step is quadratic in duplication (the raw-LSH pathology measured in
-    BENCH/SCALE_PROBE.md is avoided by construction). `track` receives
-    the persisted md5-keyed projection for caller-owned release."""
+    BENCH/SCALE_PROBE.md is avoided by construction)."""
     # local group derivation rather than exact_dedup(): the verdict table
     # needs the doc->rep MAP (not group stats), and the NULL-singleton
     # key below is a deliberate semantic difference from exact_dedup's
@@ -488,11 +473,8 @@ def deduplicate(df: DataFrame, id_col: str = "doc_id",
     md5e = F.coalesce(
         F.md5(text),
         F.concat(F.lit("__null__:"), F.col(id_col).cast("string")))
-    with_md5 = (df.select(F.col(id_col).cast("bigint").alias(id_col),
-                          md5e.alias("_md5"))
-                .persist())
-    if track is not None:
-        track.append(with_md5)
+    with_md5 = cached(df.select(F.col(id_col).cast("bigint").alias(id_col),
+                                md5e.alias("_md5")))
     groups = (with_md5.groupBy("_md5")
               .agg(F.min(id_col).alias("rep_id")))
     reps = (with_md5.join(groups, "_md5")

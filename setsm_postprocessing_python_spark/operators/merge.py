@@ -27,6 +27,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..session import cached
 from ..sql import dialect as D
 
 ADD_MIN_AREA_FRAC = 0.05   # member must add >=5 % of its own area (redundancy gate)
@@ -435,7 +436,7 @@ def feather_weight_field(df: DataFrame) -> DataFrame:
 # feather blend (oracle-checkable DataFrame algebra)
 # ---------------------------------------------------------------------------
 
-def feather_blend(df: DataFrame, track: list | None = None) -> DataFrame:
+def feather_blend(df: DataFrame) -> DataFrame:
     """Blend the two sides of each host pair over shared coarse blocks with
     a linear feather weight across the overlap's x-span, rescaled
     clip((w - 0.25) / (0.55 - 0.25), 0, 1) per lib/scenes2strips.py:461-476;
@@ -449,9 +450,8 @@ def feather_blend(df: DataFrame, track: list | None = None) -> DataFrame:
     aggregate broadcast back onto the blocks — not a Window over all
     blended rows, so no single-partition sort task exists at any grain
     (the skew foot-gun VERDICT r6 flagged on the assembly path). The
-    per-(pair, block) table is persisted (it is read by the span agg and
-    the final projection; it is block-grid bounded, i.e. tiny); `track`
-    receives the handle for caller-owned release."""
+    per-(pair, block) table is cached (it is read by the span agg and
+    the final projection; it is block-grid bounded, i.e. tiny)."""
     derived = ("z", "bx", "block", "hostnum", "pair")
     base = df.select(
         *[c for c in df.columns if c not in derived],
@@ -462,7 +462,7 @@ def feather_blend(df: DataFrame, track: list | None = None) -> DataFrame:
         F.expr("cast(floor(cast(substring(group_id, 5) as int) / 2) as bigint)")
          .alias("pair"))
     side = F.col("hostnum") % 2
-    j = (base.groupBy("pair", "block", "bx").agg(
+    j = cached(base.groupBy("pair", "block", "bx").agg(
             F.sum(F.when(side == 0, F.col("z"))).alias("sza"),
             F.count(F.when(side == 0, F.lit(1))).alias("na"),
             F.expr("bit_or(CASE WHEN hostnum % 2 = 0 THEN flags END)")
@@ -471,10 +471,7 @@ def feather_blend(df: DataFrame, track: list | None = None) -> DataFrame:
             F.count(F.when(side == 1, F.lit(1))).alias("nb"),
             F.expr("bit_or(CASE WHEN hostnum % 2 = 1 THEN flags END)")
              .alias("flb"))
-         .where((F.col("na") > 0) & (F.col("nb") > 0))
-         .persist())
-    if track is not None:
-        track.append(j)
+         .where((F.col("na") > 0) & (F.col("nb") > 0)))
     spans = j.groupBy("pair").agg(F.min("bx").alias("_bx0"),
                                   F.max("bx").alias("_bx1"))
     j = j.join(F.broadcast(spans), "pair")
@@ -515,8 +512,7 @@ def _corners():
 
 def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
                    max_rmse: float = STRIP_MAX_COREG_RMSE,
-                   pair_of=host_pair, side_of=None,
-                   track: list | None = None) -> DataFrame:
+                   pair_of=host_pair, side_of=None) -> DataFrame:
     """The full scenes2strips assembly (lib/scenes2strips.py:570-692),
     composed at the coarse-block grain:
 
@@ -547,10 +543,9 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
     shared-block fit gate is satisfiable at 500 rows — same rationale as
     the coarse kNN cells).
 
-    track: optional list — every DataFrame this operator persists is
-    appended, so bench/pipeline loops can unpersist deterministically
-    after materializing the result (the operator itself cannot: it is
-    lazy, and the returned frame still references the caches).
+    Its three block-grain caches (agg, trans, blend join) belong to the
+    caller's cache_scope (session.cached): the operator is lazy and the
+    returned frame still reads them.
 
     Output: (pair, bx, by, block, src, w, z_strip, n_pages, matchtag,
     flags_merged, segment_break)."""
@@ -585,12 +580,12 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
     # and min(group_id) labels the sides. Persisted: referenced by the
     # fit's two cogroup sides and the blend's two sides; rows are per
     # (pair, block, side), block-grid bounded.
-    agg = base.groupBy("pair", "bx", "by", side_of().alias("side")).agg(
+    agg = cached(base.groupBy("pair", "bx", "by", side_of().alias("side")).agg(
         F.sum("z").alias("sz"), F.count(F.lit(1)).alias("n"),
         F.expr("bit_or(flags)").alias("fl"),
         *([F.min("group_id").alias("group_id"),
            F.sum(F.col("z").cast("decimal(30,12)")).alias("zsum")]
-          if internal_fit else [])).persist()
+          if internal_fit else [])))
     if internal_fit:
         # the cogrouped fit consumes exactly the rows coregister_pairs'
         # internal (pair, side, block) aggregation would have produced:
@@ -613,7 +608,7 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
     # usable semi-join, broken anti-selection) — without the persist each
     # reference re-runs the whole cogrouped fit (observed: 4 FlatMapCoGroups
     # in the unpersisted physical plan). Caches are small (per-pair /
-    # per-block rows) and LRU-evict; pass `track` to reclaim eagerly.
+    # per-block rows) and LRU-evict; a cache_scope reclaims them eagerly.
     #
     # usable is coalesced to FALSE (NULL status/rmse from a malformed
     # caller-supplied coreg table must not satisfy neither branch), and
@@ -634,7 +629,7 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
             & ~F.isnan("rmse") & (F.col("rmse") <= max_rmse),
             F.lit(False)).alias("usable"))
     if internal_fit:
-        trans = trans_known.persist()
+        trans = cached(trans_known)
     else:
         missing = (agg.select("pair").distinct()
                    .join(trans_known.select("pair"), "pair", "left_anti")
@@ -645,9 +640,7 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
                            F.lit(None).cast("double").alias("rmse"),
                            F.lit("missing_trans").alias("status"),
                            F.lit(False).alias("usable")))
-        trans = trans_known.unionByName(missing).persist()
-    if track is not None:
-        track.extend([agg, trans])
+        trans = cached(trans_known.unionByName(missing))
     a = agg.where("side = 0").select(
         "pair", "bx", "by", (F.col("sz") / F.col("n")).alias("za"),
         F.col("n").alias("na"), F.col("fl").alias("fla"))
@@ -693,9 +686,7 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
                   "pair", "left_semi")
     # persisted: the span aggregate and the final projection both read it
     # (block-grain rows, bounded by the block grid)
-    j = a_ok.join(bs, ["pair", "bx", "by"], "full_outer").persist()
-    if track is not None:
-        track.append(j)
+    j = cached(a_ok.join(bs, ["pair", "bx", "by"], "full_outer"))
     in_a = F.col("na").isNotNull()
     in_b = F.col("zi").isNotNull() | F.col("nb").isNotNull()
     both = in_a & F.col("zi").isNotNull()

@@ -23,6 +23,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import LongType
 
+from ..session import cached
+
 
 def _cos_expr(a: str, b: str) -> str:
     """Deterministic cosine: double-cast elements, sequential fold — the
@@ -93,7 +95,7 @@ def embedding_near_dup(df: DataFrame, threshold: float = 0.9,
 
 def ann_dedup_topk(df: DataFrame, dim: int, k: int = 3,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   seed: int = 42, track: list | None = None) -> DataFrame:
+                   seed: int = 42) -> DataFrame:
     """The production ANN composition: EXACT-DUP PRE-COLLAPSE, then LSH
     top-k over the distinct vectors only, group sizes re-attached — the
     similarity analogue of dedup.near_dup_pipeline (reference analogue:
@@ -116,13 +118,9 @@ def ann_dedup_topk(df: DataFrame, dim: int, k: int = 3,
     and costing recall headroom. The collapse groupBy is persisted, so
     the distinct count is one cheap action over work the pipeline reuses
     anyway (reps + both size joins read the same cached table)."""
-    groups = (df.groupBy(vec_col)
-                .agg(F.min(F.col(id_col).cast("bigint")).alias("vec_id"),
-                     F.count(F.lit(1)).alias("group_size"))
-              .persist())
-    if track is not None:
-        # caller-owned cache lifetime: unpersist after materialization
-        track.append(groups)
+    groups = cached(df.groupBy(vec_col)
+                    .agg(F.min(F.col(id_col).cast("bigint")).alias("vec_id"),
+                         F.count(F.lit(1)).alias("group_size")))
     n_distinct = groups.count()
     reps = groups.select("vec_id", vec_col)
     # dup_guard=None: reps are distinct BY CONSTRUCTION (one row per
@@ -410,7 +408,6 @@ def lsh_topk(df: DataFrame, dim: int, k: int = 3, n_tables: int = 8,
              planes_per_table: int | None = None, id_col: str = "vec_id",
              vec_col: str = "embedding", seed: int = 42,
              n_hint: int | None = None, probe_bits: int = 2,
-             rerank: str = "bucket",
              dup_guard: float | None = DUP_GUARD_DEFAULT) -> DataFrame:
     """Approximate top-k: candidates collide in >=1 of n_tables LSH
     tables; exact cosine re-rank within candidates. Collision probability
@@ -434,7 +431,7 @@ def lsh_topk(df: DataFrame, dim: int, k: int = 3, n_tables: int = 8,
     serves as n_hint, so the guarded path costs no extra job when n_hint
     was not supplied.
 
-    rerank='bucket' (default): cosine is computed PER BUCKET, where the
+    Re-rank: cosine is computed PER BUCKET, where the
     candidate vectors are already co-located by the bucket shuffle — one
     applyInPandas over bucket groups gathers the (a-probe x b-home) pair
     matrix and runs the batched einsum in-group, emitting the NARROW
@@ -451,11 +448,6 @@ def lsh_topk(df: DataFrame, dim: int, k: int = 3, n_tables: int = 8,
     at any n. Hot-bucket skew is bounded by the planes_per_table sizing
     below; in-UDF pair enumeration is chunked so a jumbo bucket degrades
     to more chunks, not more memory.
-
-    rerank='pairjoin': the previous shape (distinct id pairs, re-attach
-    vectors by join, per-pair pandas UDF) — kept as the fallback for
-    pathological bucket skew where one bucket's pair matrix would
-    dominate a task.
 
     planes_per_table defaults to log2(n / 64) clamped to >=4: average
     bucket size ~64 regardless of n, so candidate count stays ~64*T per
@@ -481,7 +473,7 @@ def lsh_topk(df: DataFrame, dim: int, k: int = 3, n_tables: int = 8,
         if n_hint is None:
             n_hint = stats["n"]
     j = lsh_candidate_cosines(df, dim, n_tables, planes_per_table, id_col,
-                              vec_col, seed, n_hint, probe_bits, rerank,
+                              vec_col, seed, n_hint, probe_bits,
                               group_topk=k)
     # cross-group duplicate pairs are removed INSIDE the ranking window
     # (round 7): cosine is a deterministic function of the id pair, so
@@ -506,7 +498,6 @@ def lsh_candidate_cosines(df: DataFrame, dim: int, n_tables: int = 8,
                           id_col: str = "vec_id", vec_col: str = "embedding",
                           seed: int = 42, n_hint: int | None = None,
                           probe_bits: int = 2,
-                          rerank: str = "bucket",
                           group_topk: int | None = None) -> DataFrame:
     """The LSH candidate stream shared by lsh_topk (-> window top-k) and
     embedding_near_dup(method='lsh') (-> symmetric threshold filter):
@@ -536,88 +527,57 @@ def lsh_candidate_cosines(df: DataFrame, dim: int, n_tables: int = 8,
     # query side multiprobes (home + lowest-margin bit flips); index side
     # keeps one bucket per table — recall rises without growing the index.
     # ONE hyperplane-matmul UDF pass: the multiprobe output's first
-    # n_tables entries ARE the home buckets, so the index side is a slice.
+    # n_tables entries ARE the home buckets (flagged below).
     base = with_lsh_buckets(df, dim, n_tables, planes_per_table, vec_col,
                             seed, probe_bits=min(probe_bits, planes_per_table),
                             out="probe_buckets")
-    if rerank == "bucket":
-        # ONE posexplode of the probe list: position < n_tables marks the
-        # home-bucket (index-side) entries — home buckets are the first
-        # n_tables entries of the multiprobe output, so the index side is
-        # a flag, not a second explode. Within a table the home bucket and
-        # its single-bit flips are pairwise distinct and tables carry
-        # distinct key prefixes, so each vector lands in a bkt group at
-        # most once — in-group pairs are unique by construction.
-        # posexplode_outer, not posexplode: the plain generator adds an
-        # implicit size>0 filter whose condition re-evaluates the
-        # hyperplane pandas UDF (measured: 2 ArrowEvalPython nodes, the
-        # matmul paid twice per row). The probe array is never empty by
-        # construction, so the outer variant is row-identical and runs
-        # the UDF once.
-        entries = base.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
-            F.posexplode_outer("probe_buckets").alias("pos", "bkt")).select(
-            "vec_id", "v", "bkt", (F.col("pos") < n_tables).alias("is_b"))
-        # SUPER-GROUPS: grouping directly on bkt makes one pandas call
-        # per bucket — with ~21-entry buckets that is n*T/21 groups, and
-        # pandas per-group overhead (~0.1-0.3 ms) dominates at scale
-        # (millions of groups for 10^8+ vectors). Instead hash buckets
-        # into n_super coalesced groups sized for ~2^16 entries each
-        # (~17 MB of vectors per group task) and run the per-bucket pair
-        # kernel via an in-UDF groupby — same pairs, same cosines, ~32x
-        # fewer pandas invocations here. Derived from n (known: sizing
-        # already needed it), so no extra job.
-        # floor 256 (round 7, was 64): with few groups a handful of hot
-        # buckets hash together into one jumbo kernel task and the stage
-        # rides on that straggler (measured on the bench corpus: floor 64
-        # gave 2.1-10.7 s swings, floor 256 a stable ~1.7 s — §2.6 of the
-        # optimization guide). At scale the n_entries>>16 term dominates
-        # and the floor is inert; the per-vec top-k is grouping-invariant
-        # (see _super_group_topk), so results are identical.
-        if n is not None:
-            n_entries = n * (1 + min(probe_bits, planes_per_table)) * n_tables
-            n_super = int(max(256, min(1 << 20, n_entries >> 16)))
-        else:  # explicit planes, no n_hint: skip the sizing job entirely
-            n_super = 4096
-        kernel = (_super_group_topk(group_topk) if group_topk
-                  else _super_group_pair_cos)
-        # NB: the stream may carry CROSS-group duplicates of a pair
-        # (identical cosine — the kernel is deterministic); consumers
-        # dedup where they already shuffle (lsh_topk inside its ranking
-        # window, embedding_near_dup in its orientation distinct) instead
-        # of paying a dedicated distinct exchange here (round 7)
-        j = (entries.withColumn(
+    # ONE posexplode of the probe list: position < n_tables marks the
+    # home-bucket (index-side) entries — home buckets are the first
+    # n_tables entries of the multiprobe output, so the index side is
+    # a flag, not a second explode. Within a table the home bucket and
+    # its single-bit flips are pairwise distinct and tables carry
+    # distinct key prefixes, so each vector lands in a bkt group at
+    # most once — in-group pairs are unique by construction.
+    # posexplode_outer, not posexplode: the plain generator adds an
+    # implicit size>0 filter whose condition re-evaluates the
+    # hyperplane pandas UDF (measured: 2 ArrowEvalPython nodes, the
+    # matmul paid twice per row). The probe array is never empty by
+    # construction, so the outer variant is row-identical and runs
+    # the UDF once.
+    entries = base.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
+        F.posexplode_outer("probe_buckets").alias("pos", "bkt")).select(
+        "vec_id", "v", "bkt", (F.col("pos") < n_tables).alias("is_b"))
+    # SUPER-GROUPS: grouping directly on bkt makes one pandas call
+    # per bucket — with ~21-entry buckets that is n*T/21 groups, and
+    # pandas per-group overhead (~0.1-0.3 ms) dominates at scale
+    # (millions of groups for 10^8+ vectors). Instead hash buckets
+    # into n_super coalesced groups sized for ~2^16 entries each
+    # (~17 MB of vectors per group task) and run the per-bucket pair
+    # kernel via an in-UDF groupby — same pairs, same cosines, ~32x
+    # fewer pandas invocations here. Derived from n (known: sizing
+    # already needed it), so no extra job.
+    # floor 256 (round 7, was 64): with few groups a handful of hot
+    # buckets hash together into one jumbo kernel task and the stage
+    # rides on that straggler (measured on the bench corpus: floor 64
+    # gave 2.1-10.7 s swings, floor 256 a stable ~1.7 s — §2.6 of the
+    # optimization guide). At scale the n_entries>>16 term dominates
+    # and the floor is inert; the per-vec top-k is grouping-invariant
+    # (see _super_group_topk), so results are identical.
+    if n is not None:
+        n_entries = n * (1 + min(probe_bits, planes_per_table)) * n_tables
+        n_super = int(max(256, min(1 << 20, n_entries >> 16)))
+    else:  # explicit planes, no n_hint: skip the sizing job entirely
+        n_super = 4096
+    kernel = (_super_group_topk(group_topk) if group_topk
+              else _super_group_pair_cos)
+    # NB: the stream may carry CROSS-group duplicates of a pair
+    # (identical cosine — the kernel is deterministic); consumers
+    # dedup where they already shuffle (lsh_topk inside its ranking
+    # window, embedding_near_dup in its orientation distinct) instead
+    # of paying a dedicated distinct exchange here (round 7)
+    return (entries.withColumn(
                 "sg", F.pmod(F.xxhash64("bkt"), F.lit(n_super)))
-             .groupBy("sg")
-             .applyInPandas(kernel,
-                            "vec_id bigint, nbr_id bigint, cosine double"))
-    else:
-        base = base.withColumn("buckets", F.slice("probe_buckets", 1, n_tables))
-        base = base.persist()
-        a = base.select(F.col(id_col).alias("vec_id"),
-                        F.explode("probe_buckets").alias("bkt"))
-        b = base.select(F.col(id_col).alias("nbr_id"),
-                        F.explode("buckets").alias("bkt"))
-        # dedupe candidates on the id PAIR (cheap fixed-width shuffle), then
-        # re-attach vectors — never shuffle/hash the 64-dim arrays per pair
-        pairs = (a.join(b, "bkt").where(F.col("vec_id") != F.col("nbr_id"))
-                  .select("vec_id", "nbr_id").distinct())
-        va_side = base.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("va"))
-        vb_side = base.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("vb"))
-        j = pairs.join(va_side, "vec_id").join(vb_side, "nbr_id")
-        # candidate re-rank cosine: Arrow-batched numpy (the exact-parity
-        # zip_with expression path in brute_force_topk is ~300k pairs/s; the
-        # batched BLAS path is the one that survives millions of candidates)
-        from pyspark.sql.types import DoubleType
-
-        @F.pandas_udf(DoubleType())
-        def cos_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
-            ma = np.stack(va.to_numpy()).astype(np.float64)
-            mb = np.stack(vb.to_numpy()).astype(np.float64)
-            dots = np.einsum("ij,ij->i", ma, mb)
-            na = np.sqrt(np.einsum("ij,ij->i", ma, ma))
-            nb = np.sqrt(np.einsum("ij,ij->i", mb, mb))
-            return pd.Series(dots / (na * nb))
-
-        j = j.withColumn("cosine", cos_udf(F.col("va"), F.col("vb")))
-    return j.select("vec_id", "nbr_id", "cosine")
+            .groupBy("sg")
+            .applyInPandas(kernel,
+                           "vec_id bigint, nbr_id bigint, cosine double"))

@@ -31,6 +31,8 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import cache_scope, cached
+
 MANIFEST_SCHEMA = ("stage string, unit string, inputs_fingerprint bigint, "
                    "row_count bigint, status string, wall_s double")
 
@@ -88,40 +90,40 @@ def run_stage(spark: SparkSession, stage: str, inputs: DataFrame,
     exactly its files. Manifest rows are appended after the write (the
     `.fin` marker written after outputs, batch_scenes2strips.py:1524-1533);
     a crash between write and manifest append re-runs the unit — safe
-    because the write is an overwrite.
+    because the write is an overwrite. The stage runs in one cache_scope:
+    everything cached while it runs, inside transform too, is released
+    when it returns or raises.
     """
     t0 = time.time()
-    fps = unit_fingerprints(inputs, unit_col).cache()
-    todo = pending_units(spark, manifest_dir, stage, fps).cache()
-    n_todo = todo.count()
-    n_all = fps.count()
-    if n_todo == 0:
-        fps.unpersist()
-        todo.unpersist()
-        return {"stage": stage, "units_total": n_all, "units_run": 0,
-                "wall_s": time.time() - t0}
+    with cache_scope():  # fps, todo and whatever transform caches
+        fps = cached(unit_fingerprints(inputs, unit_col))
+        todo = cached(pending_units(spark, manifest_dir, stage, fps))
+        n_todo = todo.count()
+        n_all = fps.count()
+        if n_todo == 0:
+            return {"stage": stage, "units_total": n_all, "units_run": 0,
+                    "wall_s": time.time() - t0}
 
-    subset = (inputs.withColumn("unit", F.col(unit_col).cast("string"))
-              .join(F.broadcast(todo.select("unit")), "unit", "inner"))
-    out = transform(subset)
-    if "unit" not in out.columns:
-        raise ValueError("transform output must keep the `unit` column")
-    (out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("unit").parquet(f"{out_dir}/{stage}"))
+        subset = (inputs.withColumn("unit", F.col(unit_col).cast("string"))
+                  .join(F.broadcast(todo.select("unit")), "unit", "inner"))
+        out = transform(subset)
+        if "unit" not in out.columns:
+            raise ValueError("transform output must keep the `unit` column")
+        (out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("unit").parquet(f"{out_dir}/{stage}"))
 
-    # per-unit row counts of what was written (lineage metrics)
-    written = spark.read.parquet(f"{out_dir}/{stage}")
-    counts = (written.join(F.broadcast(todo.select("unit")), "unit", "inner")
-              .groupBy("unit").agg(F.count(F.lit(1)).alias("row_count")))
-    wall = time.time() - t0
-    rows = (todo.join(counts, "unit", "left")
-            .select(F.lit(stage).alias("stage"), "unit", "inputs_fingerprint",
-                    F.coalesce("row_count", F.lit(0)).alias("row_count"),
-                    F.lit("done").alias("status"),
-                    F.lit(float(wall)).alias("wall_s")))
-    rows.write.mode("append").parquet(manifest_dir)
-    fps.unpersist()
-    todo.unpersist()
-    return {"stage": stage, "units_total": n_all, "units_run": n_todo,
-            "wall_s": wall}
+        # per-unit row counts of what was written (lineage metrics)
+        written = spark.read.parquet(f"{out_dir}/{stage}")
+        counts = (written.join(F.broadcast(todo.select("unit")), "unit")
+                  .groupBy("unit").agg(F.count(F.lit(1)).alias("row_count")))
+        wall = time.time() - t0
+        rows = (todo.join(counts, "unit", "left")
+                .select(F.lit(stage).alias("stage"), "unit",
+                        "inputs_fingerprint",
+                        F.coalesce("row_count", F.lit(0)).alias("row_count"),
+                        F.lit("done").alias("status"),
+                        F.lit(float(wall)).alias("wall_s")))
+        rows.write.mode("append").parquet(manifest_dir)
+        return {"stage": stage, "units_total": n_all, "units_run": n_todo,
+                "wall_s": wall}

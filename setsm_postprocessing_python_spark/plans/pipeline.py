@@ -113,24 +113,15 @@ def _run_stages(spark: SparkSession, sf_dir: str, out_dir: str,
                    .select("pair", "group_a", "group_b", "n_points", "iters",
                            "dz", "dx", "dy", "rmse", "status"))
 
-    # caller-owned cache lifetime: strip_assemble persists its trans/agg
-    # tables internally; collect the handles and unpersist once the stage
-    # write has materialized everything (the `track` hook — keeps long
-    # pipeline sessions from accumulating cached tables)
-    strip_caches: list = []
-
     def t_strip(df):
         # SYNTHETIC_Z_MAX_RMSE, not the reference metre default: with the
         # md5 z field every fit carries ~30 RMSE of noise and cutoff 1
         # would segment-break every pair, leaving the blend path dead
         out = M.strip_assemble(df.drop("unit"), coreg=coreg_prior,
-                               max_rmse=M.SYNTHETIC_Z_MAX_RMSE,
-                               track=strip_caches)
+                               max_rmse=M.SYNTHETIC_Z_MAX_RMSE)
         return out.withColumn("unit", F.col("pair"))
     results.append(run_stage(spark, "strip_assemble", paired, "pair",
                              t_strip, out_dir, man_dir))
-    for h in strip_caches:
-        h.unpersist()
 
     # stage 6: per-tile rollup (strip summary stats analogue)
     assigned = spark.read.parquet(f"{out_dir}/tile_assign")

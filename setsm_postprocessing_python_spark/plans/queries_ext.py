@@ -17,37 +17,12 @@ from ..operators import dedup as DD
 from ..operators import merge as M
 from ..operators import similarity as SIM
 from ..operators.flags import with_flags
+from ..session import cached, release_caches  # noqa: F401 (re-export)
 from ..sources import pages as P
 from ..sql import dialect as D
 
 _DD = D.DUCKDB
 M31 = DD.MERSENNE31
-
-# Handles to every DataFrame a registered query persisted (q_strip_assembly's
-# pruned projection + strip_assemble's internal trans/agg tables,
-# q_ann_dedup's collapse table). Deterministic reclamation is CALLER-OWNED,
-# not automatic: re-invoking a registered query must keep reusing its
-# logical-plan-matched caches (the bench's warm-pass protocol — clearing
-# between passes was measured to double the cache-heavy stages and was
-# rejected, see bench.py), and Spark's CacheManager dedupes a re-persist of
-# an identical plan, so repeated invocations do not accumulate entries.
-# A long-lived session that wants the memory back calls release_caches()
-# after materializing its results.
-_TRACKED_CACHES: list = []
-
-
-def release_caches() -> None:
-    """Unpersist every cache the registered heavy queries created. Call
-    after materializing (collecting/writing) their results — releasing
-    earlier just forces a recompute. Idempotent. A handle whose session
-    has already stopped is dropped silently — the tracked list spans
-    sessions in a long-lived process, and one dead handle must not leave
-    the live ones persisted."""
-    while _TRACKED_CACHES:
-        try:
-            _TRACKED_CACHES.pop().unpersist()
-        except Exception:
-            pass  # stopped session / already-freed handle
 
 
 def _with_cells(body: str, extra_ctes: str = "") -> str:
@@ -171,8 +146,7 @@ def q_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference analogue: redundancy gates skip known-covered work before
     expensive steps (lib/scenes2strips.py:271-274). q_minhash_lsh keeps
     the raw path as the band-algebra oracle."""
-    return DD.near_dup_pipeline(P.pages(spark, sf_dir),
-                                track=_TRACKED_CACHES)
+    return DD.near_dup_pipeline(P.pages(spark, sf_dir))
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,7 +210,7 @@ def q_ann_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = [p] if p.is_file() else sorted(p.glob("*.parquet"))
     n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     emb = spark.read.parquet(str(p))
-    out = SIM.ann_dedup_topk(emb, dim=64, k=3, track=_TRACKED_CACHES)
+    out = SIM.ann_dedup_topk(emb, dim=64, k=3)
     return out.select("vec_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
                       "sim_rank", "size_a", "size_b")
 
@@ -293,7 +267,7 @@ def q_coregister(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_feather_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = with_flags(P.geocoded_pages(spark, sf_dir))
-    fb = M.feather_blend(df, track=_TRACKED_CACHES)
+    fb = M.feather_blend(df)
     # round the float blend for cross-engine hashing (sum order inside
     # groupBy partials is partitioning-dependent at the last ulp)
     return fb.select("pair", "block", F.round("w", 6).alias("w"),
@@ -331,19 +305,14 @@ def q_strip_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fit, blend) runs once over the union instead of twice over the
     # table + a plan-level union (halves the scans/shuffles AND the
     # driver-side plan work of the formerly-duplicated operator tree).
-    # All persists are tracked for caller-owned reclamation
-    # (release_caches) — see the _TRACKED_CACHES note at the top.
-    df = (with_flags(P.geocoded_pages(spark, sf_dir))
-          .select("group_id", "url", "flags", "cell_x", "cell_y",
-                  F.explode(F.array(F.lit("super"), F.lit("host")))
-                  .alias("_variant"))
-          .persist())
-    _TRACKED_CACHES.append(df)
+    df = cached(with_flags(P.geocoded_pages(spark, sf_dir))
+                .select("group_id", "url", "flags", "cell_x", "cell_y",
+                        F.explode(F.array(F.lit("super"), F.lit("host")))
+                        .alias("_variant")))
     pair_of = lambda c: F.when(F.col("_variant") == "super",  # noqa: E731
                                F.lit("all")).otherwise(M.host_pair(c))
     out = M.strip_assemble(df, pair_of=pair_of,
-                           max_rmse=STRIP_ASSEMBLY_RMSE,
-                           track=_TRACKED_CACHES)
+                           max_rmse=STRIP_ASSEMBLY_RMSE)
     return out.select(
         F.when(F.col("pair") == "all", F.lit("super"))
          .otherwise(F.lit("host")).alias("variant"),

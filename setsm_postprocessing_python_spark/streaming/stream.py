@@ -17,6 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import cache_scope, cached
 from ..sql import dialect as D
 
 
@@ -172,8 +173,8 @@ def write_stream_dedup(stream: DataFrame, workdir: str, table: str,
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         sess = df.sparkSession
-        sigs = DD.band_signatures(df, id_col).persist()
-        try:
+        with cache_scope():
+            sigs = cached(DD.band_signatures(df, id_col))
             sess.catalog.refreshTable(table)
             pairs = DD.incremental_lsh_pairs(sigs, sess.table(table),
                                              id_col)
@@ -185,8 +186,6 @@ def write_stream_dedup(stream: DataFrame, workdir: str, table: str,
                 ingest_id=f"stream-batch-{batch_id}",
                 n_buckets=n_buckets, key="band_sig")
             origin.catalog.refreshTable(table)
-        finally:
-            sigs.unpersist()
 
     return (stream.writeStream
             .foreachBatch(write_batch)

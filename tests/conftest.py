@@ -12,6 +12,12 @@ SF_TINY = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the session currently keeps persisted (caches and
+    local checkpoints alike)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture(scope="session")
 def spark():
     from setsm_postprocessing_python_spark.session import get_spark

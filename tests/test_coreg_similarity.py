@@ -166,24 +166,6 @@ def test_ivf_deterministic_under_repartition(spark):
     assert base == shuffled == coalesced
 
 
-def test_lsh_rerank_paths_identical(spark):
-    """The per-bucket cogrouped re-rank and the pair-join fallback must
-    produce IDENTICAL results (same candidates, bit-identical cosines,
-    same ranks) — the bucket path only changes WHERE the same float64
-    gather + einsum runs."""
-    from setsm_postprocessing_python_spark.operators.similarity import lsh_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bucket = {(r.vec_id, r.nbr_id, r.sim_rank, r.cosine)
-              for r in lsh_topk(emb, dim=64, k=3, n_hint=500,
-                                rerank="bucket").collect()}
-    pairjoin = {(r.vec_id, r.nbr_id, r.sim_rank, r.cosine)
-                for r in lsh_topk(emb, dim=64, k=3, n_hint=500,
-                                  rerank="pairjoin").collect()}
-    assert bucket == pairjoin
-    assert len(bucket) > 0
-
-
 def test_embedding_near_dup_lsh_vs_brute(spark):
     """embedding_near_dup(method='lsh') — the scale path for the
     embedding-cosine near-dup dedup mode — must (a) emit ONLY true pairs

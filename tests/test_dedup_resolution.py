@@ -20,6 +20,9 @@ from setsm_postprocessing_python_spark.operators.dedup import (
     exact_dedup,
     near_dup_pipeline,
 )
+from setsm_postprocessing_python_spark.session import cache_scope
+
+from .conftest import persisted_rdd_ids
 
 
 def _union_find(nodes, pairs):
@@ -83,8 +86,11 @@ def test_deduplicate_end_to_end_matches_union_find(spark):
     rep_pairs = [(r.id_a, r.id_b) for r in near_dup_pipeline(df).collect()]
     want = _union_find([i for i, _ in rows], uf_pairs + rep_pairs)
 
-    track: list = []
-    out = deduplicate(df, track=track).collect()
+    before = persisted_rdd_ids(spark)
+    with cache_scope():
+        out = deduplicate(df).collect()
+        assert persisted_rdd_ids(spark) - before  # caches live in scope
+    assert not persisted_rdd_ids(spark) - before  # ...released on exit
     got = {r.doc_id: r.canonical_id for r in out}
     assert got == want
     # exactly one keep per cluster, keep iff id == canonical
@@ -94,8 +100,6 @@ def test_deduplicate_end_to_end_matches_union_find(spark):
     # exact dups resolved: 1,2 -> 0 and 6 -> 5; near-dup group B joined A
     assert got[1] == got[2] == 0 and got[6] == 5
     assert got[3] == 0  # (base endB) pairs with (base endA) under LSH
-    assert len(track) == 1 and track[0].is_cached
-    track[0].unpersist()
 
 
 def test_deduplicate_keeps_null_text_docs_as_singletons(spark):
@@ -141,14 +145,11 @@ def test_deduplicate_min_shared_bands_is_a_refinement(spark):
     strict = _union_find([i for i, _ in rows],
                          uf_exact + [(a, b) for a, b, n in rep_pairs
                                      if n >= 4])
-    track: list = []
-    got_loose = {r.doc_id: r.canonical_id
-                 for r in deduplicate(df, track=track).collect()}
-    got_strict = {r.doc_id: r.canonical_id
-                  for r in deduplicate(df, min_shared_bands=4,
-                                       track=track).collect()}
-    for c in track:
-        c.unpersist()
+    with cache_scope():
+        got_loose = {r.doc_id: r.canonical_id
+                     for r in deduplicate(df).collect()}
+        got_strict = {r.doc_id: r.canonical_id
+                      for r in deduplicate(df, min_shared_bands=4).collect()}
     assert got_loose == loose and got_strict == strict
     assert got_loose[2] == 0  # one-token variant pairs at >= 1 band
     # refinement: strict clusters partition loose ones

@@ -37,6 +37,9 @@ from setsm_postprocessing_python_spark.plans.planview import (
     formatted_plan,
     n_exchanges,
 )
+from setsm_postprocessing_python_spark.session import cache_scope
+
+from .conftest import persisted_rdd_ids
 
 BASE = " ".join(f"w{i}" for i in range(40))
 
@@ -85,14 +88,16 @@ def test_incremental_lsh_equals_full_recompute_restriction(spark):
     assert got[(2, 7)] == 4
 
 
-def test_incremental_near_dup_tracks_its_cache(spark):
+def test_incremental_near_dup_scope_releases_its_cache(spark):
+    """The batch-signature cache belongs to the caller's cache_scope —
+    unscoped it used to outlive every caller (nothing could release it)."""
     old, new = _docs(spark, 0, 6), _docs(spark, 6, 10)
-    track: list = []
-    got = _pairs(incremental_near_dup(new, band_signatures(old),
-                                      track=track))
+    before = persisted_rdd_ids(spark)
+    with cache_scope():
+        got = _pairs(incremental_near_dup(new, band_signatures(old)))
+        assert len(persisted_rdd_ids(spark) - before) == 1
+    assert not persisted_rdd_ids(spark) - before
     assert (2, 7) in got
-    assert len(track) == 1 and track[0].is_cached
-    track[0].unpersist()
 
 
 def test_incremental_probe_after_own_ingest_counts_true_bands(spark):

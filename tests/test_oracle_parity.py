@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import pytest
 
-from .conftest import SF_TINY
+from setsm_postprocessing_python_spark.session import cache_scope
+
+from .conftest import SF_TINY, persisted_rdd_ids
 from .oracle_compare import assert_frames_match, duckdb_run
 
 
@@ -18,9 +20,15 @@ def _cases():
 
 @pytest.mark.parametrize("name,fn,sql", _cases(), ids=[c[0] for c in _cases()])
 def test_query_matches_oracle(spark, name, fn, sql):
-    spark_df = fn(spark, SF_TINY)
-    duck_df = duckdb_run(sql, SF_TINY)
-    assert_frames_match(spark_df, duck_df, name)
+    """The query matches DuckDB and, run inside a cache_scope, leaves no
+    persisted RDD behind once the scope closes (compared by id: Spark's
+    ContextCleaner may free an unrelated older RDD meanwhile, so a count
+    could hide a leak)."""
+    before = persisted_rdd_ids(spark)
+    with cache_scope():
+        assert_frames_match(fn(spark, SF_TINY), duckdb_run(sql, SF_TINY),
+                            name)
+    assert not persisted_rdd_ids(spark) - before, f"{name} left caches"
 
 
 def test_entry_smoke(spark):

@@ -9,6 +9,9 @@ from pathlib import Path
 import pytest
 
 from setsm_postprocessing_python_spark.plans.pipeline import run_pipeline
+from setsm_postprocessing_python_spark.session import cache_scope
+
+from .conftest import persisted_rdd_ids
 
 SF = "/root/testdata/sf0.001"
 
@@ -36,9 +39,11 @@ def _final_state(spark, workdir):
 def test_pipeline_clean_vs_interrupted_resume(spark, workdirs):
     clean_dir, resume_dir = workdirs
 
-    # clean run
+    # clean run; every stage releases its caches (one scope per stage)
+    before = persisted_rdd_ids(spark)
     r1 = run_pipeline(spark, SF, clean_dir)
     assert all(s["units_run"] > 0 for s in r1)
+    assert not persisted_rdd_ids(spark) - before, "pipeline left caches"
 
     # interrupted run: run everything, then damage one stage's outputs and
     # manifest rows for a subset of units (mid-write kill analogue)
@@ -52,7 +57,9 @@ def test_pipeline_clean_vs_interrupted_resume(spark, workdirs):
     Path(resume_dir, "manifest_new").rename(Path(resume_dir, "manifest"))
 
     # resume: only tile_rollup re-runs; others fingerprint-skip
+    before = persisted_rdd_ids(spark)
     r2 = run_pipeline(spark, SF, resume_dir)
+    assert not persisted_rdd_ids(spark) - before, "rerun left caches"
     by_stage = {s["stage"]: s for s in r2}
     assert by_stage["geocode"]["units_run"] == 0
     assert by_stage["tile_assign"]["units_run"] == 0
@@ -114,35 +121,32 @@ def test_strip_pass2_holds_persisted_translations(spark, workdirs):
 
 
 def test_registry_cache_release(spark):
-    """Cache hygiene for the heavy registered queries: repeated registry
-    invocations must not ACCUMULATE persisted tables (Spark's CacheManager
-    dedupes identical plans; the tracked-handle registry proves it), and
-    release_caches() must return the session to its pre-call baseline —
-    no persisted table survives once the caller has materialized and
-    released. Release is caller-owned, not automatic: the bench's
-    warm-pass protocol relies on re-invocations reusing these caches."""
+    """Cache lifetime of the heavy registered queries. Unscoped (the
+    bench's warm-pass protocol) their caches land in the default scope:
+    a repeat call reuses the same entries (Spark's CacheManager dedupes
+    identical plans) and release_caches() frees them. Inside a
+    cache_scope the same calls leave nothing behind once it closes."""
     from setsm_postprocessing_python_spark.plans import queries_ext as QX
 
-    jsc = spark.sparkContext._jsc
-
-    def n_persisted():
-        return jsc.getPersistentRDDs().size()
+    def run_both():
+        QX.q_strip_assembly(spark, SF).count()
+        QX.q_ann_dedup(spark, SF).count()
 
     QX.release_caches()  # drop anything an earlier test left behind
-    base = n_persisted()
+    base = persisted_rdd_ids(spark)
 
-    QX.q_strip_assembly(spark, SF).count()
-    QX.q_ann_dedup(spark, SF).count()
-    first = n_persisted()
-    assert first > base, "expected tracked caches while results are live"
-
-    # repeat invocations: identical plans re-persist into the SAME cache
-    # entries — the persisted count must not grow
-    QX.q_strip_assembly(spark, SF).count()
-    QX.q_ann_dedup(spark, SF).count()
-    assert n_persisted() == first, "registry re-invocation accumulated caches"
-
+    run_both()
+    first = persisted_rdd_ids(spark) - base
+    assert first, "expected default-scope caches while results are live"
+    run_both()
+    assert persisted_rdd_ids(spark) - base == first, \
+        "registry re-invocation accumulated caches"
     QX.release_caches()
-    assert n_persisted() == base, "release_caches left persisted tables"
+    assert not persisted_rdd_ids(spark) - base, \
+        "release_caches left persisted tables"
     QX.release_caches()  # idempotent
-    assert n_persisted() == base
+
+    with cache_scope():
+        run_both()
+        assert persisted_rdd_ids(spark) - base
+    assert not persisted_rdd_ids(spark) - base, "the scope left caches"

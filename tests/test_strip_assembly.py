@@ -16,6 +16,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from setsm_postprocessing_python_spark.operators import merge as M
+from setsm_postprocessing_python_spark.session import cache_scope
+
+from .conftest import persisted_rdd_ids
 
 BS = 1 << 12  # block shift stride (dialect BLOCK_SHIFT)
 
@@ -268,20 +271,18 @@ def test_strip_assemble_unknown_or_null_trans_not_dropped(spark):
     assert all(r.segment_break and r.src == "a_only" for r in out2)
 
 
-def test_strip_assemble_track_unpersists(spark):
-    """The caller-owned cache-lifetime hook: every persisted intermediate
-    lands in `track`, and unpersisting them after materialization leaves
-    no cached tables behind."""
+def test_strip_assemble_scope_unpersists(spark):
+    """Cache lifetime: the operator's intermediates (agg, trans, blend
+    join) belong to the caller's cache_scope — live while the result is
+    materialized inside it, all released when it closes."""
     df = _mk_fixture(spark)
-    handles = []
-    out = M.strip_assemble(df, pair_of=lambda c: F.lit("all"),
-                           max_rmse=100.0, track=handles)
-    assert out.count() > 0
-    assert len(handles) == 3  # agg + trans + blend join (round 7)
-    assert all(h.storageLevel.useMemory for h in handles)
-    for h in handles:
-        h.unpersist()
-    assert all(not h.storageLevel.useMemory for h in handles)
+    before = persisted_rdd_ids(spark)
+    with cache_scope():
+        out = M.strip_assemble(df, pair_of=lambda c: F.lit("all"),
+                               max_rmse=100.0)
+        assert out.count() > 0
+        assert len(persisted_rdd_ids(spark) - before) == 3
+    assert not persisted_rdd_ids(spark) - before
 
 
 def test_strip_assemble_broken_pair_incoming_side_excluded(spark):
