@@ -13,8 +13,8 @@ a table of Common-Crawl-style web pages:
 - per-group greedy merge ordering + coregistration analogue
   (cf. reference lib/scenes2strips.py),
 - bitmask flags algebra (cf. reference lib/filter_scene.py:39-48),
-- checkpoint manifest for idempotent resume (cf. .fin markers,
-  reference batch_scenes2strips.py:1518-1533).
+- one atomic commit record per layout and pipeline stage for idempotent
+  resume (cf. .fin markers, reference batch_scenes2strips.py:1518-1533).
 
 Everything here derives from public knowledge only (Apache Spark API and the
 reference repo's observable behavior).

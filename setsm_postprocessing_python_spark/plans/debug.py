@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 def ithresh_save(df: DataFrame, workdir: str, name: str) -> str:
     """Snapshot a threshold-input DataFrame for later replay. Returns the
     snapshot path. Overwrite semantics: one snapshot per (workdir, name),
-    same idempotent-unit rule as the manifest."""
+    same idempotent-unit rule as the pipeline stages."""
     path = f"{workdir}/ithresh/{name}"
     df.write.mode("overwrite").parquet(path)
     return path

@@ -366,13 +366,16 @@ def q_ring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end manifest-checkpointed pipeline (the run_s2s analogue,
-    batch_scenes2strips.py:962-1565): geocode+flags -> tile assign ->
-    merge order -> per-tile rollup, every stage written through
+    """End-to-end pipeline (the run_s2s analogue,
+    batch_scenes2strips.py:962-1565): runs all six stages of
+    plans/pipeline.run_pipeline — geocode+flags, tile assign, merge order,
+    coregister, strip assembly, per-tile rollup — each committed through
     plans/manifest.run_stage (partitioned parquet, fingerprint lineage,
-    .fin-style resume). Returns the FINAL stage read back from its
-    partitioned sink, so the driver hash-checks the whole write/read
-    path; the oracle recomputes the rollup straight off the pages CTE.
+    .fin-style commit record), although only the rollup, which reads tile
+    assign alone, is returned; running just the stages a target needs is
+    ROADMAP item 6. Returns the FINAL stage read back from its committed
+    files, so the driver hash-checks the whole write/read path; the
+    oracle recomputes the rollup straight off the pages CTE.
     A fixed per-(session, sf_dir) workdir cleared on entry keeps repeated
     driver/bench rounds hermetic WITHOUT leaking checkpoint trees into
     /tmp (resume-after-kill semantics are pinned by
@@ -384,6 +387,7 @@ def q_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from .manifest import read_stage
     from .pipeline import run_pipeline
 
     # keyed by PID (not id(spark): heap addresses coincide across
@@ -392,7 +396,7 @@ def q_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     workdir = f"{tempfile.gettempdir()}/spark_graft_pipe_{tag}"
     shutil.rmtree(workdir, ignore_errors=True)
     run_pipeline(spark, sf_dir, workdir)
-    out = spark.read.parquet(f"{workdir}/out/tile_rollup")
+    out = read_stage(spark, f"{workdir}/out", "tile_rollup")
     return out.select(F.col("unit").alias("tile_id"),
                       F.col("n_pages").cast("bigint").alias("n_pages"),
                       F.col("n_flagged").cast("bigint").alias("n_flagged"),
@@ -814,7 +818,7 @@ ORACLES["q_ring_stats"] = _with_cells(
     + f", zc AS (SELECT *, {D.z_expr(_DD)} AS z FROM cells)")
 
 # pipeline rollup oracle: the same per-tile census straight off the pages
-# CTE — if any stage of the manifest-checkpointed chain drops/dups rows or
+# CTE — if any stage of the committed stage chain drops/dups rows or
 # mangles flags, the hash diverges
 ORACLES["q_pipeline_rollup"] = _with_cells(
     f"""SELECT tile_id, CAST(count(*) AS BIGINT) AS n_pages,

@@ -37,43 +37,23 @@ local CPU, not network.
 
 from __future__ import annotations
 
-import json
-import os
 import shutil
 from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..record import data_files, read_record, remove_unlisted, write_record
 from ..sql import dialect as D
 from .pages import BUCKETED_SFDIR_CONF, BUCKETED_TABLE_CONF, geocoded_pages
 
 BLOCK_SHIFT = 6  # matches operators/knn.BLOCK_SHIFT (64x64-cell blocks)
 
-# layout-job completion marker (the `.fin` semantics applied to the layout
-# write, reference batch_scenes2strips.py:1190-1203): present = the files
-# under the table path are a COMPLETE bucketed write for the recorded
-# corpus/grain; absent = remove-incomplete and rewrite
+# layout-job completion marker (the `record.py` commit record applied to
+# the layout write, reference batch_scenes2strips.py:1190-1203): present =
+# the files under the table path are a COMPLETE bucketed write for the
+# recorded corpus/grain; absent = remove-incomplete and rewrite
 LAYOUT_MARKER = "_LAYOUT_READY"
-
-
-def _write_marker(marker: Path, rec: dict) -> None:
-    """Atomic marker commit (write-to-temp + rename). The protocol's
-    'SIGKILL leaves (complete files + marker) or (no marker)' contract
-    requires the marker itself to appear atomically — a truncate-then-
-    write leaves a torn JSON that wedges every later ensure_* call."""
-    tmp = marker.with_name(marker.name + ".tmp")
-    tmp.write_text(json.dumps(rec))
-    os.replace(tmp, marker)
-
-
-def _read_marker(marker: Path) -> dict | None:
-    """None for absent OR torn markers (a torn marker is an incomplete
-    write by definition — the remove-incomplete path handles it)."""
-    try:
-        return json.loads(marker.read_text())
-    except (OSError, json.JSONDecodeError):
-        return None
 
 
 def block_expr(block_shift: int = BLOCK_SHIFT):
@@ -156,16 +136,14 @@ def ensure_bucketed(spark: SparkSession, path: str, table: str,
       HashPartitioning(key, N) and keep the shuffle elimination (pinned
       in tests/test_plan_shapes.py).
     - Marker absent or stale (a killed/partial write, or a different
-      corpus/grain): remove-incomplete semantics — drop the table, delete
-      the dir, rewrite, then write the marker LAST. A SIGKILL at any
-      point leaves either (complete files + marker) or (no marker), never
-      a readable-but-partial table.
+      corpus/grain): drop the table, delete the dir, rewrite, then commit
+      the marker LAST (the record.py protocol).
     """
     p = Path(path)
     marker = p / LAYOUT_MARKER
     want = {**meta, "n_buckets": n_buckets, "key": key,
             "partition_by": partition_by}
-    rec = _read_marker(marker)
+    rec = read_record(marker)
     if rec is not None and {k: rec.get(k) for k in want} == want:
         _register_table(spark, table, rec, path)
         return spark.table(table), False
@@ -182,22 +160,13 @@ def ensure_bucketed(spark: SparkSession, path: str, table: str,
         shutil.rmtree(p, ignore_errors=True)
         tbl = write_bucketed(spark, build(), path, table, n_buckets, key,
                              partition_by=partition_by)
-        _write_marker(marker, {**want, "ddl": _schema_ddl(tbl),
-                               "files": _data_files(p), "ingests": []})
+        write_record(marker, {**want, "ddl": _schema_ddl(tbl),
+                              "files": data_files(p), "ingests": []})
     finally:
         if act_tbl == table:
             spark.conf.set(BUCKETED_TABLE_CONF, act_tbl)
             spark.conf.set(BUCKETED_SFDIR_CONF, act_sf)
     return tbl, True
-
-
-def _data_files(p: Path) -> list[str]:
-    """The layout's data-file set (part-* paths relative to the table
-    root — one level deep for flat layouts, under partition dirs for
-    partitioned ones; _SUCCESS / .crc shadows / the marker are protocol
-    bookkeeping, not data)."""
-    return sorted(str(f.relative_to(p)) for f in p.rglob("part-*")
-                  if "_temporary" not in f.parts)
 
 
 def _register_table(spark: SparkSession, table: str, rec: dict,
@@ -249,27 +218,19 @@ def ensure_bucketed_ingest(spark: SparkSession, path: str, table: str,
     ingest — the shuffle-elimination contract is a TABLE property, so
     block-keyed joins stay Exchange-free over any number of ingests).
 
-    Exactly-once protocol (single writer) — the `.fin`/checkfile dedup
-    semantics (reference batch_scenes2strips.py:1518-1533, 1190-1203)
-    applied to appends. The marker records the known-good data-file set
-    (`files`) and the applied ingest ids (`ingests`):
-
-      1. any data file NOT in marker.files is a torn or
-         committed-but-unrecorded append -> removed (remove-incomplete),
-         along with its .crc shadow and any _temporary staging;
-      2. ingest_id in marker.ingests -> no-op (the checkfile);
-      3. else append, then record files+ingest LAST.
-
-    A SIGKILL at any point leaves either (recorded files + recorded
-    ingest) or a state step 1 cleans and step 3 redoes — never
-    duplicated rows, never a half-visible ingest. Markers written before
-    this protocol existed adopt their current file set as known-good.
+    Exactly-once (single writer) on the record.py protocol: the marker
+    lists the known-good data files (`files`) and the applied ingest ids
+    (`ingests`). Unlisted files (a torn or committed-but-unrecorded
+    append) are removed; an applied ingest_id is a no-op (the checkfile,
+    reference batch_scenes2strips.py:1518-1533); else append, then commit
+    files + ingest LAST. Markers written before `files` existed adopt
+    their current file set as known-good.
 
     Returns (table_df, did_append).
     """
     p = Path(path)
     marker = p / LAYOUT_MARKER
-    rec = _read_marker(marker)
+    rec = read_record(marker)
     if rec is None:
         raise ValueError(
             f"no completed layout at {path}: run ensure_bucketed first "
@@ -280,15 +241,10 @@ def ensure_bucketed_ingest(spark: SparkSession, path: str, table: str,
             f"{rec.get('key')}), ingest asked for bucket({n_buckets}, "
             f"{key}) — appends must match the table's spec")
     if "files" not in rec:  # pre-protocol marker: adopt current set
-        rec["files"] = _data_files(p)
+        rec["files"] = data_files(p)
         rec.setdefault("ingests", [])
-        _write_marker(marker, rec)
-    shutil.rmtree(p / "_temporary", ignore_errors=True)
-    orphans = set(_data_files(p)) - set(rec["files"])
-    for rel in orphans:
-        f = p / rel
-        f.unlink(missing_ok=True)
-        (f.parent / f".{f.name}.crc").unlink(missing_ok=True)
+        write_record(marker, rec)
+    orphans = remove_unlisted(p, rec["files"])
     _register_table(spark, table, rec, path)
     if orphans:
         spark.catalog.refreshTable(table)
@@ -306,9 +262,9 @@ def ensure_bucketed_ingest(spark: SparkSession, path: str, table: str,
         # must be recovered before the files are visible to scans
         spark.sql(f"MSCK REPAIR TABLE {table}")
     spark.catalog.refreshTable(table)
-    rec["files"] = _data_files(p)
+    rec["files"] = data_files(p)
     rec["ingests"] = rec.get("ingests", []) + [ingest_id]
-    _write_marker(marker, rec)
+    write_record(marker, rec)
     return spark.table(table), True
 
 

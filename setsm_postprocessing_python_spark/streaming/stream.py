@@ -54,7 +54,8 @@ def write_tile_counts_exactly_once(stream_counts: DataFrame, out_dir: str,
     micro-batch is written to a batch-id-named subdirectory with overwrite,
     so replays of a failed batch (Structured Streaming re-runs the last
     uncommitted batch after restart) rewrite the same path instead of
-    duplicating — the streaming form of the manifest's idempotent-unit rule.
+    duplicating — the streaming form of the pipeline stages' idempotent-
+    unit rule (plans/manifest.run_stage).
 
     Reader contract: update mode RE-EMITS a (key) row in every batch that
     changes it, so a naive union over out_dir/batch_id=*/ double-counts

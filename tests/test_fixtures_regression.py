@@ -101,13 +101,15 @@ def test_filter_mask_all_flag_values(spark):
 
 def test_empty_group_all_masked(spark):
     """A fully-flagged group yields zero output rows but still gets a
-    manifest entry (all-data-masked path, batch_scenes2strips.py:1384-1386;
-    FIXTURES.md §4.6)."""
+    stage-record entry (all-data-masked path,
+    batch_scenes2strips.py:1384-1386; FIXTURES.md §4.6)."""
+    import json
     import shutil
     import tempfile
+    from pathlib import Path
 
     from setsm_postprocessing_python_spark.plans.manifest import (
-        read_manifest, run_stage)
+        STAGE_RECORD, run_stage)
 
     d = tempfile.mkdtemp(prefix="allmasked_")
     rows = [("g0", f"u{i}", 7) for i in range(5)] + \
@@ -118,10 +120,10 @@ def test_empty_group_all_masked(spark):
         return (sub.where(F.col("flags") == 0)
                 .groupBy("unit").agg(F.count(F.lit(1)).alias("n")))
 
-    r = run_stage(spark, "mask", df, "group_id", transform, f"{d}/out", f"{d}/man")
+    r = run_stage(spark, "mask", df, "group_id", transform, f"{d}/out")
     assert r["units_run"] == 2
-    man = read_manifest(spark, f"{d}/man")
-    rows_out = {r_.unit: r_.row_count for r_ in man.collect()}
+    rec = json.loads((Path(d) / "out" / "mask" / STAGE_RECORD).read_text())
+    rows_out = {u: e["rows"] for u, e in rec["units"].items()}
     assert rows_out == {"g0": 0, "g1": 1}  # g0 all masked -> 0 rows, entry exists
     shutil.rmtree(d, ignore_errors=True)
 

@@ -1,8 +1,9 @@
-"""Checkpoint-manifest resume semantics (the .fin marker analogue,
+"""Stage commit-record resume semantics (the .fin marker analogue,
 reference batch_scenes2strips.py:884-924, 1518-1533)."""
 
 from __future__ import annotations
 
+import json
 import shutil
 import tempfile
 from pathlib import Path
@@ -11,18 +12,17 @@ import pyspark.sql.functions as F
 import pytest
 
 from setsm_postprocessing_python_spark.plans.manifest import (
-    pending_units,
-    read_manifest,
+    STAGE_RECORD,
+    read_stage,
     run_stage,
-    unit_fingerprints,
 )
 from setsm_postprocessing_python_spark.sources.pages import pages
 
 
 @pytest.fixture()
-def tmpdirs():
+def out_dir():
     d = Path(tempfile.mkdtemp(prefix="manifest_test_"))
-    yield str(d / "out"), str(d / "manifest")
+    yield str(d / "out")
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -31,64 +31,116 @@ def _transform(df):
                                    F.min("doc_id").alias("min_doc")))
 
 
-def test_stage_runs_then_skips(spark, tmpdirs):
-    out_dir, man_dir = tmpdirs
+def _record(out_dir, stage="census"):
+    return json.loads((Path(out_dir) / stage / STAGE_RECORD).read_text())
+
+
+def _census(spark, inputs, out_dir):
+    return run_stage(spark, "census", inputs, "group_id", _transform, out_dir)
+
+
+def test_stage_runs_then_skips(spark, out_dir):
     inputs = pages(spark, "/root/testdata/sf0.001")
-    r1 = run_stage(spark, "census", inputs, "group_id", _transform, out_dir, man_dir)
+    r1 = _census(spark, inputs, out_dir)
     assert r1["units_run"] == r1["units_total"] == 50
-    first = spark.read.parquet(f"{out_dir}/census")
+    first = read_stage(spark, out_dir, "census")
     assert first.count() == 50
 
     # second run: everything fingerprint-matched -> zero work
-    r2 = run_stage(spark, "census", inputs, "group_id", _transform, out_dir, man_dir)
+    r2 = _census(spark, inputs, out_dir)
     assert r2["units_run"] == 0
 
-    man = read_manifest(spark, man_dir)
-    assert man.where("status = 'done'").count() == 50
-    assert man.agg(F.sum("row_count")).collect()[0][0] == 50
+    units = _record(out_dir)["units"]
+    assert len(units) == 50
+    assert sum(e["rows"] for e in units.values()) == 50
 
 
-def test_resume_after_partial_completion(spark, tmpdirs):
+def test_resume_after_partial_completion(spark, out_dir):
     """Kill-mid-run analogue: only half the units are recorded done;
     resume must recompute exactly the missing ones and converge to the
     same final output as a clean run."""
-    out_dir, man_dir = tmpdirs
     inputs = pages(spark, "/root/testdata/sf0.001")
 
-    # simulate a partial run: process only hosts 0-24, record their manifest
+    # simulate a partial run: process only hosts 0-24, record them
     partial = inputs.where(F.expr("cast(substring(group_id, 5) as int) < 25"))
-    run_stage(spark, "census", partial, "group_id", _transform, out_dir, man_dir)
-    assert read_manifest(spark, man_dir).count() == 25
+    assert _census(spark, partial, out_dir)["units_run"] == 25
+    assert len(_record(out_dir)["units"]) == 25
 
-    # resume with the full input: only the 25 missing units are pending
-    fps = unit_fingerprints(inputs, "group_id")
-    todo = pending_units(spark, man_dir, "census", fps)
-    assert todo.count() == 25
-
-    run_stage(spark, "census", inputs, "group_id", _transform, out_dir, man_dir)
-    final = spark.read.parquet(f"{out_dir}/census")
+    # resume with the full input: exactly the 25 missing units run
+    r = _census(spark, inputs, out_dir)
+    assert r["units_run"] == 25 and r["units_total"] == 50
+    final = read_stage(spark, out_dir, "census")
     assert final.count() == 50
     assert final.select("unit").distinct().count() == 50
 
 
-def test_changed_inputs_invalidate_unit(spark, tmpdirs):
-    """Lineage: a unit whose input fingerprint changed is recomputed."""
-    out_dir, man_dir = tmpdirs
+def test_changed_inputs_invalidate_unit(spark, out_dir):
+    """Lineage: a unit whose input fingerprint changed is recomputed, and
+    the record entries of every other unit stay byte-identical."""
     inputs = pages(spark, "/root/testdata/sf0.001")
-    run_stage(spark, "census", inputs, "group_id", _transform, out_dir, man_dir)
+    _census(spark, inputs, out_dir)
+    before = _record(out_dir)["units"]
 
     # perturb one group's inputs (drop a row from host7)
     perturbed = inputs.where(
         ~((F.col("group_id") == "host7") & (F.col("doc_id") == 7)))
-    fps = unit_fingerprints(perturbed, "group_id")
-    todo = pending_units(spark, man_dir, "census", fps)
-    assert [r.unit for r in todo.collect()] == ["host7"]
-
-    r = run_stage(spark, "census", perturbed, "group_id", _transform, out_dir, man_dir)
+    r = _census(spark, perturbed, out_dir)
     assert r["units_run"] == 1
-    final = spark.read.parquet(f"{out_dir}/census")
+    after = _record(out_dir)["units"]
+    assert after.keys() == before.keys()
+    assert [u for u in after
+            if json.dumps(after[u]) != json.dumps(before[u])] == ["host7"]
+    final = read_stage(spark, out_dir, "census")
     host7 = final.where("unit = 'host7'").collect()
     assert len(host7) == 1 and host7[0].n_pages == 9
+
+
+def test_unlisted_attempt_is_never_read_and_removed(spark, out_dir):
+    """A killed attempt (files written, record not committed) holding
+    bogus rows for a done unit is invisible to read_stage, and the next
+    run_stage removes it."""
+    inputs = pages(spark, "/root/testdata/sf0.001")
+    _census(spark, inputs, out_dir)
+    clean = sorted(map(tuple, read_stage(spark, out_dir, "census").collect()))
+    root = Path(out_dir) / "census"
+    rec_before = (root / STAGE_RECORD).read_text()
+
+    killed = root / "attempt=killed"
+    (spark.createDataFrame([(999, -1, "host7")],
+                           "n_pages bigint, min_doc bigint, unit string")
+     .write.partitionBy("unit").parquet(str(killed)))
+    assert list(killed.rglob("part-*"))
+    assert sorted(map(tuple, read_stage(spark, out_dir, "census")
+                      .collect())) == clean
+
+    assert _census(spark, inputs, out_dir)["units_run"] == 0
+    assert not killed.exists()
+    assert (root / STAGE_RECORD).read_text() == rec_before
+    assert sorted(map(tuple, read_stage(spark, out_dir, "census")
+                      .collect())) == clean
+
+
+def test_truncated_record_reruns_every_unit(spark, out_dir):
+    """A torn record is no record: run_stage re-runs every unit, removes
+    the files the torn record can no longer vouch for and converges to
+    the clean output."""
+    inputs = pages(spark, "/root/testdata/sf0.001")
+    _census(spark, inputs, out_dir)
+    clean = sorted(map(tuple, read_stage(spark, out_dir, "census").collect()))
+    rec_path = Path(out_dir) / "census" / STAGE_RECORD
+    old_files = {f for e in _record(out_dir)["units"].values()
+                 for f in e["files"]}
+    rec_path.write_text(rec_path.read_text()[:40])  # tear it
+
+    r = _census(spark, inputs, out_dir)
+    assert r["units_run"] == r["units_total"] == 50
+    new_files = {f for e in _record(out_dir)["units"].values()
+                 for f in e["files"]}
+    assert not old_files & new_files
+    assert not any((Path(out_dir) / "census" / f).exists()
+                   for f in old_files)
+    assert sorted(map(tuple, read_stage(spark, out_dir, "census")
+                      .collect())) == clean
 
 
 def test_ithresh_snapshot_replay(spark, tmp_path):
@@ -153,9 +205,10 @@ def test_pipeline_sigkill_midwrite_restart_converges(spark, tmp_path):
     stage by stage, to an uninterrupted run in a separate workdir (the
     --restart / --remove-incomplete semantics,
     reference batch_scenes2strips.py:1190-1203). Partial files from the
-    killed write must never leak into results (Spark's _temporary staging
-    + dynamic partition overwrite + the manifest anti-join together
-    guarantee it — this test is the end-to-end proof)."""
+    killed write must never leak into results (each attempt writes into a
+    fresh directory, readers read only the files the committed stage
+    record lists, and the next run removes the rest — this test is the
+    end-to-end proof)."""
     import os
     import signal
     import subprocess
@@ -196,8 +249,8 @@ def test_pipeline_sigkill_midwrite_restart_converges(spark, tmp_path):
         assert done.returncode == 0, done.stderr[-2000:]
 
     for stage in _STAGES:
-        a = _rounded(spark.read.parquet(f"{wd_chaos}/out/{stage}"))
-        b = _rounded(spark.read.parquet(f"{wd_ref}/out/{stage}"))
+        a = _rounded(read_stage(spark, f"{wd_chaos}/out", stage))
+        b = _rounded(read_stage(spark, f"{wd_ref}/out", stage))
         assert a.count() == b.count() > 0, f"{stage}: row count differs"
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), \
             f"{stage}: restarted output differs from uninterrupted run"
@@ -231,7 +284,7 @@ spark.stop()
 def test_layout_sigkill_midwrite_restart_converges(spark, tmp_path):
     """The `.fin`/--remove-incomplete semantics applied to the LAYOUT JOB
     (round-6 directive: the bucketed table is now the default execution
-    path, so its write must be as kill-safe as the manifest stages): kill
+    path, so its write must be as kill-safe as the pipeline stages): kill
     a subprocess during saveAsTable, assert the marker protocol left the
     table either absent or complete (never readable-but-partial), restart
     and require convergence with an uninterrupted run — including the

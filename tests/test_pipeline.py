@@ -2,12 +2,17 @@
 
 from __future__ import annotations
 
+import json
 import shutil
 import tempfile
 from pathlib import Path
 
 import pytest
 
+from setsm_postprocessing_python_spark.plans.manifest import (
+    STAGE_RECORD,
+    read_stage,
+)
 from setsm_postprocessing_python_spark.plans.pipeline import run_pipeline
 from setsm_postprocessing_python_spark.session import cache_scope
 
@@ -26,8 +31,8 @@ def workdirs():
 
 
 def _final_state(spark, workdir):
-    rollup = spark.read.parquet(f"{workdir}/out/tile_rollup")
-    order = spark.read.parquet(f"{workdir}/out/merge_order")
+    rollup = read_stage(spark, f"{workdir}/out", "tile_rollup")
+    order = read_stage(spark, f"{workdir}/out", "merge_order")
     return (
         sorted(map(tuple, rollup.select("unit", "n_pages", "n_flagged",
                                         "flags_merged").collect())),
@@ -45,16 +50,10 @@ def test_pipeline_clean_vs_interrupted_resume(spark, workdirs):
     assert all(s["units_run"] > 0 for s in r1)
     assert not persisted_rdd_ids(spark) - before, "pipeline left caches"
 
-    # interrupted run: run everything, then damage one stage's outputs and
-    # manifest rows for a subset of units (mid-write kill analogue)
+    # interrupted run: run everything, then damage one stage — drop its
+    # root, record and outputs together (mid-stage kill analogue)
     run_pipeline(spark, SF, resume_dir)
-    man = spark.read.parquet(f"{resume_dir}/manifest")
-    kept = man.where("NOT (stage = 'tile_rollup')")
-    # drop the whole tile_rollup stage record + its output
     shutil.rmtree(Path(resume_dir) / "out" / "tile_rollup")
-    kept.write.mode("overwrite").parquet(f"{resume_dir}/manifest_new")
-    shutil.rmtree(Path(resume_dir) / "manifest")
-    Path(resume_dir, "manifest_new").rename(Path(resume_dir, "manifest"))
 
     # resume: only tile_rollup re-runs; others fingerprint-skip
     before = persisted_rdd_ids(spark)
@@ -77,45 +76,44 @@ def test_strip_pass2_holds_persisted_translations(spark, workdirs):
     strip_assemble stage to re-run picks up edits made to the persisted
     coregister output — proof there is no hidden re-fit — and an
     untouched resume reproduces the identical strip output."""
-    import pyspark.sql.functions as F
-
     workdir, _ = workdirs
     run_pipeline(spark, SF, workdir)
-    strip1 = sorted(map(tuple, spark.read.parquet(
-        f"{workdir}/out/strip_assemble")
+    strip1 = sorted(map(tuple, read_stage(
+        spark, f"{workdir}/out", "strip_assemble")
         .select("pair", "block", "src", "segment_break").collect()))
 
     # plain resume: nothing re-runs, output identical
     r2 = run_pipeline(spark, SF, workdir)
     assert {s["stage"]: s["units_run"] for s in r2}["strip_assemble"] == 0
-    strip2 = sorted(map(tuple, spark.read.parquet(
-        f"{workdir}/out/strip_assemble")
+    strip2 = sorted(map(tuple, read_stage(
+        spark, f"{workdir}/out", "strip_assemble")
         .select("pair", "block", "src", "segment_break").collect()))
     assert strip1 == strip2
 
-    # rewrite the persisted translations to a perfect usable fit, drop the
-    # strip stage's manifest rows (stale-output analogue), re-run: the pass
-    # consumes the EDITED translations -> blended rows appear where the
-    # genuine fit had segment-broken (no re-fit happened)
-    coreg = spark.read.parquet(f"{workdir}/out/coregister")
-    forged = coreg.select(
-        "pair", "group_a", "group_b", "n_points", "iters",
-        F.lit(0.0).alias("dz"), F.lit(0.0).alias("dx"), F.lit(0.0).alias("dy"),
-        F.lit(0.0).alias("rmse"), F.lit("ok").alias("status"), "unit")
-    forged.write.mode("overwrite").parquet(f"{workdir}/out/coregister_new")
-    shutil.rmtree(Path(workdir) / "out" / "coregister")
-    Path(workdir, "out", "coregister_new").rename(
-        Path(workdir, "out", "coregister"))
-    man = spark.read.parquet(f"{workdir}/manifest")
-    kept = man.where("stage <> 'strip_assemble'")
-    kept.write.mode("overwrite").parquet(f"{workdir}/manifest_new")
-    shutil.rmtree(Path(workdir) / "manifest")
-    Path(workdir, "manifest_new").rename(Path(workdir, "manifest"))
+    # rewrite the persisted translations to a perfect usable fit in the
+    # coregister stage's listed files (its record and fingerprints stay),
+    # drop the strip stage's root (stale-output analogue), re-run: the
+    # pass consumes the EDITED translations -> blended rows appear where
+    # the genuine fit had segment-broken (no re-fit happened)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    coreg = Path(workdir) / "out" / "coregister"
+    rec = json.loads((coreg / STAGE_RECORD).read_text())
+    fit = {"dz": 0.0, "dx": 0.0, "dy": 0.0, "rmse": 0.0, "status": "ok"}
+    for rel in (f for e in rec["units"].values() for f in e["files"]):
+        t = pq.ParquetFile(coreg / rel).read()
+        t = pa.table([pa.array([fit[c]] * t.num_rows, t[c].type)
+                      if c in fit else t[c] for c in t.column_names],
+                     schema=t.schema)
+        pq.write_table(t, coreg / rel)
+        (coreg / rel).with_name(f".{Path(rel).name}.crc").unlink()
+    shutil.rmtree(Path(workdir) / "out" / "strip_assemble")
 
     r3 = run_pipeline(spark, SF, workdir)
     assert {s["stage"]: s["units_run"] for s in r3}["strip_assemble"] > 0
     assert {s["stage"]: s["units_run"] for s in r3}["coregister"] == 0
-    strip3 = spark.read.parquet(f"{workdir}/out/strip_assemble")
+    strip3 = read_stage(spark, f"{workdir}/out", "strip_assemble")
     assert strip3.where("NOT segment_break").count() > 0
     assert strip3.where("segment_break").count() == 0
 

@@ -70,19 +70,6 @@ def test_slope_partial_aggregation(spark):
     assert plan.index("HashAggregate") < plan.index("Exchange")
 
 
-def test_layout_scan_pushes_cell_range(spark, tmp_path):
-    """Cell-range predicates must reach the parquet scan as PushedFilters."""
-    from setsm_postprocessing_python_spark.sources.layout import (
-        cell_range_scan, write_pages_layout)
-    from setsm_postprocessing_python_spark.sources.pages import geocoded_pages
-
-    d = str(tmp_path / "pages")
-    write_pages_layout(geocoded_pages(spark, SF), d)
-    plan = formatted_plan(cell_range_scan(spark, d, 0, 10**9))
-    assert "PushedFilters" in plan
-    assert "GreaterThanOrEqual(cell" in plan
-
-
 def test_adaptive_assign_join_path_matches_pip_and_guards(spark):
     """The distributed adaptive assignment (join on adaptive_leaf_map,
     zero driver collect) is row-identical to the bounded Tile-list/PIP
