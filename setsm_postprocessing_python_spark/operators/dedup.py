@@ -1,7 +1,9 @@
 """Deduplication family over the documents/pages tables.
 
 Large-scale training-data pipeline operators, all Spark-first:
-- exact dedup: hash groupBy (one shuffle on md5(text), map-side combine),
+- exact dedup: collapse_exact, the engine's one exact collapse (hash
+  groupBy, one shuffle on the key, map-side combine) and its inverse
+  expand,
 - n-gram Jaccard: shingle explode -> self-join on shingle -> count algebra
   (|A ∩ B| from the join, |A ∪ B| = |A|+|B|-|A∩B|) — no pairwise text compare,
 - MinHash + LSH: shingle -> m permuted min-hashes -> b bands -> bucket join
@@ -82,12 +84,36 @@ def exploded_shingles(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # exact dedup
 # ---------------------------------------------------------------------------
 
+def collapse_exact(df: DataFrame, key: str, id_col: str = "doc_id",
+                   keep=()) -> DataFrame:
+    """The engine's one exact collapse: (key, id_col, *keep, n), one row
+    per distinct key — id_col is the group's min id as bigint (the
+    representative), each kept column its first() value (keep only
+    columns constant within a group) and n the group size. NULL keys
+    form one group, as in SQL. Lazy: no job, no persist; a caller that
+    reads the result twice caches it itself."""
+    return df.groupBy(key).agg(
+        F.min(id_col).cast("bigint").alias(id_col),
+        *[F.first(c).alias(c) for c in keep],
+        F.count(F.lit(1)).alias("n"))
+
+
+def expand(df: DataFrame, groups: DataFrame, key: str,
+           id_col: str = "doc_id") -> DataFrame:
+    """Inverse of collapse_exact: each row of `df` joined to its group
+    on `key`, with the representative id as `rep_id` and any other group
+    column alongside. An inner equi-join (a NULL key matches no group);
+    lazy, like collapse_exact."""
+    return df.join(groups.withColumnRenamed(id_col, "rep_id"), key)
+
+
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
                 text: str = "text") -> DataFrame:
     """Canonical representative per identical text."""
-    return df.groupBy(F.md5(text).alias("text_md5")).agg(
-        F.min(id_col).cast("bigint").alias("keep_id"),
-        F.count(F.lit(1)).alias("n_dups"))
+    keyed = df.select(F.md5(text).alias("text_md5"), id_col)
+    return collapse_exact(keyed, "text_md5", id_col).select(
+        "text_md5", F.col(id_col).alias("keep_id"),
+        F.col("n").alias("n_dups"))
 
 
 # ---------------------------------------------------------------------------
@@ -226,8 +252,8 @@ def near_dup_pipeline(df: DataFrame, id_col: str = "doc_id",
     band -> k^2/2 candidate pairs, all with trivially-known similarity).
 
     Plan shape (round 7): the representatives come from ONE aggregation
-    — groupBy(md5(text)) carrying (min id, the group's text, group size)
-    — instead of re-joining the full corpus against its own groupBy to
+    — collapse_exact keyed by md5(text), carrying the group's text —
+    instead of re-joining the full corpus against its own groupBy to
     recover the rep rows (that join shuffled the full text column a
     second time; guide §2.3 "aggregate before you shuffle"). Texts
     within a group are byte-identical by key construction, so first()
@@ -243,11 +269,8 @@ def near_dup_pipeline(df: DataFrame, id_col: str = "doc_id",
     # bands twice (the self-join sides) — both are per-distinct-text tiny,
     # so persist them rather than re-running the full-text aggregation /
     # the shingle+minhash pipeline per reference
-    reps = cached(df.groupBy(F.md5(text).alias("_md5"))
-                  .agg(F.min(id_col).alias(id_col),
-                       F.first(text).alias(text),
-                       F.count(F.lit(1)).alias("n_dups"))
-                  .drop("_md5"))
+    reps = cached(collapse_exact(df.withColumn("_md5", F.md5(text)),
+                                 "_md5", id_col, keep=[text]).drop("_md5"))
     bands = cached(band_signatures(reps, id_col))
     a = bands.select(F.col(id_col).alias("id_a"), "band", "band_sig")
     b = bands.select(F.col(id_col).alias("id_b"), "band", "band_sig")
@@ -255,10 +278,10 @@ def near_dup_pipeline(df: DataFrame, id_col: str = "doc_id",
              .where(F.col("id_a") < F.col("id_b"))
              .groupBy("id_a", "id_b")
              .agg(F.count(F.lit(1)).alias("n_shared_bands")))
-    sz_a = reps.select(F.col(id_col).cast("bigint").alias("id_a"),
-                       F.col("n_dups").alias("n_docs_a"))
-    sz_b = reps.select(F.col(id_col).cast("bigint").alias("id_b"),
-                       F.col("n_dups").alias("n_docs_b"))
+    sz_a = reps.select(F.col(id_col).alias("id_a"),
+                       F.col("n").alias("n_docs_a"))
+    sz_b = reps.select(F.col(id_col).alias("id_b"),
+                       F.col("n").alias("n_docs_b"))
     return pairs.join(sz_a, "id_a").join(sz_b, "id_b")
 
 
@@ -337,31 +360,19 @@ def merge_exact_groups(groups: DataFrame, batch: DataFrame,
                        id_col: str = "doc_id",
                        text: str = "text") -> DataFrame:
     """Upsert a new batch into the exact-dedup state table
-    (text_md5, keep_id, n_dups): one groupBy over the batch, one
-    full-outer equi-join on text_md5 — corpus text is never re-read (the
-    MERGE INTO shape at 10^12 rows; on Iceberg this is a single merge
+    (text_md5, keep_id, n_dups): the batch's exact_dedup groups are
+    unioned with the state and re-grouped on text_md5 — one shuffle, and
+    corpus text is never re-read (on Iceberg this is a single merge
     commit). keep_id = min id across history and batch, so the merge is
     associative and batch-order independent: folding any split of the
-    corpus equals exact_dedup over the union (pytest-pinned).
-
-    The join is NULL-SAFE on text_md5: exact_dedup's groupBy folds all
-    NULL-text docs into one NULL-keyed group, and a plain full-outer
-    equi-join would never match the two sides' NULL groups — each merge
-    would add another NULL row and the split-invariance would silently
-    break exactly for the rows real crawls always contain."""
-    g = groups.select(F.col("text_md5").alias("md5_g"),
-                      F.col("keep_id").alias("keep_id_g"),
-                      F.col("n_dups").alias("n_dups_g"))
-    b = exact_dedup(batch, id_col, text).select(
-        F.col("text_md5").alias("md5_b"),
-        F.col("keep_id").alias("keep_id_b"),
-        F.col("n_dups").alias("n_dups_b"))
-    return (g.join(b, F.col("md5_g").eqNullSafe(F.col("md5_b")),
-                   "full_outer")
-            .select(F.coalesce("md5_g", "md5_b").alias("text_md5"),
-                    F.least("keep_id_g", "keep_id_b").alias("keep_id"),
-                    (F.coalesce("n_dups_g", F.lit(0))
-                     + F.coalesce("n_dups_b", F.lit(0))).alias("n_dups")))
+    corpus equals exact_dedup over the union (pytest-pinned), the one
+    NULL-text group included — GROUP BY keeps NULL keys together, as
+    exact_dedup does."""
+    return (groups.select("text_md5", "keep_id", "n_dups")
+            .unionByName(exact_dedup(batch, id_col, text))
+            .groupBy("text_md5")
+            .agg(F.min("keep_id").alias("keep_id"),
+                 F.sum("n_dups").alias("n_dups")))
 
 
 def ensure_signature_layout(spark, path: str, table: str, build,
@@ -466,31 +477,26 @@ def deduplicate(df: DataFrame, id_col: str = "doc_id",
     Every step is a bounded equi-join or the log-rounds CC loop — no
     step is quadratic in duplication (the raw-LSH pathology measured in
     BENCH/SCALE_PROBE.md is avoided by construction)."""
-    # local group derivation rather than exact_dedup(): the verdict table
-    # needs the doc->rep MAP (not group stats), and the NULL-singleton
-    # key below is a deliberate semantic difference from exact_dedup's
-    # SQL-groupBy semantics (which q_dedup_exact pins against the oracle)
+    # the NULL-singleton key (a deliberate difference from exact_dedup's
+    # SQL GROUP BY semantics, which q_dedup_exact pins against the
+    # oracle) is passed AS the key, so the collapse needs no NULL option
     md5e = F.coalesce(
         F.md5(text),
         F.concat(F.lit("__null__:"), F.col(id_col).cast("string")))
-    with_md5 = cached(df.select(F.col(id_col).cast("bigint").alias(id_col),
-                                md5e.alias("_md5")))
-    groups = (with_md5.groupBy("_md5")
-              .agg(F.min(id_col).alias("rep_id")))
-    reps = (with_md5.join(groups, "_md5")
-            .where(F.col(id_col) == F.col("rep_id")))
-    rep_docs = df.join(reps.select(F.col(id_col).alias("_rid")),
-                       F.col(id_col).cast("bigint") == F.col("_rid")) \
-                 .drop("_rid")
-    pairs = lsh_candidate_pairs(rep_docs, id_col).where(
+    keyed = df.select(F.col(id_col).cast("bigint").alias(id_col),
+                      md5e.alias("_md5"), text)
+    # read three times: rep docs, the LSH node list and the doc->rep map
+    groups = cached(collapse_exact(keyed, "_md5", id_col, keep=[text]))
+    pairs = lsh_candidate_pairs(groups, id_col).where(
         F.col("n_shared_bands") >= min_shared_bands)
-    dec = dedup_decisions(pairs, reps.select(id_col), id_col, max_iter)
+    dec = dedup_decisions(pairs, groups, id_col, max_iter)
     # doc-level verdict: canonical(doc) = canonical(rep(exact group));
     # keep iff the doc IS that canonical (one per cluster by min-id
     # transitivity: canonical_id is itself a rep, and a rep's group
     # rep_id == its own id)
     rep_dec = dec.select(F.col(id_col).alias("rep_id"), "canonical_id")
-    return (with_md5.join(groups, "_md5")
+    return (expand(keyed.select(id_col, "_md5"),
+                   groups.select("_md5", id_col), "_md5", id_col)
             .join(rep_dec, "rep_id")
             .select(id_col, "canonical_id",
                     (F.col(id_col) == F.col("canonical_id")).alias("keep")))

@@ -10,7 +10,10 @@
   signature, candidates searched within bucket (+ multi-probe neighbor
   buckets), exact cosine re-rank. Sub-quadratic: cost ~ n * bucket_size.
   The numpy matmul runs in an Arrow-batched pandas UDF (vectorized,
-  no per-row Python).
+  no per-row Python). Identical vectors are collapsed first and the
+  result expanded to rows, so duplication costs linearly.
+- ann_dedup_topk: the same search answered at representative grain,
+  with group sizes.
 - embedding_near_dup: pairs above a cosine threshold (near-duplicate
   detection for training data) via the same machinery.
 """
@@ -21,9 +24,10 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql.types import LongType
+from pyspark.sql.types import DoubleType, LongType
 
 from ..session import cached
+from .dedup import collapse_exact, expand
 
 
 def _cos_expr(a: str, b: str) -> str:
@@ -96,43 +100,33 @@ def embedding_near_dup(df: DataFrame, threshold: float = 0.9,
 def ann_dedup_topk(df: DataFrame, dim: int, k: int = 3,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    seed: int = 42) -> DataFrame:
-    """The production ANN composition: EXACT-DUP PRE-COLLAPSE, then LSH
-    top-k over the distinct vectors only, group sizes re-attached — the
-    similarity analogue of dedup.near_dup_pipeline (reference analogue:
-    redundancy gates skip known-covered work before expensive steps,
-    lib/scenes2strips.py:271-274).
-
-    Why: on duplicate-heavy corpora (mirrors/reposts; the 8x-replicated
-    bench input) every LSH bucket holds all copies of each duplicated
-    vector, so raw candidate volume grows with dup_group_size^2 while the
-    extra pairs carry zero information (cosine 1.0 against copies).
-    Collapsing first makes candidate volume a function of DISTINCT
-    content. Output is at representative grain (vec_id = min id of each
-    identical-vector group) with size_a/size_b attached — the searchable
-    index entry plus its multiplicity, which is what a dedup-aware
-    retrieval pipeline stores.
+    """LSH top-k at REPRESENTATIVE grain: collapse_exact over the vector,
+    the shared rep-grain top-k (the same path lsh_topk runs before it
+    expands to rows), group sizes re-attached — the similarity analogue
+    of dedup.near_dup_pipeline (reference analogue: redundancy gates skip
+    known-covered work before expensive steps, lib/scenes2strips.py:
+    271-274). Output (vec_id, nbr_id, cosine, sim_rank, size_a, size_b):
+    vec_id is the min id of an identical-vector group, size_* the group
+    sizes — the searchable index entry plus its multiplicity, which is
+    what a dedup-aware retrieval pipeline stores; lsh_topk is the same
+    search answered per row.
 
     Sizing: planes_per_table is derived from the DISTINCT-group count,
-    not the raw row count — at high duplication a raw n_hint over-sizes
+    not the raw row count — at high duplication a raw count over-sizes
     the plane count by ~log2(n_raw/n_distinct) bits, shrinking buckets
-    and costing recall headroom. The collapse groupBy is persisted, so
-    the distinct count is one cheap action over work the pipeline reuses
-    anyway (reps + both size joins read the same cached table)."""
-    groups = cached(df.groupBy(vec_col)
-                    .agg(F.min(F.col(id_col).cast("bigint")).alias("vec_id"),
-                         F.count(F.lit(1)).alias("group_size")))
+    and costing recall headroom. The groups are persisted, so the
+    distinct count is one cheap action over work the search and both
+    size joins reuse."""
+    groups = cached(collapse_exact(df, vec_col, id_col)
+                    .withColumnRenamed(id_col, "vec_id"))
     n_distinct = groups.count()
-    reps = groups.select("vec_id", vec_col)
-    # dup_guard=None: reps are distinct BY CONSTRUCTION (one row per
-    # identical-vector group), so the duplication probe would be a
-    # wasted aggregate job here
-    topk = lsh_topk(reps, dim, k=k, id_col="vec_id", vec_col=vec_col,
-                    seed=seed, n_hint=n_distinct, dup_guard=None)
-    sizes = groups.select("vec_id", "group_size")
+    topk = _rep_topk(groups, dim, k, vec_col=vec_col, seed=seed,
+                     n_hint=n_distinct)
+    sizes = groups.select("vec_id", F.col("n").alias("size_a"))
     return (topk
-            .join(sizes.withColumnRenamed("group_size", "size_a"), "vec_id")
-            .join(sizes.select(F.col("vec_id").alias("nbr_id"),
-                               F.col("group_size").alias("size_b")),
+            .join(sizes, "vec_id")
+            .join(groups.select(F.col("vec_id").alias("nbr_id"),
+                                F.col("n").alias("size_b")),
                   "nbr_id")
             .select("vec_id", "nbr_id", "cosine", "sim_rank",
                     "size_a", "size_b"))
@@ -401,88 +395,85 @@ def ivf_topk(df: DataFrame, dim: int, k: int = 3, n_lists: int = 16,
                      "cosine", "sim_rank"))
 
 
-DUP_GUARD_DEFAULT = 4.0
-
-
 def lsh_topk(df: DataFrame, dim: int, k: int = 3, n_tables: int = 8,
              planes_per_table: int | None = None, id_col: str = "vec_id",
              vec_col: str = "embedding", seed: int = 42,
-             n_hint: int | None = None, probe_bits: int = 2,
-             dup_guard: float | None = DUP_GUARD_DEFAULT) -> DataFrame:
-    """Approximate top-k: candidates collide in >=1 of n_tables LSH
-    tables; exact cosine re-rank within candidates. Collision probability
-    for angle theta: 1 - (1 - (1-theta/pi)^P)^T — with T=8, P=4 a
-    60-degree neighbor is caught with p ~ 0.8.
+             n_hint: int | None = None, probe_bits: int = 2) -> DataFrame:
+    """Approximate per-row top-k: candidates collide in >=1 of n_tables
+    LSH tables; exact cosine re-rank within candidates. Collision
+    probability for angle theta: 1 - (1 - (1-theta/pi)^P)^T — with T=8,
+    P=4 a 60-degree neighbor is caught with p ~ 0.8. Ids must be unique.
 
-    dup_guard (default 4.0): the raw LSH path is QUADRATIC in duplicate-
-    group size — every bucket holds all copies of each duplicated vector,
-    so candidate pairs grow with dup_group_size^2 while carrying zero
-    information (measured: 34.6x wall at 10x data when replication rose
-    8x -> 80x; BENCH/SCALE_PROBE.md). Before bucketing, one cheap
-    aggregate (count + EXACT count_distinct over xxhash64(vec) — exact so
-    the gate is deterministic: approx_count_distinct's ~5% rsd would make
-    a near-threshold corpus crash or pass depending on the sketch) probes
-    the duplication ratio; above the bound this raises and points the
-    caller at ann_dedup_topk — the production composition whose collapse
-    makes candidate volume a function of DISTINCT content (measured flat,
-    1.1x at 10x data). Pass dup_guard=None ONLY for input that is known
-    distinct (ann_dedup_topk's representatives) or for the deliberate
-    bounded-duplication oracle/bench role. The probe's exact count also
-    serves as n_hint, so the guarded path costs no extra job when n_hint
-    was not supplied.
-
-    Re-rank: cosine is computed PER BUCKET, where the
-    candidate vectors are already co-located by the bucket shuffle — one
-    applyInPandas over bucket groups gathers the (a-probe x b-home) pair
-    matrix and runs the batched einsum in-group, emitting the NARROW
-    (vec_id, nbr_id, cosine) stream. Each vector moves once per probe
-    entry (~(1+probe_bits)*T rows of 256 B), never once per candidate
-    pair — on the 16k-vector bench stage that is ~100 MB shuffled vs
-    ~4 GB for the per-pair re-attach path (measured: re-attach joins
-    34.6 s + pair-UDF 23 s -> bucket re-rank runs the same FLOPs on
-    co-located data). Cross-table duplicate pairs are removed inside the
-    ranking window (cosine is bit-deterministic per pair — same float64
-    gather + einsum — so duplicates sort adjacently and a lag(nbr_id)
-    check drops them without a dedicated distinct exchange). No
-    broadcast, no driver collect: the shape holds
-    at any n. Hot-bucket skew is bounded by the planes_per_table sizing
-    below; in-UDF pair enumeration is chunked so a jumbo bucket degrades
-    to more chunks, not more memory.
+    Collapse first, expand to rows: identical vectors share every bucket,
+    so a raw search pays dup_group_size^2 uninformative pairs (34.6x wall
+    at 10x data, 8x -> 80x replication; BENCH/SCALE_PROBE.md).
+    - The rep-grain top-k runs over collapse_exact's representatives
+      (min id per identical-vector group), planes sized from the RAW row
+      count, so buckets — and a row's candidate set, its group's — are
+      the raw path's.
+    - Each row then ranks its group's other members at the group's
+      self-cosine (the kernel's float64 einsum, so the bits match) and
+      the members of its group's top-k neighbour groups, each truncated
+      to its k+1 smallest ids (a row's top-k from one group lies among
+      them: the expansion is linear in rows). A group ranked ahead of H
+      puts its representative ahead of every member of H, so the result
+      equals the raw row-level top-k bit for bit; without duplicates the
+      expansion is the identity.
 
     planes_per_table defaults to log2(n / 64) clamped to >=4: average
     bucket size ~64 regardless of n, so candidate count stays ~64*T per
     query vector instead of growing linearly with n. Pass n_hint (table
-    stats / parquet footer row count — e.g. pyarrow metadata.num_rows, or
-    the Iceberg snapshot summary at scale) to avoid the sizing count job;
-    the count fallback prunes to the id column only."""
-    if dup_guard is not None:
-        stats = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.xxhash64(F.col(vec_col))).alias("nd"),
-        ).first()
-        ratio = stats["n"] / max(stats["nd"], 1)
-        if ratio > dup_guard:
-            raise ValueError(
-                f"lsh_topk: input duplication ratio {ratio:.1f} exceeds "
-                f"dup_guard={dup_guard} ({stats['n']} rows, "
-                f"{stats['nd']} distinct vectors). Raw LSH candidate "
-                "volume grows with dup_group_size^2 (measured 34.6x wall "
-                "at 10x data); use ann_dedup_topk (exact-dup collapse -> "
-                "LSH over distinct vectors, measured flat), or pass "
-                "dup_guard=None to run the raw path deliberately.")
-        if n_hint is None:
-            n_hint = stats["n"]
-    j = lsh_candidate_cosines(df, dim, n_tables, planes_per_table, id_col,
-                              vec_col, seed, n_hint, probe_bits,
-                              group_topk=k)
-    # cross-group duplicate pairs are removed INSIDE the ranking window
-    # (round 7): cosine is a deterministic function of the id pair, so
-    # duplicates of a pair sort adjacently under (cosine DESC, nbr_id)
-    # and a lag(nbr_id) comparison drops them — one Exchange + Sort
-    # carries dedup AND rank, where the former standalone .distinct()
-    # paid its own full exchange of the candidate stream before the
-    # window's (guide §2.4: two operations keyed compatibly share one
-    # exchange).
+    stats / parquet footer row count) to avoid the sizing count job."""
+    if n_hint is None and planes_per_table is None:
+        n_hint = df.select(id_col).count()
+    rows = df.select(F.col(id_col).cast("bigint").alias("vec_id"), vec_col)
+    groups = collapse_exact(rows, vec_col, "vec_id")
+    reps = _rep_topk(groups, dim, k, n_tables, planes_per_table, vec_col,
+                     seed, n_hint, probe_bits)
+
+    @F.pandas_udf(DoubleType())
+    def self_cosine(v: pd.Series) -> pd.Series:
+        mat = np.stack(v.to_numpy()).astype(np.float64)
+        dots = np.einsum("ij,ij->i", mat, mat)
+        norms = np.sqrt(dots)
+        return pd.Series(dots / (norms * norms))
+
+    # (rep_id, nbr_rep, cosine): each group's top-k neighbour groups
+    # plus the group itself at its self-cosine
+    cand_groups = reps.select(
+        F.col("vec_id").alias("rep_id"), F.col("nbr_id").alias("nbr_rep"),
+        "cosine").unionByName(groups.select(
+            F.col("vec_id").alias("rep_id"), F.col("vec_id").alias("nbr_rep"),
+            self_cosine(F.col(vec_col)).alias("cosine")))
+    members = expand(rows, groups.select(vec_col, "vec_id"), vec_col,
+                     "vec_id").select("vec_id", "rep_id")
+    by_id = Window.partitionBy("rep_id").orderBy("vec_id")
+    smallest = (members.withColumn("_r", F.row_number().over(by_id))
+                .where(F.col("_r") <= k + 1)
+                .select(F.col("rep_id").alias("nbr_rep"),
+                        F.col("vec_id").alias("nbr_id")))
+    j = (members.join(cand_groups, "rep_id").join(smallest, "nbr_rep")
+         .where(F.col("vec_id") != F.col("nbr_id")))
+    return _ranked(j, k)
+
+
+def _rep_topk(groups: DataFrame, dim: int, k: int, n_tables: int = 8,
+              planes_per_table: int | None = None,
+              vec_col: str = "embedding", seed: int = 42,
+              n_hint: int | None = None, probe_bits: int = 2) -> DataFrame:
+    """The one ANN top-k, over distinct vectors (vec_id, vec_col): the
+    LSH candidate stream with its in-UDF partial top-k, ranked. Shared by
+    lsh_topk (which expands it to rows) and ann_dedup_topk."""
+    return _ranked(lsh_candidate_cosines(
+        groups, dim, n_tables, planes_per_table, "vec_id", vec_col, seed,
+        n_hint, probe_bits, group_topk=k), k)
+
+
+def _ranked(j: DataFrame, k: int) -> DataFrame:
+    """Top-k per vec_id by (cosine desc, nbr_id asc). Repeats of a pair
+    (the LSH stream's cross-group duplicates) carry identical cosines, so
+    they sort adjacently and a lag(nbr_id) check drops them inside the
+    ranking window, with no exchange of their own (guide §2.4)."""
     w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
     j = (j.withColumn("_dup", F.coalesce(
             F.lag("nbr_id").over(w) == F.col("nbr_id"), F.lit(False)))

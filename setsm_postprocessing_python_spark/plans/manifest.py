@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from functools import reduce
 from pathlib import Path
 from urllib.parse import unquote
 
@@ -89,9 +90,9 @@ def run_stage(spark: SparkSession, stage: str, inputs: DataFrame,
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     """The committed output of `stage`: exactly the files its record
     lists, with `unit` as a column; an empty frame of the recorded schema
-    when no unit has rows. Attempt directories are named as a partition
-    level (`attempt=<id>/unit=<u>/`) so files of several attempts share
-    the stage root as their one partition base path."""
+    when no unit has rows. Fires no job. Attempt directories are named as
+    a partition level (`attempt=<id>/unit=<u>/`) so files of several
+    attempts share the stage root as their one partition base path."""
     root = Path(out_dir) / stage
     rec = read_record(root / STAGE_RECORD)
     if rec is None:
@@ -100,5 +101,13 @@ def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     files = [str(root / f) for e in rec["units"].values() for f in e["files"]]
     if not files:
         return spark.createDataFrame([], schema)
-    return (spark.read.schema(schema).option("basePath", str(root))
-            .parquet(*files).drop("attempt"))
+    # Spark lists more root paths than this threshold with a job (one
+    # task per path), and so does an attempt directory with more unit
+    # directories than it; up to it, the driver stats them in place. So
+    # the files are read in chunks of at most that many and unioned.
+    per_read = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    reader = spark.read.schema(schema).option("basePath", str(root))
+    return reduce(DataFrame.unionByName, [
+        reader.parquet(*files[i:i + per_read])
+        for i in range(0, len(files), per_read)]).drop("attempt")

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import dedup as DD
 from ..operators import flags as OF
 from ..operators import knn as OK
 from ..operators import neighborhood as ON
@@ -120,11 +121,8 @@ def q_ring_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact text dedup: canonical min doc_id per md5(text)."""
-    df = P.pages(spark, sf_dir)
-    return df.groupBy(F.md5("text").alias("text_md5")).agg(
-        F.min("doc_id").cast("bigint").alias("keep_doc_id"),
-        F.count(F.lit(1)).alias("n_dups"),
-    )
+    return DD.exact_dedup(P.pages(spark, sf_dir)).withColumnRenamed(
+        "keep_id", "keep_doc_id")
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,10 @@ pure-numpy implementations in tests/.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -58,14 +62,13 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole pair semantics separately."""
     df = P.pages(spark, sf_dir)
     # identical texts get identical signatures, so compute both over the
-    # DISTINCT texts (keyed by md5) and join back — the q_near_dup
-    # pre-collapse trick applied to the signature family. Bit-identical
-    # per-doc output (the oracle recomputes per doc and still matches);
+    # DISTINCT texts (collapse_exact keyed by md5) and expand back — the
+    # q_near_dup pre-collapse trick applied to the signature family.
+    # Bit-identical per-doc output (the oracle recomputes per doc);
     # on the 40x-duplicated bench corpus this divides the tokenize +
     # aggregate work by the duplication factor.
-    keys = df.select("doc_id", F.md5("text").alias("k"))
-    uniq = (df.select(F.md5("text").alias("k"), "text")
-              .dropDuplicates(["k"]))
+    docs = df.select("doc_id", F.md5("text").alias("k"), "text")
+    uniq = DD.collapse_exact(docs, "k", keep=["text"])
     # ONE token explode + ONE groupBy computes the rolling-hash
     # fingerprint AND all 32 SimHash bit-sums (guide §2.3/§2.4: the
     # former shape tokenized + exploded + aggregated the distinct texts
@@ -90,7 +93,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ELSE cast(0 as bigint) END" for j in range(DD.SIMHASH_BITS))
     fpsh = sums.select("k", "fingerprint",
                        F.expr(sig).cast("bigint").alias("simhash"))
-    return (keys.join(fpsh, "k")
+    return (DD.expand(docs.select("doc_id", "k"), fpsh, "k")
             .select(F.col("doc_id").cast("bigint").alias("doc_id"),
                     "fingerprint", "simhash"))
 
@@ -182,34 +185,21 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = [p] if p.is_file() else sorted(p.glob("*.parquet"))
     n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     emb = spark.read.parquet(str(p))
-    # dup_guard=None: this registered query IS the raw path's oracle/bench
-    # role (seed-locked golden at driver scale; the deliberate pathology
-    # measurement partner of q_ann_dedup on the replicated bench corpus).
-    # Callers building pipelines get the guarded default in lsh_topk.
-    out = SIM.lsh_topk(emb, dim=64, k=3, n_hint=n, dup_guard=None)
+    out = SIM.lsh_topk(emb, dim=64, k=3, n_hint=n)
     return out.select("vec_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
                       "sim_rank")
 
 
 def q_ann_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production ANN composition (similarity analogue of q_near_dup):
-    exact-dup pre-collapse -> LSH top-k over DISTINCT vectors -> group
-    sizes re-attached. On duplicate-heavy input raw LSH candidate volume
-    grows with dup_group_size^2 (every bucket holds all copies); this
-    path is a function of distinct content. Deterministic given seeds ->
+    """Dedup-aware ANN at representative grain (similarity analogue of
+    q_near_dup): collapse_exact over the vector -> the rep-grain LSH
+    top-k that q_ann_lsh also runs -> group sizes re-attached; q_ann_lsh
+    answers the same search per row. Deterministic given seeds ->
     golden-checked like q_ann_lsh. At driver scale the embeddings table
     has no duplicate vectors, so the collapse is an identity pass
     (size=1 rows) and output equals q_ann_lsh plus size columns; the
-    8x-replicated bench input exercises the real collapse (64x candidate
-    reduction measured there)."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    p = Path(f"{sf_dir}/embeddings.parquet")
-    files = [p] if p.is_file() else sorted(p.glob("*.parquet"))
-    n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    emb = spark.read.parquet(str(p))
+    8x-replicated bench input exercises the real collapse."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = SIM.ann_dedup_topk(emb, dim=64, k=3)
     return out.select("vec_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
                       "sim_rank", "size_a", "size_b")
@@ -365,6 +355,11 @@ def q_ring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round("ring_entropy", 6).alias("ring_entropy")))
 
 
+@functools.cache
+def _remove_at_exit(path: str) -> None:
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+
+
 def q_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end pipeline (the run_s2s analogue,
     batch_scenes2strips.py:962-1565): runs all six stages of
@@ -376,15 +371,12 @@ def q_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROADMAP item 6. Returns the FINAL stage read back from its committed
     files, so the driver hash-checks the whole write/read path; the
     oracle recomputes the rollup straight off the pages CTE.
-    A fixed per-(session, sf_dir) workdir cleared on entry keeps repeated
-    driver/bench rounds hermetic WITHOUT leaking checkpoint trees into
-    /tmp (resume-after-kill semantics are pinned by
-    tests/test_manifest_resume and test_pipeline); the clear happens on
-    the NEXT invocation, after the driver has consumed this one's
-    result."""
+    A fixed per-(process, sf_dir) workdir, cleared on entry, keeps
+    repeated driver/bench rounds hermetic (resume-after-kill semantics
+    are pinned by tests/test_manifest_resume and test_pipeline); the
+    returned frame reads it, so it is removed only at process exit."""
     import hashlib
     import os
-    import shutil
     import tempfile
 
     from .manifest import read_stage
@@ -395,6 +387,7 @@ def q_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(f"{os.getpid()}:{sf_dir}".encode()).hexdigest()[:12]
     workdir = f"{tempfile.gettempdir()}/spark_graft_pipe_{tag}"
     shutil.rmtree(workdir, ignore_errors=True)
+    _remove_at_exit(workdir)
     run_pipeline(spark, sf_dir, workdir)
     out = read_stage(spark, f"{workdir}/out", "tile_rollup")
     return out.select(F.col("unit").alias("tile_id"),

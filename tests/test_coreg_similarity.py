@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from setsm_postprocessing_python_spark.operators.merge import _coregister
 
@@ -132,24 +131,6 @@ def test_ivf_recall_clustered(spark):
     assert recall >= 0.8, f"IVF clustered recall too low: {recall:.2f}"
 
 
-def test_multimodal_plumbing(spark):
-    from setsm_postprocessing_python_spark.operators.multimodal import (
-        attach_media, decode_features, resize_features)
-    from setsm_postprocessing_python_spark.sources.pages import pages
-
-    df = pages(spark, "/root/testdata/sf0.001", with_html=True)
-    media = attach_media(df)
-    feats = decode_features(media, strict=False)
-    rows = feats.limit(5).collect()
-    assert all(len(r.feature) == 16 for r in rows)
-    assert all(abs(sum(r.feature) - 1.0) < 1e-3 for r in rows)
-    pooled = resize_features(feats, out_dim=8).limit(2).collect()
-    assert all(len(r.feature_pooled) == 8 for r in pooled)
-    # strict mode is the marked real-codec integration point
-    with pytest.raises(Exception):
-        decode_features(media, strict=True).limit(1).collect()
-
-
 def test_ivf_deterministic_under_repartition(spark):
     """ADVICE r2: bare limit() made IVF centroids partition-layout-
     dependent. The seeded hash-filtered, id-ordered sample must give
@@ -189,38 +170,46 @@ def test_embedding_near_dup_lsh_vs_brute(spark):
     assert recall >= 0.8, f"near-dup LSH recall too low: {recall:.2f}"
 
 
-def test_lsh_dup_guard(spark):
-    """The raw LSH path must refuse duplicate-heavy input by default (the
-    measured dup^2 candidate pathology, BENCH/SCALE_PROBE.md): 8x
-    replication raises with a message routing to ann_dedup_topk; the
-    bounded corpus runs unchanged; dup_guard=None keeps the deliberate
-    raw-path role available; ann_dedup_topk itself stays runnable on the
-    same duplicated input (its collapse is the fix the guard points at)."""
+def test_lsh_topk_row_grain_equivalence(spark):
+    """lsh_topk collapses identical vectors, searches the representatives
+    and expands to rows. On a corpus replicated r times (copy ids shifted
+    by n) each row must rank its own copies first (smallest ids first),
+    and every other row must be the expansion of the rep-grain result —
+    the same search over the distinct vectors with the same planes — at
+    the same cosine after the query's 6-digit round."""
     import pyspark.sql.functions as F
 
     from setsm_postprocessing_python_spark.operators.similarity import (
-        ann_dedup_topk, lsh_topk)
+        lsh_topk)
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     n = emb.count()
-    reps = spark.range(8).select(F.col("id").alias("rep"))
-    dup = (emb.crossJoin(reps)
-              .select((F.col("vec_id") + F.col("rep") * n).alias("vec_id"),
-                      "embedding"))
-    with pytest.raises(ValueError, match="ann_dedup_topk"):
-        lsh_topk(dup, dim=64, k=3)
-    # bounded corpus: guarded default runs and equals the unguarded path
-    guarded = {(r.vec_id, r.nbr_id, r.sim_rank)
-               for r in lsh_topk(emb, dim=64, k=3).collect()}
-    unguarded = {(r.vec_id, r.nbr_id, r.sim_rank)
-                 for r in lsh_topk(emb, dim=64, k=3, n_hint=n,
-                                   dup_guard=None).collect()}
-    assert guarded == unguarded and guarded
-    # explicit opt-out still runs the raw path on the duplicated corpus
-    assert lsh_topk(dup, dim=64, k=3, n_hint=8 * n,
-                    dup_guard=None).limit(1).count() == 1
-    # and the rerouting target works on the same input
-    assert ann_dedup_topk(dup, dim=64, k=3).limit(1).count() == 1
+    k = 3
+
+    def rounded(df):
+        return {(r.vec_id, r.sim_rank): (r.nbr_id, r.cosine) for r in
+                df.select("vec_id", "nbr_id", "sim_rank",
+                          F.round("cosine", 6).alias("cosine")).collect()}
+
+    for r in (3, 8):
+        copies = spark.range(r).select(F.col("id").alias("copy"))
+        dup = emb.crossJoin(copies).select(
+            (F.col("vec_id") + F.col("copy") * n).alias("vec_id"),
+            "embedding")
+        got = rounded(lsh_topk(dup, dim=64, k=k, n_hint=r * n))
+        rep = rounded(lsh_topk(emb, dim=64, k=k, n_hint=r * n))
+        assert rep
+        for i in range(n):
+            # the rep-grain neighbours expanded to rows: each group's
+            # members in id order (vec_id + copy * n)
+            nbrs = [(j + c * n, cos)
+                    for j, cos in (rep[(i, q)] for q in range(1, k + 1)
+                                   if (i, q) in rep)
+                    for c in range(r)]
+            for c in range(r):
+                own = [(i + o * n, 1.0) for o in range(r) if o != c]
+                want = (own + nbrs)[:k]
+                assert [got[(i + c * n, q)] for q in range(1, k + 1)] == want
 
 
 def test_ann_dedup_collapse_semantics(spark):

@@ -148,3 +148,34 @@ def test_registry_cache_release(spark):
         run_both()
         assert persisted_rdd_ids(spark) - base
     assert not persisted_rdd_ids(spark) - base, "the scope left caches"
+
+
+def test_pipeline_rollup_removes_workdir_at_exit(tmp_path):
+    """q_pipeline_rollup's workdir outlives the call (the returned frame
+    reads it) but not the process: after a process that ran it exits, no
+    spark_graft_pipe_* tree is left in its temp dir."""
+    import os
+    import subprocess
+    import sys
+
+    from .conftest import REPO
+
+    script = f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+from setsm_postprocessing_python_spark.plans.queries_ext import (
+    q_pipeline_rollup)
+from setsm_postprocessing_python_spark.session import get_spark
+
+spark = get_spark(parallelism=2, app_name="rollup-exit", shuffle_partitions=4)
+assert q_pipeline_rollup(spark, {SF!r}).count() > 0
+"""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = {**os.environ, "TMPDIR": str(tmp),
+           "PYTHONPATH": os.pathsep.join(
+               [str(REPO), os.environ.get("PYTHONPATH", "")])}
+    done = subprocess.run([sys.executable, "-c", script], env=env,
+                          capture_output=True, text=True, timeout=580)
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert not list(tmp.glob("spark_graft_pipe_*"))
