@@ -1,22 +1,18 @@
-"""kNN via k-ring expansion + cell-local join.
+"""kNN via a halo-block join.
 
 Reference analogue: "most-overlapping neighbor" selection
 (lib/scenes2strips.py:979-989). Engine semantics per the north rule:
-k-ring expansion of the query page's cell, equi-join on cell id, rank by
-distance, row_number() <= k.
+the k-ring of the query page's cell, rank by distance, row_number() <= k.
 
 Scale design:
-- the join key is the canonical cell id, so this is a plain shuffle
-  equi-join (sort-merge or shuffled-hash, AQE decides); both sides are
-  partitioned by cell — co-partitioning the pages table by bucket(cell)
-  at write time makes this shuffle-free on a real cluster;
-- ring expansion multiplies the probe side by (2r+1)^2 BEFORE the shuffle —
-  that is deliberate: the alternative (expanding the build side) would
-  duplicate the data 9x in state instead of in flight;
-- the top-k is a window over url_a, which reuses the join's output
-  partitioning when the join is keyed on (cell); skewed hot cells are
-  handled by AQE skew-join splitting (and operators/skew.py salting for
-  aggregations).
+- the join key is a block of cells, so this is a plain shuffle equi-join
+  (sort-merge or shuffled-hash, AQE decides); the bucketed pages layout
+  (sources/bucketed.py) stores the block column and makes the probe side
+  shuffle-free;
+- only pages near a block edge are duplicated into the neighbouring
+  blocks, instead of exploding every page to its (2r+1)^2 ring cells;
+- the top-k is a window over url_a; skewed hot blocks are handled by AQE
+  skew-join splitting (and operators/skew.py salting for aggregations).
 """
 
 from __future__ import annotations
@@ -31,36 +27,22 @@ def ring_offsets(ring: int = 1) -> list[tuple[int, int]]:
     return [(dx, dy) for dy in range(-ring, ring + 1) for dx in range(-ring, ring + 1)]
 
 
-def kring_expand(df: DataFrame, ring: int = 1,
-                 cell_x: str = "cell_x", cell_y: str = "cell_y") -> DataFrame:
-    """Explode each row into its (2r+1)^2 neighbor cells; adds `nbr_cell`."""
-    offsets = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in ring_offsets(ring)
-    ])
-    return (
-        df.withColumn("_o", F.explode(offsets))
-        .withColumn(
-            "nbr_cell",
-            (F.col(cell_y) + F.col("_o.dy")) * F.lit(D.LON_CELL_STRIDE)
-            + (F.col(cell_x) + F.col("_o.dx")),
-        )
-        .drop("_o")
-    )
-
-
 BLOCK_SHIFT = 6  # 64x64-cell join blocks for the halo strategy
 
 
 def knn_join_blocked(df: DataFrame, k: int = 3, ring: int = 1,
                      block_shift: int = BLOCK_SHIFT,
                      use_stored_block: bool = False) -> DataFrame:
-    """Scale path: identical semantics to knn_join, but the join key is a
-    64x64-cell block and only pages within `ring` cells of a block edge are
-    duplicated into the adjacent block (halo duplication — the engine
-    analogue of the reference's interpolation pad, lib/scenes2strips.py:
-    316-326). Data expansion is ~(1 + 4*ring/2^bs) instead of the naive
-    (2r+1)^2 = 9x k-ring explode; the shuffle moves ~8.5x fewer bytes.
+    """For each page, the k nearest other pages whose cell is within the
+    k-ring. Output: url_a, url_b, cell (of a), dist2 (squared degrees),
+    rank; deterministic tie-break on url_b.
+
+    The join key is a 64x64-cell block and only pages within `ring` cells
+    of a block edge are duplicated into the adjacent block (halo
+    duplication — the engine analogue of the reference's interpolation
+    pad, lib/scenes2strips.py:316-326). Data expansion is
+    ~(1 + 4*ring/2^bs) instead of the naive (2r+1)^2 = 9x k-ring explode;
+    the shuffle moves ~8.5x fewer bytes.
     Ring membership is re-checked exactly after the block join.
 
     block_shift MUST match the cell resolution: blocks are the join
@@ -130,32 +112,3 @@ def knn_join_blocked(df: DataFrame, k: int = 3, ring: int = 1,
                      (F.col("ya") * F.lit(D.LON_CELL_STRIDE) + F.col("xa")).alias("cell"),
                      "dist2", "rank"))
 
-
-def knn_join(df: DataFrame, k: int = 3, ring: int = 1) -> DataFrame:
-    """For each page, the k nearest other pages whose cell is within the
-    k-ring. Output: url_a, url_b, cell (of a), dist2 (squared degrees),
-    rank. Deterministic tie-break on url_b."""
-    a = df.select(
-        F.col("url").alias("url_a"),
-        F.col("lat").alias("lat_a"), F.col("lon").alias("lon_a"),
-        F.col("cell").alias("cell_a"),
-        F.col("cell_x"), F.col("cell_y"),
-    )
-    a = kring_expand(a)
-    b = df.select(
-        F.col("url").alias("url_b"),
-        F.col("lat").alias("lat_b"), F.col("lon").alias("lon_b"),
-        F.col("cell").alias("cell_b"),
-    )
-    j = a.join(b, a.nbr_cell == b.cell_b, "inner").where(F.col("url_a") != F.col("url_b"))
-    j = j.withColumn(
-        "dist2",
-        (F.col("lat_a") - F.col("lat_b")) * (F.col("lat_a") - F.col("lat_b"))
-        + (F.col("lon_a") - F.col("lon_b")) * (F.col("lon_a") - F.col("lon_b")),
-    )
-    w = Window.partitionBy("url_a").orderBy(F.col("dist2").asc(), F.col("url_b").asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("url_a", "url_b", F.col("cell_a").alias("cell"), "dist2", "rank")
-    )

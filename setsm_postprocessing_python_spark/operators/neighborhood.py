@@ -50,21 +50,18 @@ def _scatter_to_ring(cell_stats: DataFrame, ring: int) -> DataFrame:
     )
 
 
-def ring_density(df: DataFrame, ring: int = 1,
-                 occupied_only: bool = True) -> DataFrame:
+def ring_density(df: DataFrame, ring: int = 1) -> DataFrame:
     """Pages within the k-ring of each cell (getDataDensityMap analogue,
     lib/filter_scene.py:971-1007). Output: (cell, n_in_ring).
 
-    Strategy note: for ring 1 on SPARSE cell sets (~1 page/cell, the web
-    recast's normal regime) the single 2-D scatter (one shuffle) beats the
-    separable two-pass form (two shuffles with barely-combining
-    intermediates — measured 8.4s vs 13.5s on 4M rows). ring_density_separable
-    below is the dense-raster/large-ring variant: 2*(2r+1) vs (2r+1)^2
-    scatter rows pays off once cells hold many rows or ring >= 3.
-
-    occupied_only: restrict output to cells that contain >=1 page (the
+    Output is restricted to cells that contain >=1 page (the
     data-footprint cells), matching the raster data-density map evaluated
     at data pixels.
+
+    Strategy note: for ring 1 on SPARSE cell sets (~1 page/cell, the web
+    recast's normal regime) the single 2-D scatter (one shuffle) beat a
+    separable row-pass + column-pass form (two shuffles with
+    barely-combining intermediates — measured 8.4s vs 13.5s on 4M rows).
 
     Round 7: the former pre-aggregate (groupBy(cell) -> Exchange ->
     scatter -> groupBy(target)) paid a FULL extra shuffle to combine
@@ -90,38 +87,7 @@ def ring_density(df: DataFrame, ring: int = 1,
                      F.col("_o.s").alias("_self")))
     dens = scattered.groupBy("target_cell").agg(
         F.count(F.lit(1)).alias("n_in_ring"), F.max("_self").alias("_occ"))
-    if occupied_only:
-        dens = dens.where("_occ")
-    return dens.select(F.col("target_cell").alias("cell"), "n_in_ring")
-
-
-def ring_density_separable(df: DataFrame, ring: int = 1,
-                           occupied_only: bool = True) -> DataFrame:
-    """Separable box-kernel variant: row-pass then column-pass (exact same
-    integer result). Preferred for dense cells or ring >= 3 where
-    2*(2r+1) << (2r+1)^2 shuffle rows."""
-    per_cell = df.groupBy("cell", "cell_x", "cell_y").agg(
-        F.count(F.lit(1)).alias("n"))
-    dxs = F.array(*[F.lit(d) for d in range(-ring, ring + 1)])
-    # occupied flag rides both passes: target occupied iff some source cell
-    # contributed at dx=0 in the row pass AND that row lands at dy=0
-    row_pass = (per_cell
-                .withColumn("_dx", F.explode(dxs))
-                .groupBy((F.col("cell_x") + F.col("_dx")).alias("cell_x"),
-                         F.col("cell_y"))
-                .agg(F.sum("n").alias("n"),
-                     F.max(F.col("_dx") == 0).alias("_s")))
-    col_pass = (row_pass
-                .withColumn("_dy", F.explode(dxs))
-                .groupBy("cell_x", (F.col("cell_y") + F.col("_dy")).alias("cell_y"))
-                .agg(F.sum("n").alias("n_in_ring"),
-                     F.max(F.col("_s") & (F.col("_dy") == 0)).alias("_occ")))
-    dens = col_pass.withColumn(
-        "target_cell",
-        F.col("cell_y") * F.lit(D.LON_CELL_STRIDE) + F.col("cell_x"))
-    if occupied_only:
-        dens = dens.where("_occ")
-    return dens.select(F.col("target_cell").alias("cell"), "n_in_ring")
+    return dens.where("_occ").select(F.col("target_cell").alias("cell"), "n_in_ring")
 
 
 def ring_stat(df: DataFrame, value: str, ring: int = 1) -> DataFrame:

@@ -16,9 +16,10 @@ Scale design:
   UDF path exists for arbitrary polygon tiles and is what a general
   tile-boundary table requires;
 - adaptive splitting (split tile while count > max_pages, the analogue of
-  the reference's coarse-then-refine tiling) runs as an iterative
-  aggregate-on-counts loop — driver holds only the tile tree (small),
-  data-side work is one groupBy per iteration.
+  the reference's coarse-then-refine tiling, lib/filter_scene.py:489-492)
+  runs fully distributed: per-level prefix rollups of the deep-quadkey
+  counts pick each page's leaf, and pages join that leaf map; the driver
+  never holds the tile tree.
 """
 
 from __future__ import annotations
@@ -69,15 +70,6 @@ def fixed_depth_tiles(depth: int = D.TILE_DEPTH) -> list[Tile]:
     for _ in range(depth):
         level = [c for t in level for c in _children(t)]
     return level
-
-
-def tiles_df(spark, tiles: list[Tile]) -> DataFrame:
-    return spark.createDataFrame(
-        [(t.tile_id, t.depth, t.xmin, t.xmax, t.ymin, t.ymax, t.parent_tile_id)
-         for t in tiles],
-        "tile_id string, depth int, xmin double, xmax double, "
-        "ymin double, ymax double, parent_tile_id string",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -216,14 +208,6 @@ def assign_polygons_pip(df: DataFrame, polys: dict[str, np.ndarray],
 # adaptive quad-tree (split while count > max_pages)
 # ---------------------------------------------------------------------------
 
-def tile_from_key(tile_id: str) -> Tile:
-    """Rebuild a Tile's rectangle by walking the quadkey digits from ROOT."""
-    t = ROOT
-    for d in tile_id[1:]:
-        t = _children(t)[int(d)]
-    return t
-
-
 def adaptive_leaf_map(df: DataFrame, max_pages: int, max_depth: int = 12,
                       lat: str = "lat", lon: str = "lon") -> DataFrame:
     """Distributed adaptive quad-tree: (qk_deep, tile_id) leaf mapping.
@@ -278,15 +262,13 @@ def adaptive_leaf_map(df: DataFrame, max_pages: int, max_depth: int = 12,
 
 def assign_tiles_adaptive(df: DataFrame, max_pages: int, max_depth: int = 12,
                           lat: str = "lat", lon: str = "lon") -> DataFrame:
-    """Adaptive-tile assignment, fully distributed — the SCALE path.
+    """Adaptive-tile assignment, fully distributed.
 
     Joins the pages (keyed by their max-depth quadkey, pure JVM
     arithmetic) against the adaptive_leaf_map output on that deep key.
     Zero driver-side collection at any input size: the leaf map lives
     distributed, the join co-partitions on the deep key (AQE may
-    broadcast it when small). Use this at scale; the Tile-list/PIP path
-    below is for bounded tile tables (it materializes the tree on the
-    driver and is guarded by a leaf budget)."""
+    broadcast it when small)."""
     leaf = (adaptive_leaf_map(df, max_pages, max_depth, lat, lon)
             .withColumnRenamed("qk", "_qk"))
     # join key is the packed int64 quadkey — 8 fixed bytes per row in the
@@ -294,48 +276,3 @@ def assign_tiles_adaptive(df: DataFrame, max_pages: int, max_depth: int = 12,
     with_qk = df.withColumn(
         "_qk", F.expr(D.quadkey_int_expr(lat, lon, max_depth)))
     return with_qk.join(leaf, "_qk").drop("_qk")
-
-
-# Tile-list budget for the driver-side PIP path: past this, building the
-# Tile list would bottleneck the driver (at 10^12 pages / max_pages leaves
-# the list is ~10^10 entries) — the join path above is the scale answer.
-ADAPTIVE_LEAF_BUDGET = 1 << 16
-
-
-def adaptive_tiles(df: DataFrame, max_pages: int, max_depth: int = 12,
-                   lat: str = "lat", lon: str = "lon",
-                   leaf_budget: int = ADAPTIVE_LEAF_BUDGET) -> list[Tile]:
-    """Adaptive tiling, Tile-list form for the PIP path: the analogue of
-    the reference's coarse-then-refine strategy (lib/filter_scene.py:
-    489-492) applied to tile splitting. The leaf computation is fully
-    distributed (adaptive_leaf_map); only the distinct NON-EMPTY leaf ids
-    (bounded by ~page_count/max_pages) reach the driver — plus their empty
-    sibling leaves, reconstructed driver-side so the tile set still tiles
-    the plane like the split tree does.
-
-    RAISES past leaf_budget: a leaf set that size has outgrown any
-    driver-side tile list — route assignment through
-    assign_tiles_adaptive (the distributed join) instead."""
-    leaf_ids = (adaptive_leaf_map(df, max_pages, max_depth, lat, lon)
-                .select("tile_id").distinct())
-    # one action, not count()+collect(): limit(budget+1) both detects the
-    # over-budget case and avoids recomputing the full leaf aggregation
-    # twice (and never ships more than budget+1 ids to the driver)
-    got = leaf_ids.limit(leaf_budget + 1).collect()
-    if len(got) > leaf_budget:
-        raise ValueError(
-            f">{leaf_budget} adaptive leaves (budget {leaf_budget}): the "
-            "driver-side Tile list would bottleneck; assign via "
-            "assign_tiles_adaptive (distributed join) instead, or raise "
-            "leaf_budget for a genuinely bounded tile table.")
-    occupied = sorted(r[0] for r in got)
-    split_ids = {t[:lvl] for t in occupied for lvl in range(1, len(t))}
-    out: list[Tile] = []
-    frontier = [ROOT]
-    while frontier:
-        t = frontier.pop()
-        if t.tile_id in split_ids:
-            frontier.extend(_children(t))
-        else:
-            out.append(t)
-    return sorted(out, key=lambda t: t.tile_id)

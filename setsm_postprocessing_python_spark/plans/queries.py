@@ -129,24 +129,19 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle SQL (DuckDB dialect)
 # ---------------------------------------------------------------------------
 
-def _with_cells(body: str, extra_ctes: str = "") -> str:
-    extra = f", {extra_ctes}" if extra_ctes else ""
-    return f"WITH {D.geo_ctes(_DD)}{extra} {body}"
-
-
 ORACLES: dict[str, str] = {
-    "q_geocode": _with_cells(
+    "q_geocode": D.with_cells(
         "SELECT url, CAST(doc_id AS BIGINT) AS doc_id, lat, lon, "
         "cell_x, cell_y, cell FROM cells"),
-    "q_tile_assign": _with_cells(
+    "q_tile_assign": D.with_cells(
         f"""SELECT url, {D.quadkey_expr(_DD)} AS tile_id,
             {D.quadkey_expr(_DD)} AS tile_qk, TRUE AS tiles_match FROM cells"""),
-    "q_tile_counts": _with_cells(
+    "q_tile_counts": D.with_cells(
         f"""SELECT tile_id, CAST(count(*) AS BIGINT) AS n_pages,
             CAST(count(DISTINCT group_id) AS BIGINT) AS n_hosts
             FROM (SELECT {D.quadkey_expr(_DD)} AS tile_id, group_id FROM cells)
             GROUP BY tile_id"""),
-    "q_knn": _with_cells(
+    "q_knn": D.with_cells(
         f"""SELECT url_a, url_b, knn_rank FROM (
              SELECT a.url AS url_a, b.url AS url_b,
                     row_number() OVER (
@@ -163,9 +158,9 @@ ORACLES: dict[str, str] = {
         extra_ctes=D.ring_offsets_values(1)
         + f""", kc AS (SELECT url, lat, lon, {D.knn_cell_x_expr()} AS kcx,
                        {D.knn_cell_y_expr()} AS kcy FROM cells)"""),
-    "q_flags": _with_cells(
+    "q_flags": D.with_cells(
         f"SELECT url, {D.flags_expr(_DD)} AS flags FROM cells"),
-    "q_mask_filter": _with_cells(
+    "q_mask_filter": D.with_cells(
         """SELECT g.group_id, g.n_flagged, g.flags_merged, g.n_pages,
                   pol.policy, pol.has_src_nodata,
                   CASE WHEN pol.policy IN ('switch', 'convert') THEN -9999.0
@@ -217,7 +212,7 @@ ORACLES: dict[str, str] = {
                  ('add', FALSE), ('switch', TRUE), ('switch', FALSE),
                  ('convert', TRUE), ('convert', FALSE),
                  ('unset', TRUE), ('unset', FALSE))"""),
-    "q_ring_density": _with_cells(
+    "q_ring_density": D.with_cells(
         """SELECT d.target_cell AS cell, CAST(d.n_in_ring AS BIGINT) AS n_in_ring
            FROM (
              SELECT (p.cell_y + o.dy) * 131072 + (p.cell_x + o.dx) AS target_cell,
@@ -229,7 +224,7 @@ ORACLES: dict[str, str] = {
            ) d
            JOIN (SELECT DISTINCT cell FROM cells) c ON d.target_cell = c.cell""",
         extra_ctes=D.ring_offsets_values(1)),
-    "q_dedup_exact": _with_cells(
+    "q_dedup_exact": D.with_cells(
         """SELECT md5(text) AS text_md5, CAST(min(doc_id) AS BIGINT) AS keep_doc_id,
            CAST(count(*) AS BIGINT) AS n_dups FROM cells GROUP BY md5(text)"""),
 }

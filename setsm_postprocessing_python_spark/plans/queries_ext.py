@@ -29,11 +29,6 @@ _DD = D.DUCKDB
 M31 = DD.MERSENNE31
 
 
-def _with_cells(body: str, extra_ctes: str = "") -> str:
-    extra = f", {extra_ctes}" if extra_ctes else ""
-    return f"WITH {D.geo_ctes(_DD)}{extra} {body}"
-
-
 # ---------------------------------------------------------------------------
 # text analysis
 # ---------------------------------------------------------------------------
@@ -164,7 +159,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k (brute-force oracle anchor — bounded-n baseline
     only; lsh_topk/ivf_topk are the scale path) with the near-duplicate
     threshold flag folded in (embedding near-dup at cosine >= 0.5)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = P.read_parquet(spark, f"{sf_dir}/embeddings.parquet")[0]
     out = SIM.brute_force_topk(emb, k=3)
     return out.withColumn("is_near_dup", F.col("cosine") >= 0.5)
 
@@ -177,14 +172,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_coreg_similarity.py. Bucket sizing comes from the parquet
     footer row count — no pre-job (at Iceberg scale: snapshot summary
     stats). Cosine rounded for cross-round hash stability (BLAS ulp)."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    p = Path(f"{sf_dir}/embeddings.parquet")
-    files = [p] if p.is_file() else sorted(p.glob("*.parquet"))
-    n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    emb = spark.read.parquet(str(p))
+    emb, n = P.read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     out = SIM.lsh_topk(emb, dim=64, k=3, n_hint=n)
     return out.select("vec_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
                       "sim_rank")
@@ -199,7 +187,7 @@ def q_ann_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no duplicate vectors, so the collapse is an identity pass
     (size=1 rows) and output equals q_ann_lsh plus size columns; the
     8x-replicated bench input exercises the real collapse."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = P.read_parquet(spark, f"{sf_dir}/embeddings.parquet")[0]
     out = SIM.ann_dedup_topk(emb, dim=64, k=3)
     return out.select("vec_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
                       "sim_rank", "size_a", "size_b")
@@ -209,7 +197,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: coarse-quantizer lists + nprobe search. Deterministic
     (seeded hash-filtered training sample, seeded Lloyd init), golden-
     checked like q_ann_lsh; recall asserted in tests."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = P.read_parquet(spark, f"{sf_dir}/embeddings.parquet")[0]
     out = SIM.ivf_topk(emb, dim=64, k=3)
     return out.select("vec_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
                       "sim_rank")
@@ -402,13 +390,10 @@ ADAPTIVE_MAX_DEPTH = 8
 
 def q_adaptive_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adaptive quad-tree assignment (split while subtree count >
-    max_pages, depth-capped), via the fully distributed SCALE path:
-    pages join the adaptive_leaf_map output on their max-depth quadkey —
-    zero driver-side collection at any input size (the Tile-list/PIP
-    route is the bounded-tile-table variant, leaf-budget-guarded, and is
-    pinned row-identical to this path in tests/test_plan_shapes.py).
-    The oracle recomputes the equivalent shortest-fitting-prefix rule in
-    SQL."""
+    max_pages, depth-capped), fully distributed: pages join the
+    adaptive_leaf_map output on their max-depth quadkey — zero
+    driver-side collection at any input size. The oracle recomputes the
+    equivalent shortest-fitting-prefix rule in SQL."""
     from ..operators.tiles import assign_tiles_adaptive
 
     df = P.geocoded_pages(spark, sf_dir)
@@ -523,7 +508,7 @@ def _minhash_params_values() -> str:
 
 
 ORACLES: dict[str, str] = {
-    "q_text_metrics": _with_cells(
+    "q_text_metrics": D.with_cells(
         "SELECT CAST(doc_id AS BIGINT) AS doc_id, "
         + ", ".join(f"{e} AS {n}" for n, e in T.token_stats_exprs(_DD).items())
         + ", "
@@ -533,7 +518,7 @@ ORACLES: dict[str, str] = {
         + f", {T.langid_expr(_DD)} AS lang_pred"
         + f", {T.langid_ngram_expr(_DD)} AS lang_pred_ngram"
         + " FROM cells"),
-    "q_fingerprint": _with_cells(
+    "q_fingerprint": D.with_cells(
         "SELECT f.doc_id, f.fingerprint, s.simhash FROM ("
         + T.fingerprint_sql(_DD, "cells").replace(
             "SELECT doc_id,", "SELECT CAST(doc_id AS BIGINT) AS doc_id,")
@@ -555,7 +540,7 @@ ORACLES: dict[str, str] = {
                  CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END AS bitval
           FROM contrib
         )"""),
-    "q_jaccard_pairs": _with_cells(
+    "q_jaccard_pairs": D.with_cells(
         f"""SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
                    inter, na, nb
             FROM (
@@ -570,7 +555,7 @@ ORACLES: dict[str, str] = {
         extra_ctes=_shingles_cte()
         + ", sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh "
           "FROM sh GROUP BY doc_id)"),
-    "q_minhash_lsh": _with_cells(
+    "q_minhash_lsh": D.with_cells(
         f"""SELECT CAST(a.doc_id AS BIGINT) AS id_a,
                    CAST(b.doc_id AS BIGINT) AS id_b,
                    CAST(count(*) AS BIGINT) AS n_shared_bands
@@ -596,7 +581,7 @@ ORACLES: dict[str, str] = {
     # exact-dup pre-collapse + LSH over representatives: the same band
     # algebra as q_minhash_lsh, but the shingle CTE reads the per-md5
     # representatives and pairs carry exact-group sizes
-    "q_hex_knn": _with_cells(
+    "q_hex_knn": D.with_cells(
         """SELECT 'planar' AS variant, url_a, url_b, knn_rank FROM (
              SELECT a.url AS url_a, b.url AS url_b,
                     row_number() OVER (PARTITION BY a.url ORDER BY
@@ -631,7 +616,7 @@ ORACLES: dict[str, str] = {
              (cr + 1048576) * 2097152 + (cq + 1048576) AS cell FROM ax3),
            ringd(delta) AS (VALUES (-1), (2097151), (-2097152), (0),
                                    (2097152), (-2097151), (1))"""),
-    "q_near_dup": _with_cells(
+    "q_near_dup": D.with_cells(
         f"""SELECT CAST(a.doc_id AS BIGINT) AS id_a,
                    CAST(b.doc_id AS BIGINT) AS id_b,
                    CAST(count(*) AS BIGINT) AS n_shared_bands,
@@ -669,7 +654,7 @@ ORACLES: dict[str, str] = {
           FROM minh
           GROUP BY doc_id, CAST(floor(hash_idx / {DD.ROWS_PER_BAND}) AS INT)
         )"""),
-    "q_simhash_pairs": _with_cells(
+    "q_simhash_pairs": D.with_cells(
         f"""SELECT CAST(a.doc_id AS BIGINT) AS id_a,
                    CAST(b.doc_id AS BIGINT) AS id_b,
                    CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
@@ -709,7 +694,7 @@ ORACLES: dict[str, str] = {
                      ORDER BY cosine DESC, nbr_id ASC) AS sim_rank
           FROM pairs
         ) WHERE sim_rank <= 3""",
-    "q_feather_blend": _with_cells(
+    "q_feather_blend": D.with_cells(
         f"""SELECT pair, block, round(w, 6) AS w, round(z_blend, 6) AS z_blend,
                    n_pages, flags_merged FROM (
               SELECT j.pair, j.block,
@@ -756,7 +741,7 @@ ORACLES: dict[str, str] = {
 }
 
 
-ORACLES["q_extract_text"] = _with_cells(
+ORACLES["q_extract_text"] = D.with_cells(
     """SELECT url, md5(extracted) AS extracted_md5, md5(text) AS text_md5,
               (extracted = text) AS byte_identical
        FROM (SELECT url, text,
@@ -765,7 +750,7 @@ ORACLES["q_extract_text"] = _with_cells(
                       '^<html><body>', ''), '</body></html>$', '') AS extracted
              FROM cells)""")
 
-ORACLES["q_percentile_gate"] = _with_cells(
+ORACLES["q_percentile_gate"] = D.with_cells(
     f"""SELECT group_id, round(spread, 6) AS spread,
           CASE WHEN spread < 40 THEN 10.5 WHEN spread < 50 THEN 15.0
                WHEN spread < 75 THEN 19.0 WHEN spread < 90 THEN 27.0
@@ -775,7 +760,7 @@ ORACLES["q_percentile_gate"] = _with_cells(
               FROM (SELECT group_id, {D.z_expr(_DD)} AS z FROM cells)
               GROUP BY group_id)""")
 
-ORACLES["q_ring_stats"] = _with_cells(
+ORACLES["q_ring_stats"] = D.with_cells(
     """SELECT s.cell, s.n_in_ring, s.ring_mean, s.ring_std, e.ring_entropy
        FROM (
          SELECT o.target_cell AS cell, CAST(o.n AS BIGINT) AS n_in_ring,
@@ -813,7 +798,7 @@ ORACLES["q_ring_stats"] = _with_cells(
 # pipeline rollup oracle: the same per-tile census straight off the pages
 # CTE — if any stage of the committed stage chain drops/dups rows or
 # mangles flags, the hash diverges
-ORACLES["q_pipeline_rollup"] = _with_cells(
+ORACLES["q_pipeline_rollup"] = D.with_cells(
     f"""SELECT tile_id, CAST(count(*) AS BIGINT) AS n_pages,
                CAST(sum(CASE WHEN flags > 0 THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_flagged,
@@ -831,7 +816,7 @@ _ADAPT_CNTS = " UNION ALL ".join(
     f"CAST(count(*) AS BIGINT) AS n FROM deep GROUP BY 2"
     for lvl in range(0, 9))
 
-ORACLES["q_adaptive_tiles"] = _with_cells(
+ORACLES["q_adaptive_tiles"] = D.with_cells(
     f"""SELECT d.url, substr(d.qk, 1, l.ll + 1) AS tile_id
         FROM deep d JOIN (
           SELECT k.qk,
@@ -1150,7 +1135,7 @@ ORACLES["q_merge_order"] = merge_order_oracle_sql()
 # max(|dx|,|dy|) over the seeds — a plain min-join, no recursion. The
 # rescale denominator is written (0.55 - 0.25), not 0.3, to reproduce the
 # engine's IEEE rounding of that subtraction bit-for-bit.
-ORACLES["q_feather_field"] = _with_cells(
+ORACLES["q_feather_field"] = D.with_cells(
     """SELECT d.pair, d.by * 64 + d.bx AS block,
               round(least(greatest((
                   (CASE WHEN d.dA IS NULL OR d.dB IS NULL THEN 0.5
@@ -1311,7 +1296,7 @@ _COREG_CTES = f"""
       LEFT JOIN coreg_solf s ON p.grain = s.grain AND p.pair = s.pair
       LEFT JOIN coreg_rmse r ON p.grain = r.grain AND p.pair = r.pair)"""
 
-ORACLES["q_coregister"] = _with_cells(
+ORACLES["q_coregister"] = D.with_cells(
     """SELECT grain, group_a, group_b, CAST(n_points AS INT) AS n_points,
               CAST(iters AS INT) AS iters,
               round(dz, 6) AS dz, round(dx, 6) AS dx, round(dy, 6) AS dy,
@@ -1433,7 +1418,7 @@ _STRIP_CTES = _COREG_CTES + f""",
       SELECT grain, pair, block, src, w, z_strip, n_pages, matchtag,
              flags_merged, segment_break FROM st_broken)"""
 
-ORACLES["q_strip_assembly"] = _with_cells(
+ORACLES["q_strip_assembly"] = D.with_cells(
     """SELECT CASE grain WHEN 'super' THEN 'super' ELSE 'host' END
                 AS variant,
               CASE WHEN grain = 'host' THEN 'pair' || pair

@@ -17,11 +17,6 @@ from ..sql import dialect as D
 _DD = D.DUCKDB
 
 
-def _with_cells(body: str, extra_ctes: str = "") -> str:
-    extra = f", {extra_ctes}" if extra_ctes else ""
-    return f"WITH {D.geo_ctes(_DD)}{extra} {body}"
-
-
 def _blocks(spark, sf_dir) -> DataFrame:
     """Occupied coarse blocks as a binary 'raster' (block coords reused as
     cell coords for the morphology kernels)."""
@@ -436,7 +431,7 @@ def q_crawl_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 ORACLES: dict[str, str] = {
-    "q_morphology": _with_cells(
+    "q_morphology": D.with_cells(
         """SELECT d.cell,
                   (o.cell IS NOT NULL) AS is_occupied,
                   (e.cell IS NOT NULL) AS is_eroded,
@@ -455,7 +450,7 @@ ORACLES: dict[str, str] = {
              WHERE v.nv = 9
            ) e ON d.cell = e.cell""",
         extra_ctes=_BLOCKS_CTE + ", " + D.ring_offsets_values(1)),
-    "q_slope": _with_cells(
+    "q_slope": D.with_cells(
         """SELECT g.cell,
                   round(sqrt(((g.vr - g.vl) / 2) * ((g.vr - g.vl) / 2)
                            + ((g.vu - g.vd) / 2) * ((g.vu - g.vd) / 2)), 6)
@@ -482,7 +477,7 @@ ORACLES: dict[str, str] = {
         " ('vd', 0, 1), ('vu', 0, -1)), "
         f"zb AS (SELECT (cell_x >> 12) AS cell_x, (cell_y >> 12) AS cell_y, "
         f"{D.z_expr(_DD)} AS z FROM cells)"),
-    "q_resize_bilinear": _with_cells(
+    "q_resize_bilinear": D.with_cells(
         """SELECT t.ty * 131072 + t.tx AS cell,
                   round(CASE WHEN c.ntap = 4 THEN c.sv / 4.0 END, 6)
                     AS z_resized,
@@ -538,7 +533,7 @@ ORACLES: dict[str, str] = {
         extra_ctes=f"zb AS (SELECT (cell_x >> 12) AS bx, (cell_y >> 12) AS by, "
         f"{D.z_expr(_DD)} AS z FROM cells), "
         "p AS (SELECT bx, by, sum(z) / count(*) AS v FROM zb GROUP BY 1, 2)"),
-    "q_water_compose": _with_cells(
+    "q_water_compose": D.with_cells(
         f"""SELECT b.cell, round(r.vrange, 6) AS vrange,
                    round(e.ent, 6) AS ring_ent, b.n AS n_pages,
                    (e.ent < {WATER_TH_ENT}) AS is_water_entropy,
@@ -580,7 +575,7 @@ ORACLES: dict[str, str] = {
           f"{D.z_expr(_DD)} AS z, lang FROM cells)"
         + ", pb AS (SELECT by * 131072 + bx AS cell, sum(z) AS s, "
           "CAST(count(*) AS BIGINT) AS n FROM zb GROUP BY 1)"),
-    "q_diff_strips": _with_cells(
+    "q_diff_strips": D.with_cells(
         """SELECT j.pair, j.block, round(j.szb / j.nb - j.sza / j.na, 6) AS dz,
                   j.na + j.nb AS n_total,
                   (row_number() OVER (PARTITION BY j.pair
@@ -604,7 +599,7 @@ ORACLES: dict[str, str] = {
                  CAST(count(*) AS BIGINT) AS n
           FROM base GROUP BY pair, block, hostnum % 2
         )"""),
-    "q_quantize": _with_cells(
+    "q_quantize": D.with_cells(
         f"""SELECT CAST(doc_id AS BIGINT) AS doc_id,
               round(z * 128) / 128 AS z_q,
               CAST(least(greatest(round(z * 2.55), 0.0), 255.0) AS INT) AS dn_crop,
@@ -614,18 +609,18 @@ ORACLES: dict[str, str] = {
                              CASE WHEN n_chars > 300 THEN z * 0.5 END,
                              z * 0.25), 6) AS v_priority
             FROM (SELECT *, {D.z_expr(_DD)} AS z FROM cells)"""),
-    "q_dn2rad": _with_cells(
+    "q_dn2rad": D.with_cells(
         """SELECT CAST(c.doc_id AS BIGINT) AS doc_id,
                   round(d.gain * c.n_chars + d.ofs, 6) AS rad
            FROM cells c JOIN dim d ON c.lang = d.lang""",
         extra_ctes="dim(lang, gain, ofs) AS (VALUES "
         + ", ".join(f"('{s}', {g}, {o})" for s, g, o in DN2RAD_TABLE) + ")"),
-    "q_valid_range": _with_cells(
+    "q_valid_range": D.with_cells(
         """SELECT CAST(doc_id AS BIGINT) AS doc_id, n_chars,
                   CASE WHEN n_chars < 150 THEN 'below_min'
                        ELSE 'above_max' END AS reason
            FROM cells WHERE n_chars NOT BETWEEN 150 AND 800"""),
-    "q_meta_extract": _with_cells(
+    "q_meta_extract": D.with_cells(
         """SELECT regexp_extract(metastr, 'lang=([a-z]+)', 1) AS lang_meta,
                   CAST(count(*) AS BIGINT) AS n_docs,
                   CAST(sum(CAST(regexp_extract(metastr, 'n=([0-9]+)', 1)
@@ -633,7 +628,7 @@ ORACLES: dict[str, str] = {
            FROM (SELECT ('lang=' || lang || ';n=' || CAST(n_chars AS VARCHAR))
                  AS metastr FROM cells)
            GROUP BY 1"""),
-    "q_group_census": _with_cells(
+    "q_group_census": D.with_cells(
         f"""SELECT c.group_id,
                    CAST(coalesce(r.n_remaining, 0) AS BIGINT) AS n_remaining,
                    c.langs, c.n_langs, c.checksum, c.n_pages
@@ -650,13 +645,13 @@ ORACLES: dict[str, str] = {
               FROM (SELECT group_id, {D.flags_expr(_DD)} AS flags FROM cells)
               WHERE flags = 0 GROUP BY group_id
             ) r ON c.group_id = r.group_id"""),
-    "q_xml_extract": _with_cells(
+    "q_xml_extract": D.with_cells(
         f"""SELECT CAST(doc_id AS BIGINT) AS doc_id,
                    regexp_extract(xml, '<lang>([a-z]+)</lang>', 1) AS xml_lang,
                    CAST(regexp_extract(xml, '<n>([0-9]+)</n>', 1) AS BIGINT)
                      AS xml_n
             FROM (SELECT doc_id, {D.scene_xml_expr(_DD)} AS xml FROM cells)"""),
-    "q_version_sort": _with_cells(
+    "q_version_sort": D.with_cells(
         """SELECT s.group_id, s.v_latest, a.v_latest_lex, a.n_versions
            FROM (
              SELECT group_id, ver AS v_latest FROM (
@@ -678,14 +673,14 @@ ORACLES: dict[str, str] = {
                  CAST(string_split(ver, '.')[3] AS INT) AS pat
           FROM (SELECT group_id, {D.version_expr(_DD)} AS ver FROM cells)
         )"""),
-    "q_top_hosts": _with_cells(
+    "q_top_hosts": D.with_cells(
         """SELECT group_id, n_pages, CAST(host_rank AS INT) AS host_rank FROM (
              SELECT group_id, CAST(count(*) AS BIGINT) AS n_pages,
                     row_number() OVER (ORDER BY count(*) DESC, group_id ASC)
                       AS host_rank
              FROM cells GROUP BY group_id
            ) WHERE host_rank <= 5"""),
-    "q_pyramid": _with_cells(
+    "q_pyramid": D.with_cells(
         """SELECT 'block' AS level,
                   CAST(by * 64 + bx AS BIGINT) AS key, n,
                   CAST(NULL AS DOUBLE) AS z_up
@@ -720,7 +715,7 @@ _WTS = ", ".join(f"({ox}, {oy}, {w!r})" for (ox, oy), w in sorted(_W.items())
 _NEED = sum(1 for w in _W.values() if w != 0.0)
 _KW = ", ".join(f"({dx}, {dy}, {w})" for (dx, dy), w in sorted(CONV2_KERNEL.items()))
 
-ORACLES["q_conv2"] = _with_cells(
+ORACLES["q_conv2"] = D.with_cells(
     """SELECT o.cell, round(o.conv_sum, 6) AS conv_sum,
               CAST(o.conv_wsum AS BIGINT) AS conv_wsum
        FROM (
@@ -735,7 +730,7 @@ ORACLES["q_conv2"] = _with_cells(
     f"zb AS (SELECT (cell_x >> 12) AS cell_x, (cell_y >> 12) AS cell_y, "
     f"{D.z_expr(_DD)} AS z FROM cells)")
 
-ORACLES["q_interp_shift"] = _with_cells(
+ORACLES["q_interp_shift"] = D.with_cells(
     f"""SELECT a.cell,
           round(CASE WHEN a.nc = {_NEED} THEN a.wv END, 6) AS v_shifted
         FROM (
@@ -749,7 +744,7 @@ ORACLES["q_interp_shift"] = _with_cells(
     f"zb AS (SELECT (cell_x >> 12) AS cell_x, (cell_y >> 12) AS cell_y, "
     f"{D.z_expr(_DD)} AS z FROM cells)")
 
-ORACLES["q_crawl_intervals"] = _with_cells(
+ORACLES["q_crawl_intervals"] = D.with_cells(
     """SELECT group_id, CAST(count(delta) AS BIGINT) AS n_gaps,
               CAST(sum(delta) AS BIGINT) AS sum_delta,
               CAST(max(delta) AS BIGINT) AS max_delta

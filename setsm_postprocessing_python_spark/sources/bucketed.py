@@ -101,15 +101,6 @@ def write_bucketed(spark: SparkSession, df: DataFrame, path: str,
     return spark.table(table)
 
 
-def write_bucketed_pages(spark: SparkSession, sf_dir: str, path: str,
-                         table: str = "pages_bucketed",
-                         n_buckets: int = 8,
-                         block_shift: int = BLOCK_SHIFT) -> DataFrame:
-    """The pages table in the bucketed layout (block at `block_shift`)."""
-    return write_bucketed(spark, blocked_pages(spark, sf_dir, block_shift),
-                          path, table, n_buckets)
-
-
 def _schema_ddl(df: DataFrame) -> str:
     """Column DDL for re-registration (simple scalar schema, so
     simpleString per field is valid Spark DDL)."""

@@ -17,8 +17,12 @@ Scan-path notes for 100 TB:
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..sql import dialect as D
 
@@ -51,8 +55,23 @@ def bucketed_pages_active(spark: SparkSession, sf_dir: str) -> bool:
     return _bucketed_table(spark, sf_dir) is not None
 
 
+def read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
+    """A parquet file or directory and its row count, both taken from the
+    footers on the driver (pyarrow). The reader gets the file's own schema,
+    so building the read skips Spark's schema inference and its job; the
+    row count sizes operators without a count job (at Iceberg scale: the
+    snapshot summary stats)."""
+    p = Path(path)
+    metas = [pq.read_metadata(f) for f in
+             ([p] if p.is_file() else sorted(p.glob("*.parquet")))]
+    schema = from_arrow_schema(metas[0].schema.to_arrow_schema(),
+                               prefer_timestamp_ntz=True)
+    return (spark.read.schema(schema).parquet(path),
+            sum(m.num_rows for m in metas))
+
+
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")[0]
 
 
 def pages(spark: SparkSession, sf_dir: str, with_html: bool = False) -> DataFrame:

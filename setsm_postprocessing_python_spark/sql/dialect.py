@@ -264,6 +264,12 @@ def geo_ctes(dialect: str, documents: str = "documents") -> str:
     """
 
 
+def with_cells(body: str, extra_ctes: str = "") -> str:
+    """A DuckDB oracle query over the geo CTEs (plus `extra_ctes`)."""
+    extra = f", {extra_ctes}" if extra_ctes else ""
+    return f"WITH {geo_ctes(DUCKDB)}{extra} {body}"
+
+
 def ring_offsets_values(ring: int = 1) -> str:
     """VALUES list for the k-ring offsets CTE: offs(dx, dy)."""
     vals = ", ".join(

@@ -11,12 +11,17 @@ import pyspark.sql.functions as F
 from setsm_postprocessing_python_spark.operators import components
 from setsm_postprocessing_python_spark.operators import dedup as DD
 from setsm_postprocessing_python_spark.operators.similarity import lsh_topk
+from setsm_postprocessing_python_spark.plans import queries_ext as QE
 from setsm_postprocessing_python_spark.plans.manifest import (
     read_stage,
     run_stage,
 )
 from setsm_postprocessing_python_spark.session import cache_scope
-from setsm_postprocessing_python_spark.sources.pages import pages
+from setsm_postprocessing_python_spark.sources.pages import (
+    bucketed_pages_active,
+    geocoded_pages,
+    pages,
+)
 
 from .conftest import SF_TINY
 
@@ -80,6 +85,16 @@ def test_lsh_topk_build_fires_no_job(spark):
     emb = spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
     assert _build_jobs(spark, lambda: lsh_topk(
         emb, dim=64, k=3, n_hint=500)) == 0
+
+
+def test_source_and_query_builds_fire_no_job(spark):
+    """Reads take their schema and row count from the parquet footers, so
+    building a source, or a query over one, infers and counts nothing."""
+    assert not bucketed_pages_active(spark, SF_TINY)
+    assert _build_jobs(spark, lambda: pages(spark, SF_TINY)) == 0
+    assert _build_jobs(spark, lambda: geocoded_pages(spark, SF_TINY)) == 0
+    assert _build_jobs(spark, lambda: QE.q_near_dup(spark, SF_TINY)) == 0
+    assert _build_jobs(spark, lambda: QE.q_ann_lsh(spark, SF_TINY)) == 0
 
 
 def test_read_stage_fires_no_job(spark, tmp_path):

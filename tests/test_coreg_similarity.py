@@ -147,29 +147,6 @@ def test_ivf_deterministic_under_repartition(spark):
     assert base == shuffled == coalesced
 
 
-def test_embedding_near_dup_lsh_vs_brute(spark):
-    """embedding_near_dup(method='lsh') — the scale path for the
-    embedding-cosine near-dup dedup mode — must (a) emit ONLY true pairs
-    (every pair it reports appears in the exact brute-force set with the
-    same a < b orientation), and (b) reach recall >= 0.8 on clustered
-    vectors at the 0.6-cosine threshold (the clustered fixture's top-1
-    cosines run ~0.60-0.73, so 0.6 selects the genuinely-similar tail)."""
-    from setsm_postprocessing_python_spark.operators.similarity import (
-        embedding_near_dup)
-    from setsm_postprocessing_python_spark.sources.datagen import (
-        clustered_embeddings)
-
-    emb = clustered_embeddings(spark, n=1500, dim=64, n_clusters=25).cache()
-    exact = {(r.id_a, r.id_b) for r in embedding_near_dup(
-        emb, threshold=0.6, method="brute").collect()}
-    approx = {(r.id_a, r.id_b) for r in embedding_near_dup(
-        emb, threshold=0.6, method="lsh", dim=64, n_hint=1500).collect()}
-    assert exact, "fixture produced no near-dup pairs at 0.6"
-    assert approx <= exact, "LSH path emitted a pair brute force rejects"
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.8, f"near-dup LSH recall too low: {recall:.2f}"
-
-
 def test_lsh_topk_row_grain_equivalence(spark):
     """lsh_topk collapses identical vectors, searches the representatives
     and expands to rows. On a corpus replicated r times (copy ids shifted

@@ -143,36 +143,6 @@ def test_truncated_record_reruns_every_unit(spark, out_dir):
                       .collect())) == clean
 
 
-def test_ithresh_snapshot_replay(spark, tmp_path):
-    """ithresh save/replay (lib/filter_scene.py:59-71,1895-1987 analogue):
-    the threshold step re-evaluated from the snapshot must equal the
-    direct full-pipeline result."""
-    import pyspark.sql.functions as F
-
-    from setsm_postprocessing_python_spark.plans.debug import (
-        ithresh_save,
-        replay_percentile_gate,
-    )
-    from setsm_postprocessing_python_spark.plans.queries_ext import (
-        q_percentile_gate,
-    )
-    from setsm_postprocessing_python_spark.sources.pages import geocoded_pages
-    from setsm_postprocessing_python_spark.sql import dialect as D
-
-    wd = str(tmp_path / "wd")
-    df = (geocoded_pages(spark, "/root/testdata/sf0.001")
-          .withColumn("z", F.expr(D.z_expr(D.SPARK))))
-    spreads = df.groupBy("group_id").agg(
-        F.expr("percentile(z, 0.8) - percentile(z, 0.2)").alias("spread"))
-    ithresh_save(spreads, wd, "percentile_gate")
-
-    replayed = {(r.group_id, r.spread, r.stdev_thresh)
-                for r in replay_percentile_gate(spark, wd).collect()}
-    direct = {(r.group_id, r.spread, r.stdev_thresh)
-              for r in q_percentile_gate(spark, "/root/testdata/sf0.001").collect()}
-    assert replayed == direct
-
-
 _PIPELINE_SCRIPT = """
 import sys
 sys.path.insert(0, "/root/repo")

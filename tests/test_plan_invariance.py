@@ -1,0 +1,55 @@
+"""Physical-plan invariance: a query's rows must not depend on how the
+session partitions, plans or joins. Each query runs at sf0.001 under two
+configs and must return the same sorted rows, floats compared exactly."""
+
+from __future__ import annotations
+
+import pytest
+
+from setsm_postprocessing_python_spark.plans import queries as Q
+from setsm_postprocessing_python_spark.plans import queries_ext as QE
+from setsm_postprocessing_python_spark.session import cache_scope
+
+from .conftest import SF_TINY
+
+CONFIGS = {
+    "A": {"spark.sql.shuffle.partitions": "8",
+          "spark.sql.adaptive.enabled": "true"},
+    "B": {"spark.sql.shuffle.partitions": "61",
+          "spark.sql.adaptive.enabled": "false",
+          "spark.sql.autoBroadcastJoinThreshold": "-1"},
+}
+KEYS = sorted({k for conf in CONFIGS.values() for k in conf})
+
+QUERIES = {
+    "q_ann_lsh": QE.q_ann_lsh,
+    "q_ann_dedup": QE.q_ann_dedup,
+    "q_ann_ivf": QE.q_ann_ivf,
+    "q_knn": Q.q_knn,
+    "q_ring_density": Q.q_ring_density,
+    "q_adaptive_tiles": QE.q_adaptive_tiles,
+}
+
+
+@pytest.fixture()
+def restore_confs(spark):
+    old = {k: spark.conf.get(k, None) for k in KEYS}
+    yield
+    for k, v in old.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_rows_invariant_under_plan_configs(spark, restore_confs, name):
+    rows = {}
+    for cname, conf in CONFIGS.items():
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        with cache_scope():
+            rows[cname] = sorted(map(tuple, QUERIES[name](spark, SF_TINY)
+                                     .collect()))
+    assert rows["A"], name
+    assert rows["A"] == rows["B"], name

@@ -70,31 +70,17 @@ def test_slope_partial_aggregation(spark):
     assert plan.index("HashAggregate") < plan.index("Exchange")
 
 
-def test_adaptive_assign_join_path_matches_pip_and_guards(spark):
-    """The distributed adaptive assignment (join on adaptive_leaf_map,
-    zero driver collect) is row-identical to the bounded Tile-list/PIP
-    path, and the Tile-list path raises past its leaf budget."""
-    import pytest
-
+def test_adaptive_assign_stays_a_join(spark):
+    """The adaptive assignment joins the pages to adaptive_leaf_map on the
+    deep quadkey: no collect-backed local relation of leaves."""
     from setsm_postprocessing_python_spark.operators.tiles import (
-        adaptive_tiles, assign_tiles_adaptive, assign_tiles_pip)
+        assign_tiles_adaptive)
     from setsm_postprocessing_python_spark.sources.pages import geocoded_pages
 
-    df = geocoded_pages(spark, "/root/testdata/sf0.001")
-    joined = {(r.url, r.tile_id) for r in
-              assign_tiles_adaptive(df, max_pages=50, max_depth=8)
-              .select("url", "tile_id").collect()}
-    tiles = adaptive_tiles(df, max_pages=50, max_depth=8)
-    pip = {(r.url, r.tile_id) for r in
-           assign_tiles_pip(df, tiles).select("url", "tile_id").collect()}
-    assert joined == pip and joined
-    # join path stays a join: no collect-backed local relation of leaves
+    df = geocoded_pages(spark, SF)
     plan = assign_tiles_adaptive(df, max_pages=50, max_depth=8) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Join" in plan and "LocalTableScan" not in plan
-
-    with pytest.raises(ValueError, match="assign_tiles_adaptive"):
-        adaptive_tiles(df, max_pages=1, max_depth=8, leaf_budget=10)
 
 
 def _self_join_on_block(d):
