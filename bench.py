@@ -71,21 +71,21 @@ def amplified_dir(spark, sf_dir: str, amp: int, emb_amp: int) -> str:
     r shifts doc_id/vec_id by r*n, everything else derives from ids)."""
     import pyspark.sql.functions as F
 
+    from setsm_postprocessing_python_spark.sources.pages import read_parquet
+
     out = Path(f"/tmp/bench_amp/{Path(sf_dir).name}_x{amp}_e{emb_amp}")
     marker = out / "_READY"
     if marker.exists():
         return str(out)
     out.mkdir(parents=True, exist_ok=True)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = docs.count()
+    docs, n = read_parquet(spark, f"{sf_dir}/documents.parquet")
     reps = spark.range(amp).select(F.col("id").alias("rep"))
     (docs.crossJoin(reps)
          .select((F.col("doc_id") + F.col("rep") * n).alias("doc_id"),
                  "text", "lang", "source", "n_chars")
          .repartition(32)
          .write.mode("overwrite").parquet(f"{out}/documents.parquet"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    ne = emb.count()
+    emb, ne = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     ereps = spark.range(emb_amp).select(F.col("id").alias("rep"))
     (emb.crossJoin(ereps)
         .select((F.col("vec_id") + F.col("rep") * ne).alias("vec_id"),
@@ -197,6 +197,7 @@ def run_bench(parallelism: int, sf_dir: str) -> dict:
     pass's reading of a stage. `value` = the faster pass's end-to-end
     wall-clock."""
     from setsm_postprocessing_python_spark.session import get_spark
+    from setsm_postprocessing_python_spark.sources.pages import read_parquet
 
     spark = get_spark(parallelism=parallelism, app_name=f"bench[{parallelism}]")
     bench_dir = amplified_dir(spark, sf_dir, AMP, EMB_AMP)
@@ -211,7 +212,7 @@ def run_bench(parallelism: int, sf_dir: str) -> dict:
             table="bench_pages_bucketed", n_buckets=32)
         layout_write_s = round(time.time() - t0, 3) if did_write else 0.0
         activate_bucketed_pages(spark, "bench_pages_bucketed", bench_dir)
-    n_pages = spark.read.parquet(f"{bench_dir}/documents.parquet").count()
+    n_pages = read_parquet(spark, f"{bench_dir}/documents.parquet")[1]
     qs = headline_queries()
     # SPARK_GRAFT_STAGES="a,b,c": run a stage subset (scale probes at big
     # AMP target only the stages whose 10x curve measured flat — re-running

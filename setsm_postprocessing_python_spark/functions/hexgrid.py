@@ -17,6 +17,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType
 
+from ..operators.knn import top_k
+
 HEX_SIZE_DEG = 0.005  # circumradius ~ H3 res-8 scale
 AXIAL_OFFSET = 1 << 20  # shift axial coords non-negative for packing
 AXIAL_STRIDE = 1 << 21
@@ -138,8 +140,6 @@ def hex_knn(df: DataFrame, k_neighbors: int = 3, ring: int = 1,
             size: float = HEX_SIZE_DEG) -> DataFrame:
     """kNN over the hex grid: hex k-ring expansion + cell-local join +
     distance rank (north-star kNN formulation on the hex index)."""
-    from pyspark.sql import Window
-
     base = with_hex_cell(df, size=size)
     a = hex_kring_expand(
         base.select(F.col("url").alias("url_a"), F.col("lat").alias("lat_a"),
@@ -152,10 +152,7 @@ def hex_knn(df: DataFrame, k_neighbors: int = 3, ring: int = 1,
         "dist2",
         (F.col("lat_a") - F.col("lat_b")) * (F.col("lat_a") - F.col("lat_b"))
         + (F.col("lon_a") - F.col("lon_b")) * (F.col("lon_a") - F.col("lon_b")))
-    w = Window.partitionBy("url_a").orderBy(F.col("dist2").asc(), F.col("url_b").asc())
-    return (j.withColumn("rank", F.row_number().over(w))
-             .where(F.col("rank") <= k_neighbors)
-             .select("url_a", "url_b", "rank"))
+    return top_k(j, k_neighbors).select("url_a", "url_b", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -376,8 +373,6 @@ def h3_knn(df: DataFrame, k_neighbors: int = 3,
     (co-partitioned shuffle), WindowGroupLimit top-k. Pairs are unique by
     construction (the ring ids are distinct per row and the join key is
     the candidate's single home cell)."""
-    from pyspark.sql import Window
-
     base = with_h3_cell(df, size=size)
     a = h3_kring_expand(
         base.select(F.col("url").alias("url_a"), F.col("lat").alias("lat_a"),
@@ -395,8 +390,5 @@ def h3_knn(df: DataFrame, k_neighbors: int = 3,
     xb, yb, zb = _xyz("lat_b", "lon_b")
     j = j.withColumn("dist2", (xa - xb) * (xa - xb) + (ya - yb) * (ya - yb)
                      + (za - zb) * (za - zb))
-    w = Window.partitionBy("url_a").orderBy(F.col("dist2").asc(),
-                                            F.col("url_b").asc())
-    return (j.withColumn("rank", F.row_number().over(w))
-             .where(F.col("rank") <= k_neighbors)
-             .select("url_a", "url_b", "rank", "cell_h3", "nbr_h3"))
+    return (top_k(j, k_neighbors)
+            .select("url_a", "url_b", "rank", "cell_h3", "nbr_h3"))

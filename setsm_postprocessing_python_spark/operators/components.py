@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 
 from ..session import cached, checkpointed
 from ..sql import dialect as D
-from .knn import ring_offsets
+from .neighborhood import ring_offsets, scatter
 
 
 def _neighbor_pairs(cells: DataFrame) -> DataFrame:
@@ -41,14 +41,8 @@ def _neighbor_pairs(cells: DataFrame) -> DataFrame:
     The offset set is symmetric, so every undirected adjacency appears
     once per direction across the exploded output — min-label propagation
     needs no explicit reverse edges."""
-    offsets = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx, dy in ring_offsets(1) if not (dx == 0 and dy == 0)
-    ])
-    cand = (cells.withColumn("_o", F.explode(offsets))
-            .select(F.col("cell"),
-                    ((F.col("cell_y") + F.col("_o.dy")) * D.LON_CELL_STRIDE
-                     + (F.col("cell_x") + F.col("_o.dx"))).alias("nbr_cell")))
+    cand = (scatter(cells, [o for o in ring_offsets(1) if o != (0, 0)])
+            .select("cell", F.col("target_cell").alias("nbr_cell")))
     occ = cells.select(F.col("cell").alias("nbr_cell"))
     return cand.join(occ, "nbr_cell", "inner")  # keep only occupied neighbors
 

@@ -23,11 +23,34 @@ from pyspark.sql import DataFrame, Window
 from ..sql import dialect as D
 
 
-def ring_offsets(ring: int = 1) -> list[tuple[int, int]]:
-    return [(dx, dy) for dy in range(-ring, ring + 1) for dx in range(-ring, ring + 1)]
-
-
 BLOCK_SHIFT = 6  # 64x64-cell join blocks for the halo strategy
+
+
+def block_id(bx, by, block_shift: int = BLOCK_SHIFT):
+    """The one block rule: pack block coords (bx, by) into the join-block
+    id. The stored `block` column of the bucketed layout
+    (sources/bucketed.py) and the query-time blocks of knn_join_blocked
+    both come from here, so they agree by construction. The stride
+    exceeds the max block-x for the shift, or distinct blocks would alias
+    into one join key (correct — the exact ring re-check saves it — but
+    the equi-join fans out toward quadratic)."""
+    return by * ((D.LON_CELL_STRIDE >> block_shift) + 1) + bx
+
+
+def block_expr(block_shift: int = BLOCK_SHIFT, dx: int = 0, dy: int = 0):
+    """The join-block id of cell (cell_x + dx, cell_y + dy)."""
+    x = F.col("cell_x") + dx if dx else F.col("cell_x")
+    y = F.col("cell_y") + dy if dy else F.col("cell_y")
+    return block_id(F.shiftright(x, block_shift), F.shiftright(y, block_shift),
+                    block_shift)
+
+
+def top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The kNN tail: rank each url_a's candidates by (dist2, url_b) and
+    keep the first k (compiles to a WindowGroupLimit partial top-k)."""
+    w = Window.partitionBy("url_a").orderBy(F.col("dist2").asc(), F.col("url_b").asc())
+    return (pairs.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))
 
 
 def knn_join_blocked(df: DataFrame, k: int = 3, ring: int = 1,
@@ -50,11 +73,6 @@ def knn_join_blocked(df: DataFrame, k: int = 3, ring: int = 1,
     more blocks than cores (e.g. shift 6 for the 0.005-degree grid, shift
     0-2 for coarse 5-degree kNN cells — shift 6 on a 72-cell-wide coarse
     grid would collapse everything into 2 blocks and go quadratic)."""
-    # block-id packing stride: must exceed the max block-x for the chosen
-    # shift, or distinct blocks alias into one join key (correct — the
-    # exact ring re-check saves it — but the equi-join fans out toward
-    # quadratic). Derived from the grid extent instead of a constant.
-    stride = (D.LON_CELL_STRIDE >> block_shift) + 1
     # use_stored_block=True: the probe side joins on the caller's
     # materialized `block` column (the bucketed layout,
     # sources/bucketed.py) — a table bucketed by `block` then reports
@@ -70,26 +88,25 @@ def knn_join_blocked(df: DataFrame, k: int = 3, ring: int = 1,
     have_block = use_stored_block
     if have_block and "block" not in df.columns:
         raise ValueError("use_stored_block=True but df has no `block` "
-                         "column (see sources/bucketed.block_expr)")
+                         "column (see block_expr)")
     sel = df.select(
         "url", "lat", "lon", "cell_x", "cell_y",
         F.shiftright("cell_x", block_shift).alias("bx"),
         F.shiftright("cell_y", block_shift).alias("by"),
         *([F.col("block")] if have_block else []),
     )
+    own_block = block_id(F.col("bx"), F.col("by"), block_shift)
     a = sel.select(
         F.col("url").alias("url_a"), F.col("lat").alias("lat_a"),
         F.col("lon").alias("lon_a"),
         F.col("cell_x").alias("xa"), F.col("cell_y").alias("ya"),
-        (F.col("block") if have_block
-         else (F.col("by") * stride + F.col("bx"))).alias("block"),
+        (F.col("block") if have_block else own_block).alias("block"),
     )
     # build side: replicate to the <=4 blocks its ring can reach
     cand_blocks = F.array_distinct(F.array(*[
-        (F.shiftright(F.col("cell_y") + dy, block_shift) * stride
-         + F.shiftright(F.col("cell_x") + dx, block_shift))
+        block_expr(block_shift, dx, dy)
         for dx in (-ring, ring) for dy in (-ring, ring)
-    ] + [(F.col("by") * stride + F.col("bx"))]))
+    ] + [own_block]))
     b = sel.select(
         F.col("url").alias("url_b"), F.col("lat").alias("lat_b"),
         F.col("lon").alias("lon_b"),
@@ -105,10 +122,8 @@ def knn_join_blocked(df: DataFrame, k: int = 3, ring: int = 1,
         (F.col("lat_a") - F.col("lat_b")) * (F.col("lat_a") - F.col("lat_b"))
         + (F.col("lon_a") - F.col("lon_b")) * (F.col("lon_a") - F.col("lon_b")),
     )
-    w = Window.partitionBy("url_a").orderBy(F.col("dist2").asc(), F.col("url_b").asc())
-    return (j.withColumn("rank", F.row_number().over(w))
-             .where(F.col("rank") <= k)
-             .select("url_a", "url_b",
-                     (F.col("ya") * F.lit(D.LON_CELL_STRIDE) + F.col("xa")).alias("cell"),
-                     "dist2", "rank"))
+    return top_k(j, k).select(
+        "url_a", "url_b",
+        (F.col("ya") * F.lit(D.LON_CELL_STRIDE) + F.col("xa")).alias("cell"),
+        "dist2", "rank")
 

@@ -21,25 +21,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..sql import dialect as D
-from .knn import ring_offsets
-
-
-def _ring_scatter(cells: DataFrame, ring: int, keep_self: bool = True) -> DataFrame:
-    offsets = [(dx, dy) for dx, dy in ring_offsets(ring)
-               if keep_self or not (dx == 0 and dy == 0)]
-    arr = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                    for dx, dy in offsets])
-    return (cells.withColumn("_o", F.explode(arr))
-            .select(((F.col("cell_y") + F.col("_o.dy")) * D.LON_CELL_STRIDE
-                     + (F.col("cell_x") + F.col("_o.dx"))).alias("cell"),
-                    (F.col("cell_x") + F.col("_o.dx")).alias("cell_x"),
-                    (F.col("cell_y") + F.col("_o.dy")).alias("cell_y")))
+from .neighborhood import ring_offsets, scatter
 
 
 def imdilate(cells: DataFrame, ring: int = 1) -> DataFrame:
     """Binary dilation: every cell within `ring` of an occupied cell."""
-    return _ring_scatter(cells, ring).distinct()
+    return scatter(cells, ring_offsets(ring)).select(
+        F.col("target_cell").alias("cell"), F.col("target_x").alias("cell_x"),
+        F.col("target_y").alias("cell_y")).distinct()
 
 
 def imerode(cells: DataFrame, ring: int = 1) -> DataFrame:
@@ -47,8 +36,9 @@ def imerode(cells: DataFrame, ring: int = 1) -> DataFrame:
     is occupied. Implemented as scatter + count == kernel size (each
     occupied neighbor contributes one vote to the center)."""
     k = (2 * ring + 1) ** 2
-    votes = (_ring_scatter(cells, ring)
-             .groupBy("cell").agg(F.count(F.lit(1)).alias("v")))
+    votes = (scatter(cells, ring_offsets(ring))
+             .groupBy(F.col("target_cell").alias("cell"))
+             .agg(F.count(F.lit(1)).alias("v")))
     occ = cells.select("cell", "cell_x", "cell_y")
     return (occ.join(votes, "cell").where(F.col("v") == k)
             .select("cell", "cell_x", "cell_y"))
@@ -66,15 +56,8 @@ def ring_range_filter(df: DataFrame, value: str, ring: int = 1) -> DataFrame:
     maximum_filter1d - minimum_filter1d analogue, 2-D form)."""
     per_cell = df.groupBy("cell", "cell_x", "cell_y").agg(
         F.max(value).alias("vmax"), F.min(value).alias("vmin"))
-    arr = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                             F.lit(dx == 0 and dy == 0).alias("s"))
-                    for dx, dy in ring_offsets(ring)])
-    scattered = (per_cell.withColumn("_o", F.explode(arr))
-                 .select(((F.col("cell_y") + F.col("_o.dy")) * D.LON_CELL_STRIDE
-                          + (F.col("cell_x") + F.col("_o.dx"))).alias("target_cell"),
-                         "vmax", "vmin", F.col("_o.s").alias("_self")))
     # occupied flag rides the scatter shuffle — no join back to occupied
-    rng = scattered.groupBy("target_cell").agg(
+    rng = scatter(per_cell, ring_offsets(ring)).groupBy("target_cell").agg(
         (F.max("vmax") - F.min("vmin")).alias("vrange"),
         F.max("_self").alias("_occ"))
     return (rng.where("_occ")

@@ -21,33 +21,46 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..sql import dialect as D
-from .knn import ring_offsets
 
 
-def _scatter_to_ring(cell_stats: DataFrame, ring: int) -> DataFrame:
-    """Explode per-cell partial rows to every cell in their k-ring (the
-    transpose of 'gather from neighbors' — same result, join-free).
+def ring_offsets(ring: int = 1) -> list[tuple[int, int]]:
+    return [(dx, dy) for dy in range(-ring, ring + 1) for dx in range(-ring, ring + 1)]
 
-    Adds `_self` = true on the (0,0) offset row: downstream aggregates
-    keep max(_self) and filter on it instead of joining back to the
+
+def scatter(cells: DataFrame, offsets, fields: tuple[str, ...] = ()) -> DataFrame:
+    """Explode each per-cell row (cell_x, cell_y, ...) to the cells at its
+    (dx, dy) offsets — the transpose of 'gather from neighbors', same
+    result, join-free. The one place a cell reaches its neighbours.
+
+    `offsets` holds (dx, dy, *literals) tuples; the literals (a weight, a
+    role) arrive as the columns named by `fields`. Keeps every input
+    column and adds target_x, target_y, the packed `target_cell` and
+    `_self` = true on the (0,0) offset row: downstream aggregates keep
+    max(_self) and filter on it instead of joining back to the
     occupied-cell set — the occupied check rides the SAME shuffle as the
     aggregation, deleting a whole |cells|-row join per kernel (measured on
     the 4M-row scaling stage: ring_density 9.1s -> see BENCH/BASELINE.md)."""
-    offsets = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(dx == 0 and dy == 0).alias("s"))
-        for dx, dy in ring_offsets(ring)
+    arr = F.array(*[
+        F.struct(F.lit(o[0]).alias("dx"), F.lit(o[1]).alias("dy"),
+                 F.lit(o[0] == 0 and o[1] == 0).alias("s"),
+                 *[F.lit(v).alias(f) for f, v in zip(fields, o[2:])])
+        for o in offsets
     ])
-    return (
-        cell_stats.withColumn("_o", F.explode(offsets))
-        .withColumn(
-            "target_cell",
-            (F.col("cell_y") + F.col("_o.dy")) * F.lit(D.LON_CELL_STRIDE)
-            + (F.col("cell_x") + F.col("_o.dx")),
-        )
-        .withColumn("_self", F.col("_o.s"))
-        .drop("_o")
-    )
+    tx = F.col("cell_x") + F.col("_o.dx")
+    ty = F.col("cell_y") + F.col("_o.dy")
+    return (cells.withColumn("_o", F.explode(arr))
+            .select(*cells.columns, *[F.col(f"_o.{f}").alias(f) for f in fields],
+                    tx.alias("target_x"), ty.alias("target_y"),
+                    (ty * F.lit(D.LON_CELL_STRIDE) + tx).alias("target_cell"),
+                    F.col("_o.s").alias("_self")))
+
+
+def _cell_mean(df: DataFrame, value: str) -> DataFrame:
+    """The per-cell mean partial: (cell, cell_x, cell_y, s, n, v = s/n)."""
+    return (df.groupBy("cell", "cell_x", "cell_y")
+            .agg(F.sum(F.col(value).cast("double")).alias("s"),
+                 F.count(value).alias("n"))
+            .withColumn("v", F.col("s") / F.col("n")))
 
 
 def ring_density(df: DataFrame, ring: int = 1) -> DataFrame:
@@ -72,19 +85,7 @@ def ring_density(df: DataFrame, ring: int = 1) -> DataFrame:
     per-cell combine, guide §2.3 "aggregate before you shuffle" without
     paying an exchange for it). Measured 1.21 s -> 0.50 s on the 200k-row
     bench stage, row-identical."""
-    offsets = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(dx == 0 and dy == 0).alias("s"))
-        for dx, dy in ring_offsets(ring)
-    ])
-    scattered = (df.select("cell_x", "cell_y")
-                 .withColumn("_o", F.explode(offsets))
-                 .select(
-                     ((F.col("cell_y") + F.col("_o.dy"))
-                      * F.lit(D.LON_CELL_STRIDE)
-                      + (F.col("cell_x") + F.col("_o.dx")))
-                     .alias("target_cell"),
-                     F.col("_o.s").alias("_self")))
+    scattered = scatter(df.select("cell_x", "cell_y"), ring_offsets(ring))
     dens = scattered.groupBy("target_cell").agg(
         F.count(F.lit(1)).alias("n_in_ring"), F.max("_self").alias("_occ"))
     return dens.where("_occ").select(F.col("target_cell").alias("cell"), "n_in_ring")
@@ -101,7 +102,7 @@ def ring_stat(df: DataFrame, value: str, ring: int = 1) -> DataFrame:
         F.sum((F.col(value) * F.col(value)).cast("double")).alias("ss"),
         F.count(value).alias("n"),
     )
-    scattered = _scatter_to_ring(per_cell, ring)
+    scattered = scatter(per_cell, ring_offsets(ring))
     out = scattered.groupBy("target_cell").agg(
         F.sum("s").alias("s"), F.sum("ss").alias("ss"), F.sum("n").alias("n"),
         F.max("_self").alias("_occ"))
@@ -127,21 +128,11 @@ def weighted_kernel_agg(df: DataFrame, value: str,
     Output: (cell, conv_sum, conv_wsum) for occupied cells — conv_sum =
     sum(w * value), conv_wsum = sum(w * n) so callers can form the
     normalized kernel mean (the reference's nan-aware moving_average)."""
-    per_cell = df.groupBy("cell", "cell_x", "cell_y").agg(
-        F.sum(F.col(value).cast("double")).alias("s"),
-        F.count(value).alias("n"))
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(w).alias("w"),
-                 F.lit(dx == 0 and dy == 0).alias("sf"))
-        for (dx, dy), w in sorted(kernel.items())
-    ])
-    scattered = (per_cell.withColumn("_o", F.explode(offs))
-                 .select(((F.col("cell_y") + F.col("_o.dy")) * D.LON_CELL_STRIDE
-                          + (F.col("cell_x") + F.col("_o.dx"))).alias("target_cell"),
-                         (F.col("_o.w") * F.col("s")).alias("ws"),
-                         (F.col("_o.w") * F.col("n")).alias("wn"),
-                         F.col("_o.sf").alias("_self")))
+    per_cell = _cell_mean(df, value)
+    scattered = (scatter(per_cell, [(dx, dy, w) for (dx, dy), w
+                                    in sorted(kernel.items())], ("w",))
+                 .select("target_cell", (F.col("w") * F.col("s")).alias("ws"),
+                         (F.col("w") * F.col("n")).alias("wn"), "_self"))
     out = scattered.groupBy("target_cell").agg(
         F.sum("ws").alias("conv_sum"), F.sum("wn").alias("conv_wsum"),
         F.max("_self").alias("_occ"))
@@ -175,30 +166,19 @@ def interp_shifted(df: DataFrame, value: str, dx_cells: float,
         (fx, fy + 1): (1 - ax) * ay,
         (fx + 1, fy + 1): ax * ay,
     }
-    per_cell = df.groupBy("cell", "cell_x", "cell_y").agg(
-        F.avg(F.col(value).cast("double")).alias("v"))
-    # gather formulation: target cell c samples source cells c + offset
-    parts = []
-    for (ox, oy), w in sorted(weights.items()):
-        if w == 0.0:
-            continue
-        src = per_cell.select(
-            ((F.col("cell_y") - oy) * D.LON_CELL_STRIDE
-             + (F.col("cell_x") - ox)).alias("cell"),
-            (F.lit(w) * F.col("v")).alias("wv"),
-            F.lit(w).alias("w"))
-        parts.append(src)
-    gathered = parts[0]
-    for p in parts[1:]:
-        gathered = gathered.unionByName(p)
-    agg = gathered.groupBy("cell").agg(
-        F.sum("wv").alias("wv"), F.sum("w").alias("wsum"),
-        F.count(F.lit(1)).alias("ncontrib"))
+    per_cell = _cell_mean(df, value)
+    # target cell c samples source cells c + offset: scatter each source
+    # to the negated offsets
+    taps = [(-ox, -oy, w) for (ox, oy), w in sorted(weights.items())
+            if w != 0.0]
+    agg = (scatter(per_cell, taps, ("w",))
+           .groupBy(F.col("target_cell").alias("cell"))
+           .agg(F.sum(F.col("w") * F.col("v")).alias("wv"),
+                F.count(F.lit(1)).alias("ncontrib")))
     occ = per_cell.select("cell")
-    need = sum(1 for w in weights.values() if w != 0.0)
     return (agg.join(occ, "cell")
             .select("cell",
-                    F.when(F.col("ncontrib") == need, F.col("wv"))
+                    F.when(F.col("ncontrib") == len(taps), F.col("wv"))
                      .otherwise(F.lit(None)).alias("v_shifted")))
 
 
@@ -215,23 +195,11 @@ def central_gradient(df: DataFrame, value: str) -> DataFrame:
     partial agg), conditional-agg gather, join back to occupied — no
     N-way self-join, partial aggregation map-side combines.
     Output: (cell, gx, gy, grade)."""
-    per_cell = df.groupBy("cell", "cell_x", "cell_y").agg(
-        F.sum(F.col(value).cast("double")).alias("s"),
-        F.count(value).alias("n"))
-    per_cell = per_cell.withColumn("v", F.col("s") / F.col("n"))
-    dirs = [("vl", 1, 0), ("vr", -1, 0), ("vd", 0, 1), ("vu", 0, -1)]
-    arr = F.array(*[
-        F.struct(F.lit(r).alias("role"), F.lit(dx).alias("dx"),
-                 F.lit(dy).alias("dy"))
-        for r, dx, dy in dirs
-    ])
-    scattered = (per_cell.withColumn("_o", F.explode(arr))
-                 .select(((F.col("cell_y") + F.col("_o.dy")) * D.LON_CELL_STRIDE
-                          + (F.col("cell_x") + F.col("_o.dx"))).alias("target_cell"),
-                         F.col("_o.role").alias("role"), "v"))
-    gathered = scattered.groupBy("target_cell").agg(
+    per_cell = _cell_mean(df, value)
+    dirs = [(1, 0, "vl"), (-1, 0, "vr"), (0, 1, "vd"), (0, -1, "vu")]
+    gathered = scatter(per_cell, dirs, ("role",)).groupBy("target_cell").agg(
         *[F.max(F.when(F.col("role") == r, F.col("v"))).alias(r)
-          for r, _, _ in dirs])
+          for _, _, r in dirs])
     occ = per_cell.select(F.col("cell").alias("target_cell"))
     gx = (F.col("vr") - F.col("vl")) / 2.0
     gy = (F.col("vu") - F.col("vd")) / 2.0
@@ -239,6 +207,35 @@ def central_gradient(df: DataFrame, value: str) -> DataFrame:
             .select(F.col("target_cell").alias("cell"),
                     gx.alias("gx"), gy.alias("gy"),
                     F.sqrt(gx * gx + gy * gy).alias("grade")))
+
+
+def _separable_downsample(df: DataFrame, value: str, factor: int,
+                          taps: dict[int, float], out: str) -> DataFrame:
+    """In-block separable-tap down-resample: target t = the block of
+    `factor` source cells per axis, sampled from the source mean-value
+    field by the taps {position within the block: weight} on each axis.
+    One filter + one groupBy (every tap lies inside the target's own
+    block, so no neighbor-block shuffle); targets missing any of the
+    len(taps)^2 taps -> NULL (NaN propagation)."""
+    def w(col):
+        e = F.lit(None).cast("double")
+        for p, wt in taps.items():
+            e = F.when(col == p, F.lit(wt)).otherwise(e)
+        return e
+
+    per_cell = _cell_mean(df, value)
+    tx = F.floor(F.col("cell_x") / factor)
+    ty = F.floor(F.col("cell_y") / factor)
+    px, py = F.col("cell_x") % factor, F.col("cell_y") % factor
+    contrib = (per_cell.where(px.isin(list(taps)) & py.isin(list(taps)))
+               .groupBy(tx.alias("tx"), ty.alias("ty"))
+               .agg(F.sum(w(px) * w(py) * F.col("v")).alias("sv"),
+                    F.count(F.lit(1)).alias("ntap")))
+    targets = per_cell.select(tx.alias("tx"), ty.alias("ty")).distinct()
+    joined = targets.join(contrib, ["tx", "ty"], "left")
+    return joined.select(
+        (F.col("ty") * D.LON_CELL_STRIDE + F.col("tx")).alias("cell"),
+        F.when(F.col("ntap") == len(taps) ** 2, F.col("sv")).alias(out))
 
 
 def bilinear_downsample(df: DataFrame, value: str, factor: int = 4) -> DataFrame:
@@ -251,28 +248,14 @@ def bilinear_downsample(df: DataFrame, value: str, factor: int = 4) -> DataFrame
     Target cell t samples the source mean-value field at source coordinate
     factor*t + (factor-1)/2; for even factors that is midway between the two
     central source cells per axis — a genuine 4-tap bilinear with weights
-    1/4. Targets missing any tap -> NULL (NaN propagation). Implemented as
-    filter + single groupBy (the 4 taps of a target are exactly the source
-    cells with coord % factor in {factor/2-1, factor/2}).
+    1/4: the source cells with coord % factor in {factor/2-1, factor/2},
+    0.5 per axis (sum(0.25*v) == sum(v)/4 bit for bit — scaling by a
+    power of two is exact). Targets missing any tap -> NULL.
     Output: (cell = packed target id, z_resized)."""
     assert factor % 2 == 0 and factor >= 2
     half = factor // 2
-    per_cell = df.groupBy("cell", "cell_x", "cell_y").agg(
-        F.sum(F.col(value).cast("double")).alias("s"),
-        F.count(value).alias("n"))
-    per_cell = per_cell.withColumn("v", F.col("s") / F.col("n"))
-    tx = F.floor(F.col("cell_x") / factor)
-    ty = F.floor(F.col("cell_y") / factor)
-    taps = per_cell.where(
-        (F.col("cell_x") % factor).isin(half - 1, half)
-        & (F.col("cell_y") % factor).isin(half - 1, half))
-    contrib = taps.groupBy(tx.alias("tx"), ty.alias("ty")).agg(
-        F.sum("v").alias("sv"), F.count(F.lit(1)).alias("ntap"))
-    targets = per_cell.select(tx.alias("tx"), ty.alias("ty")).distinct()
-    out = targets.join(contrib, ["tx", "ty"], "left")
-    return out.select(
-        (F.col("ty") * D.LON_CELL_STRIDE + F.col("tx")).alias("cell"),
-        F.when(F.col("ntap") == 4, F.col("sv") / 4.0).alias("z_resized"))
+    return _separable_downsample(df, value, factor,
+                                 {half - 1: 0.5, half: 0.5}, "z_resized")
 
 
 def bicubic_downsample(df: DataFrame, value: str, factor: int = 4) -> DataFrame:
@@ -293,31 +276,9 @@ def bicubic_downsample(df: DataFrame, value: str, factor: int = 4) -> DataFrame:
     assert factor % 2 == 0 and factor >= 4, \
         "factor 2 taps cross block boundaries; factor >= 4 keeps one groupBy"
     half = factor // 2
-    positions = [half - 2, half - 1, half, half + 1]
-    weights = [-0.0625, 0.5625, 0.5625, -0.0625]
-
-    def w(col):
-        e = F.lit(None).cast("double")
-        for p, wt in zip(positions, weights):
-            e = F.when(col == p, F.lit(wt)).otherwise(e)
-        return e
-
-    per_cell = df.groupBy("cell", "cell_x", "cell_y").agg(
-        F.sum(F.col(value).cast("double")).alias("s"),
-        F.count(value).alias("n"))
-    per_cell = per_cell.withColumn("v", F.col("s") / F.col("n"))
-    tx = F.floor(F.col("cell_x") / factor)
-    ty = F.floor(F.col("cell_y") / factor)
-    px, py = F.col("cell_x") % factor, F.col("cell_y") % factor
-    taps = per_cell.where(px.isin(positions) & py.isin(positions))
-    contrib = taps.groupBy(tx.alias("tx"), ty.alias("ty")).agg(
-        F.sum(w(px) * w(py) * F.col("v")).alias("sv"),
-        F.count(F.lit(1)).alias("ntap"))
-    targets = per_cell.select(tx.alias("tx"), ty.alias("ty")).distinct()
-    out = targets.join(contrib, ["tx", "ty"], "left")
-    return out.select(
-        (F.col("ty") * D.LON_CELL_STRIDE + F.col("tx")).alias("cell"),
-        F.when(F.col("ntap") == 16, F.col("sv")).alias("z_bicubic"))
+    return _separable_downsample(
+        df, value, factor, {half - 2: -0.0625, half - 1: 0.5625,
+                            half: 0.5625, half + 1: -0.0625}, "z_bicubic")
 
 
 def lanczos3_downsample(df: DataFrame, value: str, factor: int = 4) -> DataFrame:
@@ -349,10 +310,7 @@ def lanczos3_downsample(df: DataFrame, value: str, factor: int = 4) -> DataFrame
     assert factor % 2 == 0 and factor >= 4, \
         "factor < 4 needs |dt| > 1 scatter reach"
     half_off = (factor - 1) / 2.0  # sample point within the target block
-    per_cell = df.groupBy("cell", "cell_x", "cell_y").agg(
-        F.sum(F.col(value).cast("double")).alias("s"),
-        F.count(value).alias("n"))
-    per_cell = per_cell.withColumn("v", F.col("s") / F.col("n"))
+    per_cell = _cell_mean(df, value)
     dts = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
     sc = (per_cell.withColumn("_d", F.explode(dts))
@@ -389,7 +347,7 @@ def ring_entropy(df: DataFrame, category: str = "lang", ring: int = 1) -> DataFr
     are the final log2s — deterministic under any partitioning."""
     per_cell_cat = df.groupBy("cell", "cell_x", "cell_y", category).agg(
         F.count(F.lit(1)).alias("n"))
-    scattered = _scatter_to_ring(per_cell_cat, ring)
+    scattered = scatter(per_cell_cat, ring_offsets(ring))
     ring_cat = scattered.groupBy("target_cell", category).agg(
         F.sum("n").alias("n"), F.max("_self").alias("_s"))
     # entropy = log2(N) - sum(n*log2(n))/N  (exact-integer form); the

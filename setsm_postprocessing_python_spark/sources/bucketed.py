@@ -43,26 +43,15 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.knn import BLOCK_SHIFT, block_expr
 from ..record import data_files, read_record, remove_unlisted, write_record
-from ..sql import dialect as D
 from .pages import BUCKETED_SFDIR_CONF, BUCKETED_TABLE_CONF, geocoded_pages
-
-BLOCK_SHIFT = 6  # matches operators/knn.BLOCK_SHIFT (64x64-cell blocks)
 
 # layout-job completion marker (the `record.py` commit record applied to
 # the layout write, reference batch_scenes2strips.py:1190-1203): present =
 # the files under the table path are a COMPLETE bucketed write for the
 # recorded corpus/grain; absent = remove-incomplete and rewrite
 LAYOUT_MARKER = "_LAYOUT_READY"
-
-
-def block_expr(block_shift: int = BLOCK_SHIFT):
-    """The packed join-block id, identical to the expression
-    knn_join_blocked derives at query time (same stride, so a stored
-    `block` column and a query-time one agree bit-for-bit)."""
-    stride = (D.LON_CELL_STRIDE >> block_shift) + 1
-    return (F.shiftright("cell_y", block_shift) * stride
-            + F.shiftright("cell_x", block_shift))
 
 
 def blocked_pages(spark: SparkSession, sf_dir: str,

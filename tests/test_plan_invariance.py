@@ -8,6 +8,7 @@ import pytest
 
 from setsm_postprocessing_python_spark.plans import queries as Q
 from setsm_postprocessing_python_spark.plans import queries_ext as QE
+from setsm_postprocessing_python_spark.plans import queries_ref as QR
 from setsm_postprocessing_python_spark.session import cache_scope
 
 from .conftest import SF_TINY
@@ -28,6 +29,15 @@ QUERIES = {
     "q_knn": Q.q_knn,
     "q_ring_density": Q.q_ring_density,
     "q_adaptive_tiles": QE.q_adaptive_tiles,
+    # the cell-offset scatter family
+    "q_ring_stats": QE.q_ring_stats,
+    "q_conv2": QR.q_conv2,
+    "q_slope": QR.q_slope,
+    "q_interp_shift": QR.q_interp_shift,
+    "q_morphology": QR.q_morphology,
+    "q_resize_bilinear": QR.q_resize_bilinear,
+    "q_water_compose": QR.q_water_compose,
+    "q_bwareaopen": QE.q_bwareaopen,
 }
 
 

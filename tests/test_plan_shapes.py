@@ -61,6 +61,31 @@ def test_ring_density_is_join_free(spark):
     assert "Join" not in plan
 
 
+# Exchange count of every query built on the cell-offset scatter
+# (neighborhood.scatter) and of the kNN queries sharing its block rule and
+# top-k tail: a refactor that adds a shuffle fails here. q_interp_shift
+# is one explode over the negated offsets (3 Exchanges; the former union
+# of four selects planned 6).
+KERNEL_EXCHANGES = {
+    "q_ring_density": 1, "q_ring_stats": 5, "q_conv2": 2, "q_slope": 3,
+    "q_interp_shift": 3, "q_morphology": 6, "q_resize_bilinear": 9,
+    "q_water_compose": 6, "q_bwareaopen": 2, "q_fill_holes": 4,
+    "q_knn": 1, "q_hex_knn": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(KERNEL_EXCHANGES))
+def test_kernel_exchange_count(spark, name):
+    from setsm_postprocessing_python_spark.plans import queries as Q
+    from setsm_postprocessing_python_spark.plans import queries_ext as QE
+    from setsm_postprocessing_python_spark.plans import queries_ref as QR
+    from setsm_postprocessing_python_spark.session import cache_scope
+
+    query = next(getattr(m, name) for m in (Q, QE, QR) if hasattr(m, name))
+    with cache_scope():
+        assert n_exchanges(query(spark, SF)) == KERNEL_EXCHANGES[name]
+
+
 def test_slope_partial_aggregation(spark):
     """central_gradient: one scatter + conditional-agg gather; the partial
     HashAggregate must precede the Exchange (map-side combine)."""
