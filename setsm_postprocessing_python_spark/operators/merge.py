@@ -196,17 +196,11 @@ def _coregister(key, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
     LSQ on [1, x, y], <=5 iters, stop when RMSE stops improving by >1e-3,
     fail -> median fallback; offset cap 15 -> 'failed' status.
 
-    Input frames carry PER-BLOCK PARTIALS (zsum, n), not raw rows — the
-    map-side combine in coregister_pairs means the cogroup task receives
-    O(blocks) rows per pair no matter how many pages each block holds
-    (raw rows into the fit task was the wrong shape at 10^12 rows). The
-    per-block mean is zsum/n; zsum arrives as EXACT decimal (order-
-    independent Spark sum — float partial sums merge in shuffle-fetch
-    order, which would wobble the means at the ulp and could flip the
-    3-sigma / RMSE-early-stop thresholds run-to-run), so the fit is
-    bit-deterministic given the input rows. Every output row carries the
-    cogroup KEY as `pair` — downstream never re-derives it from group
-    labels (a side-less pair would mis-key)."""
+    Input frames carry the PER-BLOCK PARTIALS of _side_blocks (exact
+    decimal zsum, n), not raw rows; the per-block mean is zsum/n, so the
+    fit is bit-deterministic given the input rows. Every output row
+    carries the cogroup KEY as `pair` — downstream never re-derives it
+    from group labels (a side-less pair would mis-key)."""
     # min(), not iloc[0]: Arrow row-delivery order into the cogroup task is
     # not deterministic for multi-group sides (the 'super' pairing), and the
     # label must not wobble run-to-run
@@ -223,12 +217,15 @@ def _coregister(key, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
                        / b["n_b"].to_numpy()},
                       index=b["block_b"])
     m = za.join(zb, how="inner", lsuffix="_a", rsuffix="_b")
-    empty = pd.DataFrame([{
-        "pair": pair, "group_a": ga, "group_b": gb, "n_points": int(len(m)),
-        "iters": 0, "dz": np.nan, "dx": np.nan, "dy": np.nan,
-        "rmse": np.nan, "status": "no_overlap"}])
+
+    def fit_row(status, iters=0, dz=np.nan, dx=np.nan, dy=np.nan,
+                rmse=np.nan):
+        return pd.DataFrame([{
+            "pair": pair, "group_a": ga, "group_b": gb,
+            "n_points": int(len(m)), "iters": iters,
+            "dz": dz, "dx": dx, "dy": dy, "rmse": rmse, "status": status}])
     if len(m) < 10:  # >=10 regression points gate (lib/scenes2strips.py:823)
-        return empty
+        return fit_row("no_overlap")
     dz = (m["z_b"] - m["z_a"]).to_numpy()
     x = m["x"].to_numpy(dtype=float)
     y = m["y"].to_numpy(dtype=float)
@@ -240,7 +237,7 @@ def _coregister(key, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
         med, sd = np.median(dz), np.std(dz)
         keep = np.abs(dz - med) <= 3 * sd + 1e-12
         if keep.sum() < 10:
-            return empty.assign(status="too_few_inliers", iters=iters)
+            return fit_row("too_few_inliers", iters)
         A = np.column_stack([np.ones(keep.sum()), x[keep], y[keep]])
         sol, *_ = np.linalg.lstsq(A, dz[keep], rcond=None)
         resid = dz[keep] - A @ sol
@@ -251,91 +248,92 @@ def _coregister(key, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
         params = sol
     if max(abs(params[1]), abs(params[2])) > COREG_MAX_OFFSET:
         # max-offset fallback: median dz only (reference fallback behavior)
-        return pd.DataFrame([{
-            "pair": pair, "group_a": ga, "group_b": gb,
-            "n_points": int(len(m)), "iters": iters,
-            "dz": float(np.median(dz)), "dx": 0.0, "dy": 0.0,
-            "rmse": best_rmse, "status": "offset_capped"}])
-    return pd.DataFrame([{
-        "pair": pair, "group_a": ga, "group_b": gb,
-        "n_points": int(len(m)), "iters": iters,
-        "dz": float(params[0]), "dx": float(params[1]), "dy": float(params[2]),
-        "rmse": best_rmse, "status": "ok"}])
+        return fit_row("offset_capped", iters, float(np.median(dz)), 0.0,
+                       0.0, best_rmse)
+    return fit_row("ok", iters, float(params[0]), float(params[1]),
+                   float(params[2]), best_rmse)
 
 
-def _host_parity():
-    return F.expr("pmod(cast(substring(group_id, 5) as int), 2)")
+# ---------------------------------------------------------------------------
+# the pairing rule and the side-block aggregate every fit reads
+# ---------------------------------------------------------------------------
+
+def host_number(col):
+    """The one pairing rule: host<N> -> N. host{2i} (side 0, the mosaic
+    side) pairs with host{2i+1} (side 1, the incoming side) as pair i.
+    The cast is ANSI, so a group_id that is not host<N> raises
+    CAST_INVALID_INPUT instead of landing in a made-up pair."""
+    return F.substr(col, F.lit(5)).cast("int")
 
 
-def coregister_pairs(df: DataFrame, pair_of,
-                     guess: DataFrame | None = None,
-                     side_of=None) -> DataFrame:
-    """Cogrouped coregistration: pair_of(group_id_col) -> pair key expr.
-    df needs (group_id, url, lat, lon, cell_x, cell_y). Adds z + coarse
-    blocks, cogroups the two sides of each pair, fits the alignment.
+def host_side(col):
+    return F.pmod(host_number(col), F.lit(2))
 
-    guess: a prior coregister_pairs output (the reference's trans_guess
-    with hold_guess=HOLD_GUESS_ALL, lib/scenes2strips.py:516-519 /
-    batch_scenes2strips.py:1419-1428): pairs present in `guess` are NOT
-    re-fit — their rows pass through verbatim — and only the remaining
-    pairs run the cogrouped fit. The guess table is per-pair tiny, so the
-    anti-join broadcasts.
 
-    side_of: expression for the 0/1 side of a row within its pair
-    (default: host-number parity)."""
-    if side_of is None:
-        side_of = _host_parity
-    rows = df.select(
-        pair_of(F.col("group_id")).alias("pair"),
-        side_of().alias("side"),
-        "group_id",
-        F.expr(D.z_expr(D.SPARK)).alias("z"),
-        F.expr(D.block_x_expr(D.SPARK)).alias("bx"),
-        F.expr(D.block_y_expr(D.SPARK)).alias("by"),
-        F.expr(D.block_id_expr(D.SPARK)).alias("block"))
-    # PER-BLOCK partials before the cogroup: the fit consumes block means,
-    # so the shuffle into the fit task carries one row per (pair, side,
-    # block) — map-side combine applies, and pair-task input is O(blocks)
-    # regardless of pages per block (the 10^12-row shape)
-    # zsum as DECIMAL: exact, therefore order-independent across partial-
-    # sum merge order — the per-block means (and so the thresholded fit)
-    # are bit-deterministic run-to-run; 18 integer digits cannot overflow
-    # (z < 100, 10^16 rows per block), 12 fractional digits carry z to
-    # well past float53 noise
-    base = rows.groupBy("pair", "side", "block").agg(
-        F.min("group_id").alias("group_id"),
-        F.sum(F.col("z").cast("decimal(30,12)")).alias("zsum"),
-        F.count(F.lit(1)).alias("n"),
-        F.first("bx").alias("bx"), F.first("by").alias("by"))
-    if guess is not None:
-        held_pairs = guess.select("pair").distinct()
-        base = base.join(F.broadcast(held_pairs), "pair", "left_anti")
-    side_a = base.where("side = 0").drop("side")
-    # NB: the right side's columns are renamed — with identical attribute
-    # names from shared lineage, Catalyst prunes the right cogroup frame
-    # down to the key column (observed on Spark 4.1; see tests); the KEY
-    # is renamed too, or the ambiguous-self-join check trips once the
-    # guess anti-join re-uses base's attributes on both cogroup sides
-    side_b = (base.where("side = 1")
-              .select(F.col("pair").alias("pair_b"),
-                      F.col("group_id").alias("group_id_b"),
-                      F.col("zsum").alias("zsum_b"), F.col("n").alias("n_b"),
-                      F.col("block").alias("block_b")))
-    fitted = (side_a.groupBy("pair")
-              .cogroup(side_b.groupBy("pair_b"))
-              .applyInPandas(_coregister, COREG_SCHEMA))
-    if guess is not None:
-        fitted = fitted.unionByName(guess.select(
-            "pair", "group_a", "group_b", "n_points", "iters",
-            "dz", "dx", "dy", "rmse", "status"))
-    return fitted
+def pair_number(col):
+    return F.floor(host_number(col) / 2)
 
 
 def host_pair(col):
-    """Pair host{2i} with host{2i+1} (the strip-pair analogue)."""
-    return F.concat(
-        F.lit("pair"),
-        F.floor(F.substring(col, 5, 16).cast("int") / 2).cast("bigint").cast("string"))
+    """'pair<i>' for host{2i} and host{2i+1} (the strip-pair analogue)."""
+    return F.concat(F.lit("pair"), pair_number(col).cast("string"))
+
+
+def _side_blocks(df: DataFrame, pair_of, *aggs) -> DataFrame:
+    """One row per (pair, bx, by, side) with its page count `n` and `aggs`
+    — the block-grain pre-aggregate the fit (with _fit_aggs) and
+    strip_assemble's blend read: map-side combine applies, so a fit task
+    receives O(blocks) rows per pair however many pages each block holds
+    (the 10^12-row shape). One select, not a withColumn chain: each
+    transformation re-analyzes the whole plan driver-side."""
+    derived = ("z", "bx", "by", "pair", "side")
+    base = df.select(
+        *[c for c in df.columns if c not in derived],
+        F.expr(D.z_expr(D.SPARK)).alias("z"),
+        F.expr(D.block_x_expr(D.SPARK)).alias("bx"),
+        F.expr(D.block_y_expr(D.SPARK)).alias("by"),
+        pair_of(F.col("group_id")).alias("pair"),
+        host_side(F.col("group_id")).alias("side"))
+    return base.groupBy("pair", "bx", "by", "side").agg(
+        F.count(F.lit(1)).alias("n"), *aggs)
+
+
+def _fit_aggs():
+    """The group label (group_a / group_b) and the EXACT decimal z sum
+    _fit reads. The decimal sum is order-independent across partial-sum
+    merge order, so the per-block means (and the thresholded fit) are
+    bit-deterministic run-to-run; 18 integer digits cannot overflow
+    (z < 100, 10^16 rows per block), 12 fractional digits carry z well
+    past float53 noise. min(group_id) plans a sort-based aggregate, so
+    only a fit asks."""
+    return (F.min("group_id").alias("group_id"),
+            F.sum(F.col("z").cast("decimal(30,12)")).alias("zsum"))
+
+
+def _fit(agg: DataFrame) -> DataFrame:
+    """The cogrouped fit over a _side_blocks aggregate: one row per pair
+    with any page. block = by * 64 + bx is block_id_expr's packing, which
+    is injective on the block grid (bx < 18, by < 9 at 200 cells per
+    degree), so (bx, by) keys equal block keys. Side B's columns, the key
+    included, are renamed: with identical attribute names from shared
+    lineage, Catalyst prunes the right cogroup frame down to the key
+    column (observed on Spark 4.1; see tests)."""
+    blk = F.col("by") * 64 + F.col("bx")
+    side_a = agg.where("side = 0").select(
+        "pair", "group_id", "zsum", "n", "bx", "by", blk.alias("block"))
+    side_b = agg.where("side = 1").select(
+        F.col("pair").alias("pair_b"), F.col("group_id").alias("group_id_b"),
+        F.col("zsum").alias("zsum_b"), F.col("n").alias("n_b"),
+        blk.alias("block_b"))
+    return (side_a.groupBy("pair").cogroup(side_b.groupBy("pair_b"))
+            .applyInPandas(_coregister, COREG_SCHEMA))
+
+
+def coregister_pairs(df: DataFrame, pair_of) -> DataFrame:
+    """Cogrouped coregistration: pair_of(group_id_col) -> pair key expr.
+    df needs (group_id, url, cell_x, cell_y); one COREG_SCHEMA row per
+    pair."""
+    return _fit(_side_blocks(df, pair_of, *_fit_aggs()))
 
 
 # ---------------------------------------------------------------------------
@@ -416,15 +414,12 @@ def feather_weight_field(df: DataFrame) -> DataFrame:
     (cogrouped applyInPandas — SURVEY §2.10 UDF #5). Output:
     (pair, block, w) with w in [0,1], 1 deep on the A side of the overlap,
     0 deep on the B side, smoothly interpolated between boundaries."""
-    base = (df.withColumn("bx", F.expr(D.block_x_expr(D.SPARK)))
-              .withColumn("by", F.expr(D.block_y_expr(D.SPARK)))
-              .withColumn("hostnum", F.expr("cast(substring(group_id, 5) as int)"))
-              .withColumn("pair", F.expr(
-                  "concat('pair', cast(floor(cast(substring(group_id, 5) as int) / 2)"
-                  " as string))")))
-    side_a = (base.where("pmod(hostnum, 2) = 0")
-              .select("pair", "bx", "by").distinct())
-    side_b = (base.where("pmod(hostnum, 2) = 1")
+    base = df.select(host_pair(F.col("group_id")).alias("pair"),
+                     host_side(F.col("group_id")).alias("side"),
+                     F.expr(D.block_x_expr(D.SPARK)).alias("bx"),
+                     F.expr(D.block_y_expr(D.SPARK)).alias("by"))
+    side_a = base.where("side = 0").select("pair", "bx", "by").distinct()
+    side_b = (base.where("side = 1")
               .select("pair", F.col("bx").alias("bx_b"),
                       F.col("by").alias("by_b")).distinct())
     return (side_a.groupBy("pair")
@@ -436,6 +431,23 @@ def feather_weight_field(df: DataFrame) -> DataFrame:
 # feather blend (oracle-checkable DataFrame algebra)
 # ---------------------------------------------------------------------------
 
+def _feathered(j: DataFrame, overlap):
+    """(j joined to its pair's span, the feather weight): the reference's
+    linear weight across the pair's overlap x-span, rescaled
+    clip((w - 0.25) / (0.55 - 0.25), 0, 1) (lib/scenes2strips.py:461-476).
+    The span is a per-pair min/max over the `overlap` rows broadcast back
+    onto j — not a Window.partitionBy(pair), which at the 'super' grain
+    sorts every row in ONE task. A pair with no overlap row gets a NULL
+    span, hence a NULL weight."""
+    spans = j.where(overlap).groupBy("pair").agg(
+        F.min("bx").alias("_bx0"), F.max("bx").alias("_bx1"))
+    raw = (F.col("bx") - F.col("_bx0")).cast("double") / \
+        F.greatest((F.col("_bx1") - F.col("_bx0")).cast("double"), F.lit(1.0))
+    return (j.join(F.broadcast(spans), "pair", "left"),
+            F.least(F.greatest((raw - 0.25) / (0.55 - 0.25), F.lit(0.0)),
+                    F.lit(1.0)))
+
+
 def feather_blend(df: DataFrame) -> DataFrame:
     """Blend the two sides of each host pair over shared coarse blocks with
     a linear feather weight across the overlap's x-span, rescaled
@@ -446,38 +458,27 @@ def feather_blend(df: DataFrame) -> DataFrame:
     ONE groupBy(pair, block) with side-conditional aggregates — the former
     side-split self-join computed the aggregation subtree twice (no
     exchange reuse across the aliased sides) and sort-merge-joined the
-    halves back (guide §2.4). The overlap x-span is a per-pair min/max
-    aggregate broadcast back onto the blocks — not a Window over all
-    blended rows, so no single-partition sort task exists at any grain
-    (the skew foot-gun VERDICT r6 flagged on the assembly path). The
-    per-(pair, block) table is cached (it is read by the span agg and
+    halves back (guide §2.4). The weight is _feathered's span weight.
+    The per-(pair, block) table is cached (it is read by the span agg and
     the final projection; it is block-grid bounded, i.e. tiny)."""
-    derived = ("z", "bx", "block", "hostnum", "pair")
+    derived = ("z", "bx", "block", "side", "pair")
     base = df.select(
         *[c for c in df.columns if c not in derived],
         F.expr(D.z_expr(D.SPARK)).alias("z"),
         F.expr(D.block_x_expr(D.SPARK)).alias("bx"),
         F.expr(D.block_id_expr(D.SPARK)).alias("block"),
-        F.expr("cast(substring(group_id, 5) as int)").alias("hostnum"),
-        F.expr("cast(floor(cast(substring(group_id, 5) as int) / 2) as bigint)")
-         .alias("pair"))
-    side = F.col("hostnum") % 2
+        host_side(F.col("group_id")).alias("side"),
+        pair_number(F.col("group_id")).alias("pair"))
+    in_a, in_b = F.col("side") == 0, F.col("side") == 1
     j = cached(base.groupBy("pair", "block", "bx").agg(
-            F.sum(F.when(side == 0, F.col("z"))).alias("sza"),
-            F.count(F.when(side == 0, F.lit(1))).alias("na"),
-            F.expr("bit_or(CASE WHEN hostnum % 2 = 0 THEN flags END)")
-             .alias("fla"),
-            F.sum(F.when(side == 1, F.col("z"))).alias("szb"),
-            F.count(F.when(side == 1, F.lit(1))).alias("nb"),
-            F.expr("bit_or(CASE WHEN hostnum % 2 = 1 THEN flags END)")
-             .alias("flb"))
+            F.sum(F.when(in_a, F.col("z"))).alias("sza"),
+            F.count(F.when(in_a, F.lit(1))).alias("na"),
+            F.bit_or(F.when(in_a, F.col("flags"))).alias("fla"),
+            F.sum(F.when(in_b, F.col("z"))).alias("szb"),
+            F.count(F.when(in_b, F.lit(1))).alias("nb"),
+            F.bit_or(F.when(in_b, F.col("flags"))).alias("flb"))
          .where((F.col("na") > 0) & (F.col("nb") > 0)))
-    spans = j.groupBy("pair").agg(F.min("bx").alias("_bx0"),
-                                  F.max("bx").alias("_bx1"))
-    j = j.join(F.broadcast(spans), "pair")
-    raw = (F.col("bx") - F.col("_bx0")).cast("double") / \
-          F.greatest((F.col("_bx1") - F.col("_bx0")).cast("double"), F.lit(1.0))
-    wgt = F.least(F.greatest((raw - 0.25) / (0.55 - 0.25), F.lit(0.0)), F.lit(1.0))
+    j, wgt = _feathered(j, F.lit(True))
     return j.select(
         "pair", "block",
         wgt.alias("w"),
@@ -512,11 +513,11 @@ def _corners():
 
 def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
                    max_rmse: float = STRIP_MAX_COREG_RMSE,
-                   pair_of=host_pair, side_of=None) -> DataFrame:
+                   pair_of=host_pair) -> DataFrame:
     """The full scenes2strips assembly (lib/scenes2strips.py:570-692),
     composed at the coarse-block grain:
 
-    1. coregister_pairs fits (dz, dx, dy) per host pair (pass `coreg` —
+    1. the coregister_pairs fit of (dz, dx, dy) per pair (pass `coreg` —
        e.g. read back from the manifest — to hold prior translations,
        the pass-2 trans_guess/HOLD_GUESS_ALL path,
        batch_scenes2strips.py:1419-1428).
@@ -538,7 +539,7 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
     bilinear shift is a 4-entry JVM explode (no UDF beyond the coreg fit);
     the blend is one co-partitioned full-outer join per pair/block.
 
-    pair_of / side_of: pairing grain (default host pairs; the registered
+    pair_of: pairing grain (default host pairs; the registered
     driver-scale query pairs even vs odd hosts in ONE pair so the >=10-
     shared-block fit gate is satisfiable at 500 rows — same rationale as
     the coarse kNN cells).
@@ -549,60 +550,20 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
 
     Output: (pair, bx, by, block, src, w, z_strip, n_pages, matchtag,
     flags_merged, segment_break)."""
-    if side_of is None:
-        side_of = _host_parity
     # when the fit runs internally over the SAME df, the cogroup emits a
     # row for every pair that has any page (either side), so the
     # missing-pair safety union below is provably empty — skip its
     # distinct+anti-join jobs; a CALLER-supplied coreg table (pass-2 hold,
     # possibly stale) always goes through the full check
     internal_fit = coreg is None
-
-    # one select, not a withColumn chain: every DataFrame transformation
-    # re-analyzes the whole plan eagerly driver-side, and this operator is
-    # built twice per registered query — batching the derivations cuts the
-    # per-invocation py4j/analysis cost (guide §1.2 step 2: per-task work
-    # includes the driver's plan work for second-long stages)
-    derived = ("z", "bx", "by", "pair")
-    base = df.select(
-        *[c for c in df.columns if c not in derived],
-        F.expr(D.z_expr(D.SPARK)).alias("z"),
-        F.expr(D.block_x_expr(D.SPARK)).alias("bx"),
-        F.expr(D.block_y_expr(D.SPARK)).alias("by"),
-        pair_of(F.col("group_id")).alias("pair"))
-    # ONE combined aggregate serves BOTH the coregistration fit and the
-    # blend (round 7): the former shape scanned df and shuffled twice —
-    # once for the blend partials here and once inside coregister_pairs
-    # for the fit's per-block means — over the identical
-    # (pair, side, block) key set (guide §1.2: remove redundant passes).
-    # When the fit is internal, zsum rides along as the exact decimal the
-    # fit needs for bit-determinism (same expression as coregister_pairs)
-    # and min(group_id) labels the sides. Persisted: referenced by the
-    # fit's two cogroup sides and the blend's two sides; rows are per
-    # (pair, block, side), block-grid bounded.
-    agg = cached(base.groupBy("pair", "bx", "by", side_of().alias("side")).agg(
-        F.sum("z").alias("sz"), F.count(F.lit(1)).alias("n"),
-        F.expr("bit_or(flags)").alias("fl"),
-        *([F.min("group_id").alias("group_id"),
-           F.sum(F.col("z").cast("decimal(30,12)")).alias("zsum")]
-          if internal_fit else [])))
+    # ONE side-block aggregate serves BOTH the fit and the blend: df is
+    # scanned and shuffled once. Persisted: the fit's two cogroup sides
+    # and the blend's two sides read it; rows are block-grid bounded.
+    agg = cached(_side_blocks(
+        df, pair_of, F.sum("z").alias("sz"), F.bit_or("flags").alias("fl"),
+        *(_fit_aggs() if internal_fit else ())))
     if internal_fit:
-        # the cogrouped fit consumes exactly the rows coregister_pairs'
-        # internal (pair, side, block) aggregation would have produced:
-        # block = block_id_expr = by * 64 + bx, zsum exact decimal,
-        # min(group_id) per group — so the fitted output is identical
-        # (pinned by the live q_coregister/q_strip_assembly oracles)
-        blk = (F.col("by") * 64 + F.col("bx"))
-        fit_a = agg.where("side = 0").select(
-            "pair", "group_id", "zsum", "n", "bx", "by", blk.alias("block"))
-        fit_b = agg.where("side = 1").select(
-            F.col("pair").alias("pair_b"),
-            F.col("group_id").alias("group_id_b"),
-            F.col("zsum").alias("zsum_b"), F.col("n").alias("n_b"),
-            blk.alias("block_b"))
-        coreg = (fit_a.groupBy("pair")
-                 .cogroup(fit_b.groupBy("pair_b"))
-                 .applyInPandas(_coregister, COREG_SCHEMA))
+        coreg = _fit(agg)
 
     # trans is per-pair tiny but referenced THREE times (B-shift join,
     # usable semi-join, broken anti-selection) — without the persist each
@@ -641,12 +602,10 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
                            F.lit("missing_trans").alias("status"),
                            F.lit(False).alias("usable")))
         trans = cached(trans_known.unionByName(missing))
-    a = agg.where("side = 0").select(
-        "pair", "bx", "by", (F.col("sz") / F.col("n")).alias("za"),
-        F.col("n").alias("na"), F.col("fl").alias("fla"))
-    b = agg.where("side = 1").select(
-        "pair", "bx", "by", (F.col("sz") / F.col("n")).alias("zb"),
-        F.col("n").alias("nb"), F.col("fl").alias("flb"))
+    a, b = (agg.where(f"side = {k}").select(
+        "pair", "bx", "by", (F.col("sz") / F.col("n")).alias(f"z{t}"),
+        F.col("n").alias(f"n{t}"), F.col("fl").alias(f"fl{t}"))
+        for k, t in ((0, "a"), (1, "b")))
 
     # --- step 3: apply the fitted translation to side B ---
     bt = b.join(F.broadcast(trans.where("usable")), "pair")
@@ -688,33 +647,19 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
     # (block-grain rows, bounded by the block grid)
     j = cached(a_ok.join(bs, ["pair", "bx", "by"], "full_outer"))
     in_a = F.col("na").isNotNull()
-    in_b = F.col("zi").isNotNull() | F.col("nb").isNotNull()
     both = in_a & F.col("zi").isNotNull()
-    # feather span per pair as an AGGREGATE broadcast back onto the rows,
-    # not a Window.partitionBy(pair) over all blended rows (round 7 —
-    # the one skew-prone window VERDICT r6 flagged: at the registered
-    # 'super' grain every row landed in ONE window partition / one sort
-    # task). The min/max run as partial aggregates wherever the rows
-    # live; pairs with no two-sided block get no span row (left join ->
-    # NULL span -> NULL wgt), exactly the NULL the when(both)-filtered
-    # window min produced. Upstream agg/trans are persisted, so the
-    # second traversal for the span costs only the tiny block-grain
-    # joins.
-    spans = (j.where(both)
-             .groupBy("pair").agg(F.min("bx").alias("_bx0"),
-                                  F.max("bx").alias("_bx1")))
-    j = j.join(F.broadcast(spans), "pair", "left")
-    raw = (F.col("bx") - F.col("_bx0")).cast("double") / \
-        F.greatest((F.col("_bx1") - F.col("_bx0")).cast("double"), F.lit(1.0))
-    wgt = F.least(F.greatest((raw - 0.25) / (0.55 - 0.25), F.lit(0.0)), F.lit(1.0))
+    # feather span over the two-sided blocks; upstream agg/trans are
+    # persisted, so the span's second traversal costs only the tiny
+    # block-grain joins
+    j, wgt = _feathered(j, both)
     # block id packs with the FULL stride, not the 64 of block_id_expr:
     # the fitted shift can push a target block to bx = -1, and with a
     # 64 stride that aliases onto (bx=63, by-1) — the wide stride keeps
     # every (bx, by) pair, negative included, on a unique id
+    block = (F.col("by") * D.LON_CELL_STRIDE + F.col("bx")) \
+        .cast("bigint").alias("block")
     blended = j.select(
-        "pair", "bx", "by",
-        (F.col("by") * D.LON_CELL_STRIDE + F.col("bx"))
-        .cast("bigint").alias("block"),
+        "pair", "bx", "by", block,
         F.when(both, F.lit("both")).when(in_a, F.lit("a_only"))
          .otherwise(F.lit("b_only")).alias("src"),
         F.when(both, wgt).alias("w"),
@@ -729,9 +674,7 @@ def strip_assemble(df: DataFrame, coreg: DataFrame | None = None,
     # segment-break pairs: the mosaic side rides through un-blended
     broken = a.join(F.broadcast(trans.where(F.expr("NOT usable"))
                                 .select("pair")), "pair").select(
-        "pair", "bx", "by",
-        (F.col("by") * D.LON_CELL_STRIDE + F.col("bx"))
-        .cast("bigint").alias("block"),
+        "pair", "bx", "by", block,
         F.lit("a_only").alias("src"),
         F.lit(None).cast("double").alias("w"),
         F.col("za").alias("z_strip"),

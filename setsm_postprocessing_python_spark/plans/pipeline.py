@@ -8,10 +8,10 @@ batch_scenes2strips.py:962-1565) as a chain of committed stages.
 The coregister/strip_assemble split is the reference's two-pass coreg-step
 -> mosaic-step structure: pass 1 fits and PERSISTS the per-pair
 translations (saveStripMeta / readStripMeta_stats,
-batch_scenes2strips.py:2139-2176); pass 2 reads them back and feeds them
-to strip_assemble as the held trans_guess (HOLD_GUESS_ALL,
-batch_scenes2strips.py:1419-1428) — a resumed or re-run mosaic pass never
-re-fits, it consumes the persisted translations.
+batch_scenes2strips.py:2139-2176); pass 2 reads the committed stage back
+and passes it as strip_assemble(coreg=), the held trans_guess
+(HOLD_GUESS_ALL, batch_scenes2strips.py:1419-1428) — a resumed or re-run
+mosaic pass never re-fits, it consumes the persisted translations.
 
 Every stage writes through plans/manifest.run_stage: output partitioned by
 the stage's unit (group_id or tile_id), committed by one record per stage
@@ -108,9 +108,7 @@ def _run_stages(spark: SparkSession, sf_dir: str, out_dir: str,
     # stage 5 (pass 2): strip assembly HOLDING the persisted translations —
     # the mosaic pass consumes readStripMeta_stats-style prior trans as
     # trans_guess and runs zero fits of its own
-    coreg_prior = (read_stage(spark, out_dir, "coregister")
-                   .select("pair", "group_a", "group_b", "n_points", "iters",
-                           "dz", "dx", "dy", "rmse", "status"))
+    coreg_prior = read_stage(spark, out_dir, "coregister")
 
     def t_strip(df):
         # SYNTHETIC_Z_MAX_RMSE, not the reference metre default: with the

@@ -253,9 +253,6 @@ def q_feather_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "n_pages", "flags_merged")
 
 
-STRIP_ASSEMBLY_RMSE = M.SYNTHETIC_Z_MAX_RMSE  # see operators/merge.py
-
-
 def q_strip_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL scenes2strips assembly composition
     (lib/scenes2strips.py:570-692): coregister -> apply the fitted
@@ -290,7 +287,7 @@ def q_strip_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair_of = lambda c: F.when(F.col("_variant") == "super",  # noqa: E731
                                F.lit("all")).otherwise(M.host_pair(c))
     out = M.strip_assemble(df, pair_of=pair_of,
-                           max_rmse=STRIP_ASSEMBLY_RMSE)
+                           max_rmse=M.SYNTHETIC_Z_MAX_RMSE)
     return out.select(
         F.when(F.col("pair") == "all", F.lit("super"))
          .otherwise(F.lit("host")).alias("variant"),

@@ -10,6 +10,8 @@ import pyspark.sql.functions as F
 
 from setsm_postprocessing_python_spark.operators import components
 from setsm_postprocessing_python_spark.operators import dedup as DD
+from setsm_postprocessing_python_spark.operators import merge as M
+from setsm_postprocessing_python_spark.operators.flags import with_flags
 from setsm_postprocessing_python_spark.operators.similarity import lsh_topk
 from setsm_postprocessing_python_spark.plans import queries_ext as QE
 from setsm_postprocessing_python_spark.plans.manifest import (
@@ -95,6 +97,24 @@ def test_source_and_query_builds_fire_no_job(spark):
     assert _build_jobs(spark, lambda: geocoded_pages(spark, SF_TINY)) == 0
     assert _build_jobs(spark, lambda: QE.q_near_dup(spark, SF_TINY)) == 0
     assert _build_jobs(spark, lambda: QE.q_ann_lsh(spark, SF_TINY)) == 0
+
+
+def test_strip_assembly_builds_fire_no_job(spark):
+    """The strip-assembly operators build their plans (cogrouped fits,
+    block-grain caches) without running any of them."""
+    gp = geocoded_pages(spark, SF_TINY)
+    fgp = with_flags(gp)
+    held = spark.createDataFrame(
+        [("pair0", "host0", "host1", 16, 1, 1.0, 0.2, 0.1, 0.5, "ok")],
+        M.COREG_SCHEMA)
+    with cache_scope():
+        for build in (lambda: M.coregister_pairs(gp, M.host_pair),
+                      lambda: M.strip_assemble(fgp),
+                      lambda: M.strip_assemble(fgp, coreg=held),
+                      lambda: M.feather_blend(fgp),
+                      lambda: M.feather_weight_field(gp),
+                      lambda: M.merge_order(M.with_footprint(gp))):
+            assert _build_jobs(spark, build) == 0
 
 
 def test_read_stage_fires_no_job(spark, tmp_path):

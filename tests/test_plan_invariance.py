@@ -38,6 +38,13 @@ QUERIES = {
     "q_resize_bilinear": QR.q_resize_bilinear,
     "q_water_compose": QR.q_water_compose,
     "q_bwareaopen": QE.q_bwareaopen,
+    # the strip-assembly family
+    "q_merge_order": QE.q_merge_order,
+    "q_coregister": QE.q_coregister,
+    "q_strip_assembly": QE.q_strip_assembly,
+    "q_feather_blend": QE.q_feather_blend,
+    "q_feather_field": QE.q_feather_field,
+    "q_diff_strips": QR.q_diff_strips,
 }
 
 

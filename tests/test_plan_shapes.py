@@ -345,3 +345,58 @@ def test_feather_blend_single_aggregation(spark):
     plan = formatted_plan(out)
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan  # span re-attach
+
+
+# Exchange and cogrouped-UDF (FlatMapCoGroupsInPandas) counts of the
+# strip-assembly family: the shared side-block aggregate and fit must not
+# add a shuffle or a second fit. "strip_assemble" is the default host_pair
+# grain, as bench.py's strip_assembly_host stage builds it, and
+# "strip_assemble_held" the same with a held coreg table (no fit).
+STRIP_PLANS = {
+    "q_merge_order": (1, 0), "q_coregister": (8, 2),
+    "q_strip_assembly": (8, 1), "q_feather_blend": (2, 0),
+    "q_feather_field": (4, 1), "q_diff_strips": (2, 0),
+    "strip_assemble": (8, 1), "strip_assemble_held": (8, 0),
+}
+
+
+def _strip_family_plan(spark, name):
+    from setsm_postprocessing_python_spark.operators import merge as M
+    from setsm_postprocessing_python_spark.operators.flags import with_flags
+    from setsm_postprocessing_python_spark.plans import queries_ext as QE
+    from setsm_postprocessing_python_spark.plans import queries_ref as QR
+    from setsm_postprocessing_python_spark.sources.pages import geocoded_pages
+
+    if not name.startswith("strip_assemble"):
+        query = next(getattr(m, name) for m in (QE, QR) if hasattr(m, name))
+        return formatted_plan(query(spark, SF))
+    held = spark.createDataFrame(
+        [("pair0", "host0", "host1", 16, 1, 1.0, 0.2, 0.1, 0.5, "ok")],
+        M.COREG_SCHEMA)
+    return formatted_plan(M.strip_assemble(
+        with_flags(geocoded_pages(spark, SF)),
+        coreg=held if name == "strip_assemble_held" else None,
+        max_rmse=M.SYNTHETIC_Z_MAX_RMSE))
+
+
+@pytest.mark.parametrize("name", sorted(STRIP_PLANS))
+def test_strip_family_plan_counts(spark, name):
+    import re
+
+    from setsm_postprocessing_python_spark.session import cache_scope
+
+    with cache_scope():
+        plan = _strip_family_plan(spark, name)
+    fits = len(set(re.findall(r"\((\d+)\) FlatMapCoGroupsInPandas", plan)))
+    assert (n_exchanges(plan), fits) == STRIP_PLANS[name]
+
+
+def test_held_strip_assembly_hash_aggregates(spark):
+    """With a held coreg table no fit runs, so the side-block aggregate
+    carries no min(group_id) and stays a hash aggregate: min over a
+    string plans a sort-based aggregate, a sort of every page row."""
+    from setsm_postprocessing_python_spark.session import cache_scope
+
+    with cache_scope():
+        plan = _strip_family_plan(spark, "strip_assemble_held")
+    assert "SortAggregate" not in plan

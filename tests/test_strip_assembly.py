@@ -1,5 +1,6 @@
 """strip_assemble vs an independent numpy oracle on a constructed
-two-strip fixture, plus the trans_guess hold (pass-2) path.
+two-strip fixture, plus the trans_guess hold (pass-2) path and the
+host-pair rule on malformed and one-sided input.
 
 The numpy oracle re-derives the WHOLE composition from scratch — md5 z
 values, per-block means, the iterative 3-sigma LSQ fit, the shifted
@@ -172,24 +173,17 @@ def test_strip_assemble_segment_break(spark):
     assert len(out) == n_a_blocks
 
 
-def test_coregister_guess_holds_and_skips_refit(spark):
-    """HOLD_GUESS_ALL: pairs in the guess pass through VERBATIM (a
-    deliberately wrong dz proves the fit did not rerun), and
-    strip_assemble consumes the held translation."""
+def test_strip_assemble_applies_held_translation(spark):
+    """HOLD_GUESS_ALL: a caller-supplied coreg table is applied as given,
+    not re-fit — a deliberately wrong dz shows up in the B values."""
     df = _mk_fixture(spark)
-    pair_of = lambda c: F.lit("all")  # noqa: E731
-    fitted = M.coregister_pairs(df, pair_of).collect()
-    assert len(fitted) == 1 and fitted[0].status == "ok"
-    guess = spark.createDataFrame(
+    held = spark.createDataFrame(
         [("all", "host0", "host1", 99, 1, 123.456, 0.0, 0.0, 0.5, "ok")],
         M.COREG_SCHEMA)
-    held = M.coregister_pairs(df, pair_of, guess=guess).collect()
-    assert len(held) == 1
-    assert held[0].dz == 123.456 and held[0].n_points == 99  # no re-fit
-    out = M.strip_assemble(df, coreg=guess, pair_of=pair_of,
+    out = M.strip_assemble(df, coreg=held, pair_of=lambda c: F.lit("all"),
                            max_rmse=100.0)
     some = out.where("src = 'b_only'").limit(1).collect()
-    # dz=123.456 shifts every B value negative -> proves the guess applied
+    # dz=123.456 shifts every B value negative -> proves the hold applied
     assert some and some[0].z_strip < 0
 
 
@@ -300,3 +294,38 @@ def test_strip_assemble_broken_pair_incoming_side_excluded(spark):
     out = M.strip_assemble(df, pair_of=lambda c: F.lit("all"),
                            max_rmse=1e-12).collect()
     assert out == []  # nothing mosaic-side to ride through, B excluded
+
+
+def _host_rows(spark, hosts):
+    """One page per block for each group_id in `hosts`, bx 0..3."""
+    rows = [(f"https://{h}.example/p/{bx}", h, 1, bx * BS, 0)
+            for h in hosts for bx in range(4)]
+    return spark.createDataFrame(
+        rows, "url string, group_id string, flags int, cell_x long, cell_y long")
+
+
+@pytest.mark.parametrize("gid", ["hostX", "h"])
+def test_malformed_group_id_raises(spark, gid):
+    """A group_id that is not host<N> has no host number: the pairing
+    rule's cast fails loudly instead of inventing a pair or a side."""
+    df = _host_rows(spark, ["host0", gid])
+    for build in (lambda: M.coregister_pairs(df, M.host_pair),
+                  lambda: M.feather_blend(df),
+                  lambda: M.strip_assemble(df)):
+        with cache_scope(), pytest.raises(Exception,
+                                          match="CAST_INVALID_INPUT"):
+            build().collect()
+
+
+def test_one_sided_pairs(spark):
+    """Pairs with only odd hosts: the fit reports one no_overlap row per
+    pair with no side-A label, and nothing blends."""
+    df = _host_rows(spark, ["host1", "host3"])
+    got = sorted((r.pair, r.group_a, r.group_b, r.status) for r in
+                 M.coregister_pairs(df, M.host_pair).collect())
+    assert got == [("pair0", None, "host1", "no_overlap"),
+                   ("pair1", None, "host3", "no_overlap")]
+    with cache_scope():
+        assert M.feather_blend(df).collect() == []
+        assert M.feather_weight_field(df).collect() == []
+        assert M.strip_assemble(df).collect() == []
