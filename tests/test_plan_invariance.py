@@ -45,6 +45,10 @@ QUERIES = {
     "q_feather_blend": QE.q_feather_blend,
     "q_feather_field": QE.q_feather_field,
     "q_diff_strips": QR.q_diff_strips,
+    # the rest of the dedup_ann workload's stages
+    "q_near_dup": QE.q_near_dup,
+    "q_dedup_exact": Q.q_dedup_exact,
+    "q_fingerprint": QE.q_fingerprint,
 }
 
 

@@ -400,3 +400,31 @@ def test_held_strip_assembly_hash_aggregates(spark):
     with cache_scope():
         plan = _strip_family_plan(spark, "strip_assemble_held")
     assert "SortAggregate" not in plan
+
+
+# Exchange, ArrowEvalPython, re-rank kernel (FlatMapGroupsInPandas or
+# MapInArrow) and Window node counts of the ANN queries: a refactor that
+# adds a shuffle, a Python pass or a ranking window fails here.
+ANN_PLANS = {
+    "q_ann_lsh": (9, 2, 1, 5), "q_ann_dedup": (4, 1, 1, 2),
+    "q_ann_ivf": (2, 1, 1, 2),
+}
+
+
+def _n_nodes(plan, node):
+    import re
+
+    return len(set(re.findall(rf"\((\d+)\) {node}\b", plan)))
+
+
+@pytest.mark.parametrize("name", sorted(ANN_PLANS))
+def test_ann_plan_counts(spark, name):
+    from setsm_postprocessing_python_spark.plans import queries_ext as QE
+    from setsm_postprocessing_python_spark.session import cache_scope
+
+    with cache_scope():
+        plan = formatted_plan(getattr(QE, name)(spark, SF))
+    kernels = (_n_nodes(plan, "FlatMapGroupsInPandas")
+               + _n_nodes(plan, "MapInArrow"))
+    assert (n_exchanges(plan), _n_nodes(plan, "ArrowEvalPython"), kernels,
+            _n_nodes(plan, "Window")) == ANN_PLANS[name]
