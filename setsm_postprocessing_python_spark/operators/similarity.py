@@ -9,15 +9,17 @@
   seeded RNG, broadcast as a numpy matrix): vectors are bucketed by sign
   signature, candidates searched within bucket (+ multi-probe neighbor
   buckets), exact cosine re-rank. Sub-quadratic: cost ~ n * bucket_size.
-  The numpy matmul runs in an Arrow-batched pandas UDF (vectorized,
-  no per-row Python). Identical vectors are collapsed first and the
-  result expanded to rows, so duplication costs linearly.
+  The numpy matmul runs in an Arrow UDF over a zero-copy view of the
+  vector buffer (vectorized, no per-row Python). Identical vectors are
+  collapsed first and the result expanded to rows from the collapse's
+  id lists, so duplication costs linearly.
 - ann_dedup_topk: the same search answered at representative grain,
   with group sizes.
 - ivf_topk: k-means coarse-quantizer lists with nprobe search.
 
 Both candidate generators (LSH buckets, IVF lists) feed the one exact
-re-rank (_rerank: a grouped float64 einsum kernel with an in-group
+re-rank (_rerank: the entries hash-partitioned by bucket, one float64
+einsum kernel call per partition through mapInArrow, with an in-kernel
 partial top-k) and the one ranking (_ranked).
 """
 
@@ -26,13 +28,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
 from ..session import cached
-from .dedup import collapse_exact, expand
+from .dedup import collapse_exact
 
 
 def _cos_expr(a: str, b: str) -> str:
@@ -89,14 +91,13 @@ def ann_dedup_topk(df: DataFrame, dim: int, k: int = 3,
     n_distinct = groups.count()
     topk = _rep_topk(groups, dim, k, n_distinct, vec_col, seed)
     sizes = groups.select("vec_id", F.col("n").alias("size_a"))
-    return (topk
+    return (topk.where(F.col("sim_rank") > 0)
             .join(sizes, "vec_id")
             .join(groups.select(F.col("vec_id").alias("nbr_id"),
                                 F.col("n").alias("size_b")),
                   "nbr_id")
             .select("vec_id", "nbr_id", "cosine", "sim_rank",
                     "size_a", "size_b"))
-
 
 
 # ---------------------------------------------------------------------------
@@ -107,85 +108,90 @@ N_TABLES = 8    # independent LSH tables
 PROBE_BITS = 2  # query-side multiprobe: lowest-margin bit flips per table
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((dim, n_planes)).astype(np.float64)
+def _matrix(v: pa.Array) -> np.ndarray:
+    """Zero-copy (n, dim) view of an Arrow list<float> column."""
+    return v.flatten().to_numpy().reshape(len(v), -1)
 
 
-def _super_group_topk(k: int):
-    """The one exact re-rank kernel. One pandas invocation handles MANY
-    candidate groups (rows: vec_id, v, bkt, is_b; `bkt` is an LSH bucket
-    or an IVF list): stack the vectors once, take each row's norm once,
-    enumerate every bucket's (a-probe x b-home) pairs over a stable bucket
-    sort, then run ONE chunked float64 gather + einsum over the
-    concatenated pairs. A row's norm does not depend on which gather it
-    sits in, so the cosines are bit-identical to a per-pair kernel
-    (golden-pinned by q_ann_lsh/q_ann_dedup/q_ann_ivf).
+def _lists(m: np.ndarray) -> pa.Array:
+    """An (n, w) int64 matrix as an Arrow list<int64> column."""
+    return pa.ListArray.from_arrays(
+        np.arange(0, m.size + 1, m.shape[1], dtype=np.int32), m.reshape(-1))
 
-    IN-UDF partial top-k: keep each vec's k best candidates WITHIN the
-    group (dedup + lexsort by (vec, -cosine, nbr) — the same total order
-    _ranked ranks by). The global top-k per vec is a subset of the union
-    of per-group top-ks (a pair's in-group rank among its vec's
-    candidates is <= its global rank), so the final result is identical,
-    but the shuffle out of the re-rank carries <= k rows per (vec, group)
-    instead of the full candidate stream."""
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"vec_id": pd.Series([], dtype="int64"),
-                              "nbr_id": pd.Series([], dtype="int64"),
-                              "cosine": pd.Series([], dtype="float64")})
-        if not len(pdf):
-            return empty
-        bkt = pdf["bkt"].to_numpy()
+
+def _new_run(*keys: np.ndarray) -> np.ndarray:
+    """True where a row's keys differ from the previous row's."""
+    new = np.ones(len(keys[0]), bool)
+    new[1:] = np.any([c[1:] != c[:-1] for c in keys], axis=0)
+    return new
+
+
+def _partition_topk(k: int):
+    """The one exact re-rank kernel, once per partition of candidate
+    entries (vec_id, v, bkt, is_b; `bkt` an LSH bucket or IVF list, `is_b`
+    a home, index-side, entry): every bucket's (entry x home entry) pairs,
+    enumerated over a stable bucket sort, scored by ONE chunked float64
+    gather + einsum with each entry's norm taken once. A row's dot product
+    does not depend on its gather, so the cosines are bit-identical to a
+    per-pair kernel (golden-pinned by q_ann_lsh/q_ann_dedup/q_ann_ivf).
+
+    In-kernel partial top-k: each vec keeps its k best candidates by
+    (vec, -cosine, nbr), _ranked's total order. A pair's rank in one
+    partition is <= its global rank, so the result is the same under any
+    partitioning. Each home vector also emits its self row (nbr_id ==
+    vec_id at its self-cosine, the same einsum), which no top-k cuts."""
+    def fn(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        bkt = t["bkt"].to_numpy()
         order = np.argsort(bkt, kind="stable")
         bkt = bkt[order]
-        ids = pdf["vec_id"].to_numpy()[order]
-        isb = pdf["is_b"].to_numpy()[order]
-        mat = np.stack(pdf["v"].to_numpy())[order].astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        starts = np.flatnonzero(np.r_[True, bkt[1:] != bkt[:-1]])
-        ends = np.r_[starts[1:], len(bkt)]
-        pa_parts, pb_parts = [], []
-        for s, e in zip(starts, ends):
-            ib = s + np.flatnonzero(isb[s:e])
-            if not len(ib):
-                continue
-            ia = np.arange(s, e)
-            pa = np.repeat(ia, len(ib))
-            pb = np.tile(ib, len(ia))
-            keep = ids[pa] != ids[pb]
-            if keep.any():
-                pa_parts.append(pa[keep])
-                pb_parts.append(pb[keep])
-        if not pa_parts:
-            return empty
-        pa = np.concatenate(pa_parts)
-        pb = np.concatenate(pb_parts)
-        chunk = 1 << 20  # bound the gathered pair matrices, not more pairs
-        cos_parts = []
-        for lo in range(0, len(pa), chunk):
-            ca, cb = pa[lo:lo + chunk], pb[lo:lo + chunk]
-            dots = np.einsum("ij,ij->i", mat[ca], mat[cb])
-            cos_parts.append(dots / (norms[ca] * norms[cb]))
-        out = pd.DataFrame({
-            "vec_id": ids[pa].astype(np.int64),
-            "nbr_id": ids[pb].astype(np.int64),
-            "cosine": np.concatenate(cos_parts)})
-        out = out.drop_duplicates(["vec_id", "nbr_id"])
-        order = np.lexsort((out["nbr_id"].to_numpy(),
-                            -out["cosine"].to_numpy(),
-                            out["vec_id"].to_numpy()))
-        out = out.iloc[order]
-        return out.groupby("vec_id", sort=False).head(k)
+        ids = t["vec_id"].to_numpy()[order]
+        home = np.flatnonzero(t["is_b"].to_numpy()[order])
+        mat = _matrix(t["v"].combine_chunks())[order].astype(np.float64)
+        sq = np.einsum("ij,ij->i", mat, mat)
+        norms = np.sqrt(sq)
+        # every (entry, home entry) pair of a bucket, vectorised: home
+        # entry h meets the n[h] entries from its bucket's start s[h]
+        starts = np.flatnonzero(_new_run(bkt))
+        sizes = np.diff(np.r_[starts, len(bkt)])
+        of = np.repeat(np.arange(len(starts)), sizes)[home]
+        s, n = starts[of], sizes[of]
+        ib = np.repeat(home, n)
+        ia = np.arange(len(ib)) + np.repeat(s - (np.cumsum(n) - n), n)
+        keep = ids[ia] != ids[ib]
+        ia, ib = ia[keep], ib[keep]
+        cos = np.empty(len(ia))
+        chunk = 1 << 13  # bounds each gathered pair matrix to 8 MB
+        for lo in range(0, len(ia), chunk):
+            ca, cb = ia[lo:lo + chunk], ib[lo:lo + chunk]
+            cos[lo:lo + chunk] = (np.einsum("ij,ij->i", mat[ca], mat[cb])
+                                  / (norms[ca] * norms[cb]))
+        vec, nbr = ids[ia], ids[ib]
+        o = np.lexsort((nbr, -cos, vec))
+        vec, nbr, cos = vec[o], nbr[o], cos[o]
+        new = _new_run(vec, nbr)  # drop repeats of a pair
+        vec, nbr, cos = vec[new], nbr[new], cos[new]
+        at = np.arange(len(vec))
+        top = at - np.maximum.accumulate(np.where(_new_run(vec), at, 0)) < k
+        own = home[np.unique(ids[home], return_index=True)[1]]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.r_[ids[own], vec[top]], pa.int64()),
+             pa.array(np.r_[ids[own], nbr[top]], pa.int64()),
+             pa.array(np.r_[sq[own] / (norms[own] * norms[own]), cos[top]])],
+            names=["vec_id", "nbr_id", "cosine"])
     return fn
 
 
-def _rerank(entries: DataFrame, by: str, k: int) -> DataFrame:
-    """Exact re-rank of candidate entries (vec_id, v, bkt, is_b) grouped
-    by `by`, then the top-k ranking. Every vector moves once per entry,
-    never once per candidate pair: the group shuffle co-locates them."""
-    return _ranked(entries.groupBy(by).applyInPandas(
-        _super_group_topk(k), "vec_id bigint, nbr_id bigint, cosine double"),
-        k)
+def _rerank(entries: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank of candidate entries (vec_id, v, bkt, is_b), ranked:
+    each vector's self row at sim_rank 0, its top-k at 1..k. A bucket is
+    never split by the bkt hash partitioning (AQE coalesces whole
+    partitions); a vector moves once per entry, not once per pair."""
+    return _ranked(entries.repartition("bkt").mapInArrow(
+        _partition_topk(k), "vec_id bigint, nbr_id bigint, cosine double"), k)
 
 
 def with_lsh_buckets(df: DataFrame, dim: int, bits: int,
@@ -197,11 +203,11 @@ def with_lsh_buckets(df: DataFrame, dim: int, bits: int,
     flip the sign bits with the SMALLEST projection margin (the classic
     multi-probe heuristic), which buys recall without more tables. One
     batched numpy matmul per Arrow batch computes all tables at once."""
-    planes = _hyperplanes(dim, N_TABLES * bits, seed)
+    planes = np.random.default_rng(seed).standard_normal((dim, N_TABLES * bits))
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def buckets_of(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy())                       # (batch, dim)
+    @F.arrow_udf(ArrayType(LongType()))
+    def buckets_of(v: pa.Array) -> pa.Array:
+        mat = _matrix(v)                                   # (batch, dim)
         proj = mat.astype(np.float64) @ planes             # (batch, T*P)
         signs = (proj > 0).reshape(len(mat), N_TABLES, bits)
         weights = (1 << np.arange(bits)).astype(np.int64)
@@ -213,7 +219,7 @@ def with_lsh_buckets(df: DataFrame, dim: int, bits: int,
         flip = np.argsort(margins, axis=2)[:, :, :PROBE_BITS]
         probes = [keys] + [tbl | (sig ^ (1 << flip[:, :, j]))
                            for j in range(PROBE_BITS)]
-        return pd.Series(list(np.concatenate(probes, axis=1)))
+        return _lists(np.concatenate(probes, axis=1))
 
     return df.withColumn("probe_buckets", buckets_of(F.col(vec_col)))
 
@@ -230,12 +236,11 @@ def ivf_topk(df: DataFrame, dim: int, k: int = 3, n_lists: int = 16,
     Scale shape: centroids are driver-side tiny and broadcast; list
     assignment is one batched numpy matmul per Arrow batch (one pass —
     the home list is the first entry of the probe output); the exact-
-    cosine re-rank is the one LSH also runs, grouped per list (the list id
-    is the bucket). Probing >1 list recovers recall lost at list
-    boundaries (the IVF nprobe knob). Size n_lists ~ sqrt(n) at scale:
-    per-list work is (n*n_probe/n_lists) x (n/n_lists) pairs and list
-    groups are the unit of re-rank parallelism. A pair (a, b) meets only
-    in b's home list, so the stream carries no repeats."""
+    cosine re-rank is the one LSH also runs (the list id is the bucket).
+    Probing >1 list recovers recall lost at list boundaries (the IVF
+    nprobe knob). Size n_lists ~ sqrt(n) at scale: per-list work is
+    (n*n_probe/n_lists) x (n/n_lists) pairs. A pair (a, b) meets only in
+    b's home list, so the stream carries no repeats."""
     rng = np.random.default_rng(seed)
     # Deterministic bounded training sample: bare limit() is partition-
     # layout-dependent (repartitioning the input would move the centroids
@@ -266,24 +271,22 @@ def ivf_topk(df: DataFrame, dim: int, k: int = 3, n_lists: int = 16,
                 m = members.sum(axis=0)
                 cents[c] = m / (np.linalg.norm(m) + 1e-12)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def probe_lists(v: pd.Series, n: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
+    @F.arrow_udf(ArrayType(LongType()))
+    def probe_lists(v: pa.Array) -> pa.Array:
+        mat = _matrix(v).astype(np.float64)
         mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
         sims = mat @ cents.T                       # (batch, n_lists)
-        order = np.argsort(-sims, axis=1)
-        return pd.Series([row[:int(c)].astype(np.int64)
-                          for row, c in zip(order, n.to_numpy())])
+        return _lists(np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int64))
 
     # ONE probe-UDF pass: the home list is the first (best) entry of the
     # n_probe output, a position flag, not a second UDF invocation.
     base = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
     entries = base.select(
         "vec_id", "v",
-        F.posexplode_outer(probe_lists(F.col("v"), F.lit(n_probe)))
+        F.posexplode_outer(probe_lists(F.col("v")))
         .alias("pos", "bkt")).select(
         "vec_id", "v", "bkt", (F.col("pos") == 0).alias("is_b"))
-    return _rerank(entries, "bkt", k)
+    return _rerank(entries, k).where(F.col("sim_rank") > 0)
 
 
 def lsh_topk(df: DataFrame, dim: int, k: int = 3, id_col: str = "vec_id",
@@ -292,56 +295,49 @@ def lsh_topk(df: DataFrame, dim: int, k: int = 3, id_col: str = "vec_id",
     """Approximate per-row top-k: candidates collide in >=1 of N_TABLES
     LSH tables; exact cosine re-rank within candidates. Collision
     probability for angle theta: 1 - (1 - (1-theta/pi)^P)^T — with T=8,
-    P=4 a 60-degree neighbor is caught with p ~ 0.8. Ids must be unique.
+    P=4 a 60-degree neighbor is caught with p ~ 0.8. Ids must be unique
+    per vector (an id bound to two vectors raises); a repeated row (same
+    id, same vector) counts once.
 
     Collapse first, expand to rows: identical vectors share every bucket,
     so a raw search pays dup_group_size^2 uninformative pairs (34.6x wall
     at 10x data, 8x -> 80x replication; BENCH/SCALE_PROBE.md).
-    - The rep-grain top-k runs over collapse_exact's representatives
-      (min id per identical-vector group), planes sized from the RAW row
-      count, so buckets — and a row's candidate set, its group's — are
-      the raw path's.
-    - Each row then ranks its group's other members at the group's
-      self-cosine (the kernel's float64 einsum, so the bits match) and
-      the members of its group's top-k neighbour groups, each truncated
-      to its k+1 smallest ids (a row's top-k from one group lies among
+    - One aggregate collapses identical vectors and keeps each group's
+      sorted ids; the head (min id) is the representative. The rep-grain
+      top-k runs over the representatives, planes sized from the RAW row
+      count, so a row's candidate set (its group's) is the raw path's.
+    - Each row, exploded from its group's id list, ranks its group's
+      other members at the group's self-cosine (the re-rank's rank-0 row)
+      and the members of its group's top-k neighbour groups, each a slice
+      of the k+1 smallest ids (a row's top-k from one group lies among
       them: the expansion is linear in rows). A group ranked ahead of H
       puts its representative ahead of every member of H, so the result
-      equals the raw row-level top-k bit for bit; without duplicates the
-      expansion is the identity.
+      equals the raw row-level top-k bit for bit.
 
     Pass n_hint (table stats / parquet footer row count) to avoid the
     sizing count job."""
     if n_hint is None:
         n_hint = df.select(id_col).count()
-    rows = df.select(F.col(id_col).cast("bigint").alias("vec_id"), vec_col)
-    groups = collapse_exact(rows, vec_col, "vec_id")
-    reps = _rep_topk(groups, dim, k, n_hint, vec_col, seed)
-
-    @F.pandas_udf(DoubleType())
-    def self_cosine(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        dots = np.einsum("ij,ij->i", mat, mat)
-        norms = np.sqrt(dots)
-        return pd.Series(dots / (norms * norms))
-
-    # (rep_id, nbr_rep, cosine): each group's top-k neighbour groups
-    # plus the group itself at its self-cosine
-    cand_groups = reps.select(
+    # the collapse keeps each group's ids, sorted: the head is the
+    # representative (the min id), the list is what the expansion reads
+    groups = (df.select(F.col(id_col).cast("bigint").alias("vec_id"), vec_col)
+              .groupBy(vec_col)
+              .agg(F.array_sort(F.collect_list("vec_id")).alias("ids"))
+              .select(vec_col, "ids", F.get("ids", 0).alias("vec_id")))
+    # (rep_id, nbr_rep, cosine): the group itself and its top-k neighbours
+    cand_groups = _rep_topk(groups, dim, k, n_hint, vec_col, seed).select(
         F.col("vec_id").alias("rep_id"), F.col("nbr_id").alias("nbr_rep"),
-        "cosine").unionByName(groups.select(
-            F.col("vec_id").alias("rep_id"), F.col("vec_id").alias("nbr_rep"),
-            self_cosine(F.col(vec_col)).alias("cosine")))
-    members = expand(rows, groups.select(vec_col, "vec_id"), vec_col,
-                     "vec_id").select("vec_id", "rep_id")
-    by_id = Window.partitionBy("rep_id").orderBy("vec_id")
-    smallest = (members.withColumn("_r", F.row_number().over(by_id))
-                .where(F.col("_r") <= k + 1)
-                .select(F.col("rep_id").alias("nbr_rep"),
-                        F.col("vec_id").alias("nbr_id")))
+        "cosine")
+    # _grp tells two groups apart even if they share a min id
+    members = groups.select(F.explode("ids").alias("vec_id"),
+                            F.col("vec_id").alias("rep_id"),
+                            F.xxhash64(vec_col).alias("_grp"))
+    smallest = groups.select(F.col("vec_id").alias("nbr_rep"),
+                             F.explode(F.slice("ids", 1, k + 1))
+                             .alias("nbr_id"))
     j = (members.join(cand_groups, "rep_id").join(smallest, "nbr_rep")
          .where(F.col("vec_id") != F.col("nbr_id")))
-    return _ranked(j, k)
+    return _ranked(j, k, group="_grp")
 
 
 def _rep_topk(groups: DataFrame, dim: int, k: int, n: int,
@@ -357,46 +353,43 @@ def _rep_topk(groups: DataFrame, dim: int, k: int, n: int,
     smaller by the same factor."""
     bits = max(4, int(math.ceil(math.log2(max(n, 2) / (64.0 / (1 + PROBE_BITS))))))
     # ONE posexplode of the probe list: position < N_TABLES marks the
-    # home-bucket (index-side) entries, a flag, not a second explode.
-    # Within a table the home bucket and its single-bit flips are pairwise
-    # distinct and tables carry distinct key prefixes, so each vector
-    # lands in a bkt group at most once — in-group pairs are unique by
-    # construction. posexplode_outer, not posexplode: the plain generator
-    # adds an implicit size>0 filter whose condition re-evaluates the
-    # hyperplane pandas UDF (measured: 2 ArrowEvalPython nodes, the
-    # matmul paid twice per row). The probe array is never empty, so the
-    # outer variant is row-identical and runs the UDF once.
+    # home-bucket entries. A vector lands in a bucket at most once (a home
+    # bucket and its single-bit flips differ; tables differ in the key
+    # prefix). posexplode_outer: the plain generator's implicit size>0
+    # filter re-evaluates the hyperplane UDF (2 ArrowEvalPython nodes);
+    # the probe array is never empty, so the rows are the same.
     entries = with_lsh_buckets(groups, dim, bits, vec_col, seed).select(
         "vec_id", F.col(vec_col).alias("v"),
         F.posexplode_outer("probe_buckets").alias("pos", "bkt")).select(
         "vec_id", "v", "bkt", (F.col("pos") < N_TABLES).alias("is_b"))
-    # SUPER-GROUPS: grouping directly on bkt makes one pandas call per
-    # bucket, and pandas per-group overhead (~0.1-0.3 ms) dominates at
-    # scale. Hash buckets into n_super coalesced groups sized for ~2^16
-    # entries each (~17 MB of vectors per group task); the kernel
-    # enumerates pairs per bucket inside. Floor 256 (round 7, was 64):
-    # with few groups a handful of hot buckets hash together into one
-    # jumbo task and the stage rides on that straggler (measured on the
-    # bench corpus: floor 64 gave 2.1-10.7 s swings, floor 256 a stable
-    # ~1.7 s). The per-vec top-k is grouping-invariant, so results are
-    # identical. A pair colliding in several buckets may repeat across
-    # groups with an identical cosine; _ranked drops the repeats.
-    n_entries = n * (1 + PROBE_BITS) * N_TABLES
-    n_super = int(max(256, min(1 << 20, n_entries >> 16)))
-    return _rerank(entries.withColumn(
-        "sg", F.pmod(F.xxhash64("bkt"), F.lit(n_super))), "sg", k)
+    return _rerank(entries, k)
 
 
-def _ranked(j: DataFrame, k: int) -> DataFrame:
-    """Top-k per vec_id by (cosine desc, nbr_id asc). Repeats of a pair
-    (the LSH stream's cross-group duplicates) carry identical cosines, so
-    they sort adjacently and a lag(nbr_id) check drops them inside the
-    ranking window, with no exchange of their own (guide §2.4)."""
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
-    j = (j.withColumn("_dup", F.coalesce(
-            F.lag("nbr_id").over(w) == F.col("nbr_id"), F.lit(False)))
+def _ranked(j: DataFrame, k: int, group: str | None = None) -> DataFrame:
+    """Top-k per vec_id by (self row first, cosine desc, nbr_id asc): the
+    self row (nbr_id == vec_id, from the re-rank) ranks 0, neighbours
+    1..k. Repeats of a pair carry identical cosines, so they sort
+    adjacently and a lag check drops them, in the ranking window's own
+    exchange (guide §2.4). One nbr_id at two cosines, or rows from two
+    `group` values (constant per identical-vector group), mean one id
+    names two vectors: raise_error, checked in the same window."""
+    self_row = F.col("nbr_id") == F.col("vec_id")
+    w = Window.partitionBy("vec_id").orderBy(
+        self_row.desc(), F.col("cosine").desc(), F.col("nbr_id").asc())
+    whole = w.rowsBetween(Window.unboundedPreceding,
+                          Window.unboundedFollowing)
+    clash = (F.size(F.collect_set("nbr_id").over(whole))
+             != F.size(F.collect_set(F.struct("nbr_id", "cosine"))
+                       .over(whole)))
+    if group:
+        clash = clash | (F.min(group).over(whole) != F.max(group).over(whole))
+    dup = F.coalesce(F.lag("nbr_id").over(w) == F.col("nbr_id"), F.lit(False))
+    j = (j.withColumn("_dup", F.when(clash, F.raise_error(F.lit(
+            "similarity: one vec_id names two different vectors")))
+            .otherwise(dup))
          .where(~F.col("_dup")).drop("_dup"))
-    return (j.withColumn("sim_rank", F.row_number().over(w))
+    rank = F.row_number().over(w) - F.first(self_row).over(w).cast("int")
+    return (j.withColumn("sim_rank", rank)
              .where(F.col("sim_rank") <= k)
              .select(F.col("vec_id").cast("bigint"), F.col("nbr_id").cast("bigint"),
                      "cosine", "sim_rank"))

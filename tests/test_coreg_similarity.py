@@ -214,3 +214,155 @@ def test_ann_dedup_collapse_semantics(spark):
             for r in lsh_topk(emb, dim=64, k=3, n_hint=n).collect()}
     assert got == want
     assert len(got) > 0
+
+
+# ---------------------------------------------------------------------------
+# re-rank edge cases: empty and tiny inputs, a hot bucket, probe-only
+# partitions, the partition count, duplicate rows and duplicate ids
+# ---------------------------------------------------------------------------
+
+EMB_SCHEMA = "vec_id bigint, embedding array<float>"
+
+
+def _near(n, seed=7, eps=1e-2):
+    """n float32 vectors within eps of one random direction, so they share
+    their LSH buckets."""
+    rng = np.random.default_rng(seed)
+    base = rng.standard_normal(64)
+    return (base + eps * rng.standard_normal((n, 64))).astype(np.float32)
+
+
+def _emb(spark, ids, vecs):
+    return spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(ids, vecs)], EMB_SCHEMA)
+
+
+def _rows(df):
+    return sorted((r.vec_id, r.nbr_id, r.sim_rank, r.cosine)
+                  for r in df.collect())
+
+
+def test_ann_empty_and_single_vector(spark):
+    from setsm_postprocessing_python_spark.operators.similarity import (
+        ann_dedup_topk, lsh_topk)
+
+    empty = spark.createDataFrame([], EMB_SCHEMA)
+    one = _emb(spark, [1], _near(1))
+    for topk in (lsh_topk, ann_dedup_topk):
+        assert topk(empty, dim=64, k=3).count() == 0
+        assert topk(one, dim=64, k=3).collect() == []
+
+
+def test_lsh_topk_hot_bucket_matches_numpy(spark):
+    """200 near-identical vectors share every home bucket, so one bucket's
+    200 x 200 pairs exceed the kernel's pair chunk (1 << 13). Every pair
+    is a candidate, so the result is the exact top-k, with the bits of
+    the kernel's float64 einsum."""
+    from setsm_postprocessing_python_spark.operators.similarity import (
+        lsh_topk)
+
+    n, k = 200, 3
+    vecs = _near(n, eps=1e-4)
+    mat = vecs.astype(np.float64)
+    norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    a, b = np.divmod(np.arange(n * n), n)
+    a, b = a[a != b], b[a != b]
+    cos = np.einsum("ij,ij->i", mat[a], mat[b]) / (norms[a] * norms[b])
+    want = []
+    for i in range(n):
+        mine = np.flatnonzero(a == i)
+        best = mine[np.lexsort((b[mine], -cos[mine]))][:k]
+        want += [(i, int(b[p]), r + 1, float(cos[p]))
+                 for r, p in enumerate(best)]
+    assert _rows(lsh_topk(_emb(spark, range(n), vecs), dim=64, k=k)) \
+        == sorted(want)
+
+
+def test_rerank_kernel_probe_only_partition():
+    """A partition whose entries are all probes (no home entry) yields no
+    row; in a mixed partition a probe-only bucket adds no pair, and each
+    home vector gets its self row."""
+    import pyarrow as pa
+
+    from setsm_postprocessing_python_spark.operators.similarity import (
+        _partition_topk)
+
+    def batch(ids, vecs, bkts, home):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids, pa.int64()),
+             pa.array(vecs, pa.list_(pa.float32())),
+             pa.array(bkts, pa.int64()), pa.array(home)],
+            names=["vec_id", "v", "bkt", "is_b"])
+
+    def run(*batches):
+        out = pa.Table.from_batches(list(_partition_topk(3)(iter(batches))),
+                                    schema=pa.schema(
+                                        [("vec_id", pa.int64()),
+                                         ("nbr_id", pa.int64()),
+                                         ("cosine", pa.float64())]))
+        return sorted(zip(*(out[c].to_pylist() for c in out.column_names)))
+
+    assert run() == []
+    assert run(batch([1, 2], [[1, 0], [0, 1]], [7, 7], [False, False])) == []
+    mixed = batch([1, 2, 1, 3], [[1, 0], [0, 1], [1, 0], [3, 4]],
+                  [7, 7, 9, 9], [False, False, True, True])
+    assert run(mixed) == [(1, 1, 1.0), (1, 3, 0.6), (3, 1, 0.6),
+                          (3, 3, 1.0)]
+
+
+def test_ann_same_rows_at_1_and_64_partitions(spark):
+    """Buckets are hash-partitioned whole, so the partition count changes
+    which buckets share a kernel call, never the rows."""
+    from setsm_postprocessing_python_spark.operators.similarity import (
+        ivf_topk, lsh_topk)
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    old = {key: spark.conf.get(key) for key in keys}
+    rows = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        for parts in ("1", "64"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            rows[parts] = (_rows(lsh_topk(emb, dim=64, k=3)),
+                           _rows(ivf_topk(emb, dim=64, k=3)))
+    finally:
+        for key, value in old.items():
+            spark.conf.set(key, value)
+    assert rows["1"][0] and rows["1"][1]
+    assert rows["1"] == rows["64"]
+
+
+def test_lsh_topk_exact_duplicate_rows(spark):
+    """A repeated row (same id, same vector) counts once: the result is
+    the one over the distinct rows."""
+    from setsm_postprocessing_python_spark.operators.similarity import (
+        lsh_topk)
+
+    vecs = _near(6)
+    ids = [1, 2, 3, 4, 5, 6]
+    dup = _emb(spark, ids + [1, 4], np.concatenate([vecs, vecs[[0, 3]]]))
+    got = _rows(lsh_topk(dup, dim=64, k=3))
+    assert got == _rows(lsh_topk(_emb(spark, ids, vecs), dim=64, k=3))
+    assert [r[:3] for r in got] == [
+        (1, 2, 2), (1, 4, 1), (1, 5, 3), (2, 1, 1), (2, 5, 2), (2, 6, 3),
+        (3, 4, 1), (3, 5, 3), (3, 6, 2), (4, 1, 1), (4, 3, 3), (4, 5, 2),
+        (5, 2, 3), (5, 4, 2), (5, 6, 1), (6, 2, 3), (6, 3, 2), (6, 5, 1)]
+
+
+def test_lsh_topk_duplicate_id_raises(spark):
+    """One id bound to two different vectors raises instead of returning
+    wrong rows: whether another vector meets the id at two cosines, or the
+    two vectors' neighbourhoods are disjoint."""
+    import pytest
+
+    from pyspark.errors import PySparkException
+
+    from setsm_postprocessing_python_spark.operators.similarity import (
+        lsh_topk)
+
+    near = _near(4)
+    far = np.concatenate([_near(2, seed=1), -_near(2, seed=1)])
+    for ids, vecs in (([1, 1, 2, 3], near), ([1, 2, 1, 3], far)):
+        with pytest.raises(PySparkException, match="two different vectors"):
+            lsh_topk(_emb(spark, ids, vecs), dim=64, k=3).collect()
