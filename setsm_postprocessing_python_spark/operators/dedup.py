@@ -49,35 +49,42 @@ MINHASH_PARAMS = _minhash_params()
 # shingles
 # ---------------------------------------------------------------------------
 
-def shingles_expr(dialect: str, text: str = "text", n: int = SHINGLE_N) -> str:
-    """Array of word n-gram shingle strings; EMPTY for docs shorter than
-    n tokens (including NULL text).
-
-    The Spark branch guards the token count explicitly: Spark's
-    sequence(1, 0) DESCENDS ([1, 0] — step defaults to -1 when start >
-    stop), so the unguarded greatest()-bounded form produced two bogus
-    shingles for short docs (slice at index 0, NULL shingles for NULL
-    text — every NULL-text doc then shared an identical all-NULL
-    signature and near-dup-paired with all the others). DuckDB's
-    range(1, 1) is empty, so the guard also closes a latent cross-
-    dialect divergence for sub-n-token docs."""
-    toks = D.tokens_expr(dialect, text)
-    if dialect == D.SPARK:
-        return (f"CASE WHEN size({toks}) >= {n} THEN "
-                f"transform(sequence(1, size({toks}) - {n - 1}), "
-                f"i -> array_join(slice({toks}, i, {n}), ' ')) "
-                f"ELSE CAST(array() AS array<string>) END")
+def shingles_expr() -> str:
+    """DuckDB array of the word SHINGLE_N-gram strings of `text`; EMPTY
+    for docs shorter than SHINGLE_N tokens (NULL text included). The
+    oracle twin of shingle_rows."""
+    toks, n = D.tokens_expr(D.DUCKDB), SHINGLE_N
     return (f"list_transform(range(1, greatest(len({toks}) - {n - 1}, 0) + 1), "
             f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' '))")
+
+
+def shingle_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, shingle) for every word SHINGLE_N-gram of each doc's `text`,
+    duplicates kept; none for shorter docs (NULL text included).
+
+    The text is split once and the n-grams zip n shifted slices of the
+    tokens: no lambda, so the projection is codegen'd (the former
+    transform(sequence(..), i -> ..) re-split the text per shingle in an
+    interpreted function). The size guard is explicit: slice() rejects a
+    negative length, and Spark's sequence(1, 0) DESCENDS ([1, 0]), which
+    once gave short docs bogus shingles (NULL text then shared one
+    all-NULL signature). DuckDB's range(1, 1) is empty, so the guard
+    keeps sub-n-token docs equal across dialects."""
+    n = SHINGLE_N
+    toks = df.select(id_col, F.split("text", " ").alias("_t"))
+    width = F.size("_t") - (n - 1)
+    grams = F.arrays_zip(*[F.slice("_t", i, width).alias(f"w{i}")
+                           for i in range(1, n + 1)])
+    return toks.select(id_col, F.inline(F.when(width >= 1, grams))).select(
+        id_col, F.concat_ws(" ", *[f"w{i}" for i in range(1, n + 1)])
+        .alias("shingle"))
 
 
 def exploded_shingles(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, shingle) distinct pairs. The explode happens AFTER column
     pruning (only text + id read); distinct is one shuffle keyed by
     (id, shingle) with map-side combine."""
-    return (df.select(id_col,
-                      F.explode(F.expr(shingles_expr(D.SPARK))).alias("shingle"))
-              .distinct())
+    return shingle_rows(df, id_col).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -161,36 +168,19 @@ def jaccard_pairs(df: DataFrame, threshold_pct: int = 50,
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, hash_idx, minhash): min over shingles of (a_i*h + b_i) mod M31,
-    where h = md5-derived 32-bit hash of the shingle.
-
-    All N_HASHES permutations are evaluated as parallel MIN aggregates in
-    ONE pass over the (id, shingle) rows — no params explode. The previous
-    formulation exploded every shingle x 16 (96M shuffle rows at 200k
-    docs); this one shuffles the map-side-combined partials only (one row
-    per doc per partition) and measured 2.3x faster end-to-end on the
-    amplified bench (70.4s -> 30.7s). The (id, hash_idx, minhash) long
-    form is recovered with a posexplode of the 16-element result row (one
-    row per doc). a*h stays under 2^63: a < 2^31-1, h < 2^32 (guarded by
-    ANSI mode)."""
-    mins = _minhash_wide(df, id_col)
-    arr = F.array(*[F.col(f"m{i}") for i in range(N_HASHES)])
-    return mins.select(
-        id_col, F.posexplode(arr).alias("hash_idx", "minhash"))
-
-
 def _minhash_wide(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, m0..m15): one row per doc, all permutation minima as columns.
+    """(id, m0..m15): one row per doc, all permutation minima as columns:
+    m_i = min over shingles of (a_i*h + b_i) mod M31, h the md5-derived
+    32-bit shingle hash. All 16 minima are parallel MIN aggregates in
+    one pass, so only the map-side-combined partials shuffle. a*h stays
+    under 2^63: a < 2^31-1, h < 2^32 (guarded by ANSI mode).
 
     No shingle DISTINCT: min() is duplicate-insensitive, so the multiset
     of shingles gives the identical signature as the set — skipping the
     distinct deletes a whole (id, shingle) shuffle (jaccard keeps its
     distinct because intersection COUNTS are duplicate-sensitive)."""
-    sh = df.select(
-        id_col,
-        F.explode(F.expr(shingles_expr(D.SPARK))).alias("shingle"),
-    ).withColumn("h", F.expr(D.hex8_i64("shingle", 1, D.SPARK)))
+    sh = shingle_rows(df, id_col).withColumn(
+        "h", F.expr(D.hex8_i64("shingle", 1, D.SPARK)))
     return sh.groupBy(id_col).agg(*[
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31).alias(f"m{i}")
         for i, (a, b) in enumerate(MINHASH_PARAMS)])

@@ -204,8 +204,8 @@ def _coregister(key, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
     # min(), not iloc[0]: Arrow row-delivery order into the cogroup task is
     # not deterministic for multi-group sides (the 'super' pairing), and the
     # label must not wobble run-to-run
-    ga = a["group_id"].min() if len(a) else None
-    gb = b["group_id_b"].min() if len(b) else None
+    ga = f"host{a['host_n'].min()}" if len(a) else None
+    gb = f"host{b['host_n_b'].min()}" if len(b) else None
     pair = str(key[0])
     a = a.sort_values("block", ignore_index=True)
     b = b.sort_values("block_b", ignore_index=True)
@@ -299,14 +299,15 @@ def _side_blocks(df: DataFrame, pair_of, *aggs) -> DataFrame:
 
 
 def _fit_aggs():
-    """The group label (group_a / group_b) and the EXACT decimal z sum
-    _fit reads. The decimal sum is order-independent across partial-sum
-    merge order, so the per-block means (and the thresholded fit) are
-    bit-deterministic run-to-run; 18 integer digits cannot overflow
-    (z < 100, 10^16 rows per block), 12 fractional digits carry z well
-    past float53 noise. min(group_id) plans a sort-based aggregate, so
-    only a fit asks."""
-    return (F.min("group_id").alias("group_id"),
+    """The side's lowest host number (rendered by _coregister as the
+    group_a / group_b label: an int min stays a hash aggregate, a min over
+    the group_id string plans a sort of every page row) and the EXACT
+    decimal z sum _fit reads. The decimal sum is order-independent across
+    partial-sum merge order, so the per-block means (and the thresholded
+    fit) are bit-deterministic run-to-run; 18 integer digits cannot
+    overflow (z < 100, 10^16 rows per block), 12 fractional digits carry
+    z well past float53 noise."""
+    return (F.min(host_number(F.col("group_id"))).alias("host_n"),
             F.sum(F.col("z").cast("decimal(30,12)")).alias("zsum"))
 
 
@@ -320,9 +321,9 @@ def _fit(agg: DataFrame) -> DataFrame:
     column (observed on Spark 4.1; see tests)."""
     blk = F.col("by") * 64 + F.col("bx")
     side_a = agg.where("side = 0").select(
-        "pair", "group_id", "zsum", "n", "bx", "by", blk.alias("block"))
+        "pair", "host_n", "zsum", "n", "bx", "by", blk.alias("block"))
     side_b = agg.where("side = 1").select(
-        F.col("pair").alias("pair_b"), F.col("group_id").alias("group_id_b"),
+        F.col("pair").alias("pair_b"), F.col("host_n").alias("host_n_b"),
         F.col("zsum").alias("zsum_b"), F.col("n").alias("n_b"),
         blk.alias("block_b"))
     return (side_a.groupBy("pair").cogroup(side_b.groupBy("pair_b"))

@@ -494,7 +494,7 @@ def q_bwareaopen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _shingles_cte() -> str:
-    return (f"sh AS (SELECT DISTINCT doc_id, unnest({DD.shingles_expr(_DD)}) "
+    return (f"sh AS (SELECT DISTINCT doc_id, unnest({DD.shingles_expr()}) "
             f"AS shingle FROM cells)")
 
 
@@ -634,7 +634,7 @@ ORACLES: dict[str, str] = {
                      AS n_dups
             FROM cells) WHERE doc_id = keep_id
         ),
-        rsh AS (SELECT DISTINCT doc_id, unnest({DD.shingles_expr(_DD)})
+        rsh AS (SELECT DISTINCT doc_id, unnest({DD.shingles_expr()})
                 AS shingle FROM reps),
         {_minhash_params_values()},
         minh AS (

@@ -120,6 +120,11 @@ def get_spark(
     shuffle_partitions: defaults to max(parallelism, 32) locally. On a real
     cluster this would be sized so post-shuffle partitions are 100-200 MB;
     AQE coalescing then trims small ones at runtime.
+
+    Cached plans may coalesce too (canChangeCachedPlanOutputPartitioning,
+    off by default in Spark 4.1): otherwise a cached()/checkpointed() frame
+    keeps all shuffle_partitions partitions however few rows it holds, and
+    every later read of it launches that many tasks.
     """
     if parallelism is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -138,6 +143,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -62,6 +62,24 @@ def test_cache_scope_ownership(spark):
     assert not _is_cached(mine)
 
 
+def test_cached_aggregate_coalesces(spark):
+    """A cached plan may change its output partitioning, so AQE coalesces
+    a tiny cached aggregate like any other shuffle: it holds at most
+    defaultParallelism partitions, not one per shuffle partition, and a
+    later read launches that many tasks."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        with cache_scope():
+            agg = cached(spark.range(1000).selectExpr("id % 7 AS k")
+                         .groupBy("k").count())
+            assert agg.count() == 7
+            assert agg.rdd.getNumPartitions() <= \
+                spark.sparkContext.defaultParallelism < 32
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 @pytest.mark.parametrize("meminfo,want", [
     ("MemTotal:       15728640 kB\nMemFree:  1 kB\n", "7680m"),  # 15 GiB
     ("MemTotal:       33554432 kB\n", "16g"),   # half is exactly 16 GiB

@@ -8,18 +8,18 @@ import pandas as pd
 from setsm_postprocessing_python_spark.operators.merge import _coregister
 
 
-def _mk(group, blocks, z, bx, by, side="a"):
-    # the kernel consumes PER-BLOCK PARTIALS (zsum, n); these fixtures use
-    # one value per block, so zsum = z and n = 1
+def _mk(host, blocks, z, bx, by, side="a"):
+    # the kernel consumes PER-BLOCK PARTIALS (zsum, n) and the side's host
+    # number; these fixtures use one value per block, so zsum = z, n = 1
     if side == "a":
         return pd.DataFrame({
-            "pair": ["p0"] * len(blocks), "group_id": [group] * len(blocks),
+            "pair": ["p0"] * len(blocks), "host_n": [host] * len(blocks),
             "zsum": z, "n": [1] * len(blocks),
             "bx": bx, "by": by, "block": blocks,
         })
     # right cogroup side carries renamed columns (see operators/merge.py)
     return pd.DataFrame({
-        "pair": ["p0"] * len(blocks), "group_id_b": [group] * len(blocks),
+        "pair": ["p0"] * len(blocks), "host_n_b": [host] * len(blocks),
         "zsum_b": z, "n_b": [1] * len(blocks), "block_b": blocks,
     })
 
@@ -36,10 +36,11 @@ def test_coreg_recovers_planar_offset():
     za = rng.normal(50, 5, len(blocks))
     true = (2.5, 0.3, -0.2)  # dz + dx*x + dy*y
     zb = za + true[0] + true[1] * bx + true[2] * by
-    a = _mk("host0", blocks, za, bx, by)
-    b = _mk("host1", blocks, zb, bx, by, side="b")
+    a = _mk(0, blocks, za, bx, by)
+    b = _mk(1, blocks, zb, bx, by, side="b")
     out = _coregister(("p0",), a, b).iloc[0]
     assert out["status"] == "ok"
+    assert (out["group_a"], out["group_b"]) == ("host0", "host1")
     assert abs(out["dz"] - true[0]) < 1e-6
     assert abs(out["dx"] - true[1]) < 1e-6
     assert abs(out["dy"] - true[2]) < 1e-6
@@ -57,16 +58,16 @@ def test_coreg_outlier_gate():
     za = rng.normal(50, 1, len(blocks))
     zb = za + 3.0
     zb[0] += 500.0  # gross outlier, must be rejected by the 3-sigma gate
-    a = _mk("host0", blocks, za, bx, by)
-    b = _mk("host1", blocks, zb, bx, by, side="b")
+    a = _mk(0, blocks, za, bx, by)
+    b = _mk(1, blocks, zb, bx, by, side="b")
     out = _coregister(("p0",), a, b).iloc[0]
     assert out["status"] == "ok"
     assert abs(out["dz"] - 3.0) < 0.5
 
 
 def test_coreg_too_few_points():
-    a = _mk("host0", [1, 2], [1.0, 2.0], [1.0, 2.0], [0.0, 0.0])
-    b = _mk("host1", [1, 2], [1.0, 2.0], [1.0, 2.0], [0.0, 0.0], side="b")
+    a = _mk(0, [1, 2], [1.0, 2.0], [1.0, 2.0], [0.0, 0.0])
+    b = _mk(1, [1, 2], [1.0, 2.0], [1.0, 2.0], [0.0, 0.0], side="b")
     out = _coregister(("p0",), a, b).iloc[0]
     assert out["status"] == "no_overlap"
     assert np.isnan(out["dz"])

@@ -1,14 +1,17 @@
 """Dedup operator unit tests beyond the oracle parity suite: the
-hot-shingle max_df scale knob and minhash/jaccard agreement."""
+hot-shingle max_df scale knob, the shingle kernel against its DuckDB twin
+and minhash/jaccard agreement."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import duckdb
 
 from setsm_postprocessing_python_spark.operators.dedup import (
+    band_signatures,
     jaccard_pairs,
     lsh_candidate_pairs,
-    minhash_signatures,
+    shingle_rows,
+    shingles_expr,
 )
 
 
@@ -38,15 +41,43 @@ def test_jaccard_max_df_is_subset_and_drops_hot_shingle_pairs(spark):
 
 
 def test_minhash_signature_duplicate_insensitive(spark):
-    # identical texts -> identical signatures; repeated words don't matter
-    df = _docs(spark, ["a b c d e f", "a b c d e f", "a a b b c c d e f a"])
-    sig = (minhash_signatures(df)
-           .groupBy("doc_id")
-           .agg(F.array_sort(F.collect_list(
-               F.concat_ws(":", "hash_idx", "minhash"))).alias("s"))
-           .collect())
-    by_id = {r.doc_id: tuple(r.s) for r in sig}
+    # identical texts -> identical band signatures; a repeated shingle
+    # does not matter: "a b c a b c a b" has the shingle set of
+    # "a b c a b" (abc, bca, cab), each shingle twice
+    df = _docs(spark, ["a b c d e f", "a b c d e f",
+                       "a b c a b c a b", "a b c a b"])
+    by_id: dict = {}
+    for r in band_signatures(df).collect():
+        by_id.setdefault(r.doc_id, {})[r.band] = r.band_sig
+    assert len(by_id[0]) == 4
     assert by_id[0] == by_id[1]
+    assert by_id[2] == by_id[3]
+    assert by_id[0] != by_id[2]
+
+
+# NULL, empty, 1-3 tokens, double/leading/trailing spaces (empty tokens),
+# repeated shingles and non-ASCII words
+SHINGLE_TEXTS = [None, "", " ", "a", "a b", "a b c", "a b c d",
+                 "a  b c", " a b c", "a b c ", "  a b  ",
+                 "x y z x y z x y z", "naïve café über straße 東京 ok",
+                 "ß ẞ ǅ ﬁ"]
+
+
+def test_shingle_rows_match_duckdb_twin(spark):
+    """shingle_rows (split once, zipped slices) yields exactly the rows of
+    the oracle's unnest(shingles_expr()), duplicates included."""
+    rows = list(enumerate(SHINGLE_TEXTS))
+    got = sorted(map(tuple, shingle_rows(_docs(spark, SHINGLE_TEXTS))
+                     .collect()))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
+    want = sorted(con.execute(
+        f"SELECT doc_id, unnest({shingles_expr()}) FROM d").fetchall())
+    assert got == want
+    assert ((5, "a b c") in got and (6, "a b c") in got
+            and (7, "a  b") in got and sum(r[0] == 11 for r in got) == 7)
+    assert not any(r[0] in (0, 1, 2, 3, 4) for r in got)
 
 
 def test_lsh_catches_identical_docs(spark):

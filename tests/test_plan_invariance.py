@@ -18,7 +18,9 @@ CONFIGS = {
           "spark.sql.adaptive.enabled": "true"},
     "B": {"spark.sql.shuffle.partitions": "61",
           "spark.sql.adaptive.enabled": "false",
-          "spark.sql.autoBroadcastJoinThreshold": "-1"},
+          "spark.sql.autoBroadcastJoinThreshold": "-1",
+          "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning":
+              "false"},
 }
 KEYS = sorted({k for conf in CONFIGS.values() for k in conf})
 
@@ -49,6 +51,10 @@ QUERIES = {
     "q_near_dup": QE.q_near_dup,
     "q_dedup_exact": Q.q_dedup_exact,
     "q_fingerprint": QE.q_fingerprint,
+    # the rest of the spatial bench stages
+    "q_tile_counts": Q.q_tile_counts,
+    "q_tile_assign": Q.q_tile_assign,
+    "q_mask_filter": Q.q_mask_filter,
 }
 
 

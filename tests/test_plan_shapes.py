@@ -391,15 +391,18 @@ def test_strip_family_plan_counts(spark, name):
     assert (n_exchanges(plan), fits) == STRIP_PLANS[name]
 
 
-def test_held_strip_assembly_hash_aggregates(spark):
-    """With a held coreg table no fit runs, so the side-block aggregate
-    carries no min(group_id) and stays a hash aggregate: min over a
-    string plans a sort-based aggregate, a sort of every page row."""
+@pytest.mark.parametrize("name", ["q_coregister", "q_strip_assembly",
+                                  "strip_assemble", "strip_assemble_held"])
+def test_strip_side_blocks_hash_aggregate(spark, name):
+    """The side-block aggregate stays a hash aggregate. A fit takes its
+    group label as the min of the integer host number: min over the
+    group_id string plans a SortAggregate, a sort of every page row.
+    With a held coreg table no fit runs and no label is taken."""
     from setsm_postprocessing_python_spark.session import cache_scope
 
     with cache_scope():
-        plan = _strip_family_plan(spark, "strip_assemble_held")
-    assert "SortAggregate" not in plan
+        plan = _strip_family_plan(spark, name)
+    assert "HashAggregate" in plan and "SortAggregate" not in plan
 
 
 # Exchange, ArrowEvalPython, MapInArrow (the re-rank kernel, one call
@@ -430,3 +433,40 @@ def test_ann_plan_counts(spark, name):
     assert (n_exchanges(plan), _n_nodes(plan, "ArrowEvalPython"),
             _n_nodes(plan, "MapInArrow"),
             _n_nodes(plan, "Window")) == ANN_PLANS[name]
+
+
+def test_ann_lsh_final_plan_reuses_collapse_exchange(spark):
+    """lsh_topk's collapse aggregate has three readers (the re-rank
+    entries, the member explode and the neighbour-slice explode), and the
+    initial plan plans its embedding-keyed Exchange once per reader. At
+    run time AQE shuffles it once: the final plan holds one such
+    Exchange, and the other two readers are ReusedExchanges of it."""
+    import re
+
+    from setsm_postprocessing_python_spark.plans import queries_ext as QE
+    from setsm_postprocessing_python_spark.session import cache_scope
+
+    with cache_scope():
+        out = QE.q_ann_lsh(spark, SF)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    key = r"Exchange hashpartitioning\(embedding#\d+, \d+\)[^\n]*plan_id=(\d+)"
+    own = re.findall(r"\+- " + key, final)
+    reused = re.findall(r"ReusedExchange [^\n]*" + key, final)
+    assert len(own) == 1 and reused == own * 2
+
+
+@pytest.mark.parametrize("kernel", ["_minhash_wide", "exploded_shingles"])
+def test_shingle_kernel_is_lambda_free(spark, kernel):
+    """The shingle rows come from zipped slices of one split, not from a
+    transform(sequence(..), i -> ..) lambda: a higher-order function is
+    interpreted, outside whole-stage codegen, and re-split the text for
+    every shingle."""
+    from setsm_postprocessing_python_spark.operators import dedup as DD
+    from setsm_postprocessing_python_spark.sources.pages import read_parquet
+
+    docs, _ = read_parquet(spark, f"{SF}/documents.parquet")
+    plan = formatted_plan(getattr(DD, kernel)(docs))
+    assert "Generate" in plan and "lambdafunction" not in plan
