@@ -449,19 +449,17 @@ def _feathered(j: DataFrame, overlap):
                     F.lit(1.0)))
 
 
-def feather_blend(df: DataFrame) -> DataFrame:
-    """Blend the two sides of each host pair over shared coarse blocks with
-    a linear feather weight across the overlap's x-span, rescaled
-    clip((w - 0.25) / (0.55 - 0.25), 0, 1) per lib/scenes2strips.py:461-476;
-    value blend w*zA + (1-w)*zB (:634-692), presence OR, flags bit_or.
+def paired_blocks(df: DataFrame, keys: tuple[str, ...],
+                  flags: bool = False) -> DataFrame:
+    """One row per `keys` group that both sides of its host pair reach:
+    each side's z sum and page count (sza/na for side 0, szb/nb for side
+    1) and, with `flags`, its flags bit_or (fla/flb). `keys` name columns
+    of df or of the derived z, bx, block, side and pair.
 
-    Pure JVM expressions. Plan shape (round 7): BOTH sides of a pair ride
-    ONE groupBy(pair, block) with side-conditional aggregates — the former
-    side-split self-join computed the aggregation subtree twice (no
-    exchange reuse across the aliased sides) and sort-merge-joined the
-    halves back (guide §2.4). The weight is _feathered's span weight.
-    The per-(pair, block) table is cached (it is read by the span agg and
-    the final projection; it is block-grid bounded, i.e. tiny)."""
+    Plan shape (round 7): BOTH sides ride ONE groupBy with
+    side-conditional aggregates — a side-split self-join computes the
+    aggregation subtree twice (no exchange reuse across the aliased sides)
+    and sort-merge-joins the halves back (guide §2.4)."""
     derived = ("z", "bx", "block", "side", "pair")
     base = df.select(
         *[c for c in df.columns if c not in derived],
@@ -470,15 +468,28 @@ def feather_blend(df: DataFrame) -> DataFrame:
         F.expr(D.block_id_expr(D.SPARK)).alias("block"),
         host_side(F.col("group_id")).alias("side"),
         pair_number(F.col("group_id")).alias("pair"))
-    in_a, in_b = F.col("side") == 0, F.col("side") == 1
-    j = cached(base.groupBy("pair", "block", "bx").agg(
-            F.sum(F.when(in_a, F.col("z"))).alias("sza"),
-            F.count(F.when(in_a, F.lit(1))).alias("na"),
-            F.bit_or(F.when(in_a, F.col("flags"))).alias("fla"),
-            F.sum(F.when(in_b, F.col("z"))).alias("szb"),
-            F.count(F.when(in_b, F.lit(1))).alias("nb"),
-            F.bit_or(F.when(in_b, F.col("flags"))).alias("flb"))
-         .where((F.col("na") > 0) & (F.col("nb") > 0)))
+    aggs = []
+    for k, s in enumerate("ab"):
+        on = F.col("side") == k
+        aggs += [F.sum(F.when(on, F.col("z"))).alias(f"sz{s}"),
+                 F.count(F.when(on, F.lit(1))).alias(f"n{s}")]
+        if flags:
+            aggs.append(F.bit_or(F.when(on, F.col("flags"))).alias(f"fl{s}"))
+    return (base.groupBy(*keys).agg(*aggs)
+            .where((F.col("na") > 0) & (F.col("nb") > 0)))
+
+
+def feather_blend(df: DataFrame) -> DataFrame:
+    """Blend the two sides of each host pair over shared coarse blocks with
+    a linear feather weight across the overlap's x-span, rescaled
+    clip((w - 0.25) / (0.55 - 0.25), 0, 1) per lib/scenes2strips.py:461-476;
+    value blend w*zA + (1-w)*zB (:634-692), presence OR, flags bit_or.
+
+    Pure JVM expressions over paired_blocks; the weight is _feathered's
+    span weight. The per-(pair, block) table is cached (it is read by the
+    span agg and the final projection; it is block-grid bounded, i.e.
+    tiny)."""
+    j = cached(paired_blocks(df, ("pair", "block", "bx"), flags=True))
     j, wgt = _feathered(j, F.lit(True))
     return j.select(
         "pair", "block",

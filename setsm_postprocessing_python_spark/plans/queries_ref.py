@@ -165,25 +165,7 @@ def q_diff_strips(spark: SparkSession, sf_dir: str) -> DataFrame:
     per host pair, per shared coarse block: dz = mean(z_odd) - mean(z_even);
     the block with the highest combined page count is the best crop window
     (argmax -> row_number()=1, ties by block id)."""
-    gp = P.geocoded_pages(spark, sf_dir)
-    derived = ("z", "block", "side", "pair")
-    base = gp.select(
-        *[c for c in gp.columns if c not in derived],
-        F.expr(D.z_expr(D.SPARK)).alias("z"),
-        F.expr(D.block_id_expr(D.SPARK)).alias("block"),
-        M.host_side(F.col("group_id")).alias("side"),
-        M.pair_number(F.col("group_id")).alias("pair"))
-    # both sides ride ONE groupBy(pair, block) with side-conditional
-    # aggregates (round 7, same shape as feather_blend): the former
-    # side-split self-join computed the aggregation subtree twice and
-    # joined the halves back (guide §2.4)
-    in_a, in_b = F.col("side") == 0, F.col("side") == 1
-    j = (base.groupBy("pair", "block").agg(
-            F.sum(F.when(in_a, F.col("z"))).alias("sza"),
-            F.count(F.when(in_a, F.lit(1))).alias("na"),
-            F.sum(F.when(in_b, F.col("z"))).alias("szb"),
-            F.count(F.when(in_b, F.lit(1))).alias("nb"))
-         .where((F.col("na") > 0) & (F.col("nb") > 0)))
+    j = M.paired_blocks(P.geocoded_pages(spark, sf_dir), ("pair", "block"))
     w = Window.partitionBy("pair").orderBy(
         (F.col("na") + F.col("nb")).desc(), F.col("block").asc())
     return (j.withColumn("win_rank", F.row_number().over(w))

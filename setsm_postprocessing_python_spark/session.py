@@ -17,6 +17,9 @@ from typing import Callable
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
+# the directory that holds this package, put on the Python workers' path
+PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+
 # ---------------------------------------------------------------------------
 # cache lifetime: the one owner of every persist the engine makes
 # ---------------------------------------------------------------------------
@@ -125,6 +128,13 @@ def get_spark(
     off by default in Spark 4.1): otherwise a cached()/checkpointed() frame
     keeps all shuffle_partitions partitions however few rows it holds, and
     every later read of it launches that many tasks.
+
+    The Python workers run under the engine's daemon, `pyworker`
+    (spark.python.daemon.module), which stops CPython 3.11 from re-reading
+    pyspark.zip's directory before every Python task; its docstring says
+    why that is safe. The workers import it by package name, so the
+    package root is merged into spark.executorEnv.PYTHONPATH, and a
+    session works from any working directory with PYTHONPATH unset.
     """
     if parallelism is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -162,10 +172,15 @@ def get_spark(
         # dirs these are left to their defaults.
         .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.file.transferTo", "false")
+        .config("spark.python.daemon.module",
+                "setsm_postprocessing_python_spark.pyworker")
     )
     if os.path.isdir("/dev/shm"):
         builder = builder.config("spark.local.dir", "/dev/shm/spark-tmp")
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(filter(None, (
+        PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH"))))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,6 +1,5 @@
-"""Physical-plan inspection helpers shared by the plan-shape tests and
-the layout benches — one implementation so the pytest pin and the
-published bench numbers can never drift apart."""
+"""Physical-plan inspection helpers shared by the plan-shape and layout
+tests: one Exchange count, so the pins cannot drift apart."""
 
 from __future__ import annotations
 

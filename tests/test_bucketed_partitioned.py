@@ -22,8 +22,8 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
-from setsm_postprocessing_python_spark.plans.planview import (
-    formatted_plan, n_exchanges)
+
+from .planview import formatted_plan, n_exchanges
 
 SF = "/root/testdata/sf0.001"
 

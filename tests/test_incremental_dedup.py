@@ -33,13 +33,10 @@ from setsm_postprocessing_python_spark.operators.dedup import (
     lsh_candidate_pairs,
     merge_exact_groups,
 )
-from setsm_postprocessing_python_spark.plans.planview import (
-    formatted_plan,
-    n_exchanges,
-)
 from setsm_postprocessing_python_spark.session import cache_scope
 
 from .conftest import persisted_rdd_ids
+from .planview import formatted_plan, n_exchanges
 
 BASE = " ".join(f"w{i}" for i in range(40))
 

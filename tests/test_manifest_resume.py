@@ -233,7 +233,7 @@ import pyspark.sql.functions as F
 from setsm_postprocessing_python_spark.session import get_spark
 from setsm_postprocessing_python_spark.sources.bucketed import (
     ensure_bucketed_pages)
-from setsm_postprocessing_python_spark.plans.planview import n_exchanges
+from tests.planview import n_exchanges
 
 spark = get_spark(parallelism=4, app_name="chaos-layout",
                   shuffle_partitions=4)

@@ -172,9 +172,7 @@ assert q_pipeline_rollup(spark, {SF!r}).count() > 0
 """
     tmp = tmp_path / "tmp"
     tmp.mkdir()
-    env = {**os.environ, "TMPDIR": str(tmp),
-           "PYTHONPATH": os.pathsep.join(
-               [str(REPO), os.environ.get("PYTHONPATH", "")])}
+    env = {**os.environ, "TMPDIR": str(tmp)}
     done = subprocess.run([sys.executable, "-c", script], env=env,
                           capture_output=True, text=True, timeout=580)
     assert done.returncode == 0, done.stderr[-2000:]

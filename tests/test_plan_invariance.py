@@ -6,10 +6,13 @@ from __future__ import annotations
 
 import pytest
 
+from setsm_postprocessing_python_spark.operators import merge as M
+from setsm_postprocessing_python_spark.operators.flags import with_flags
 from setsm_postprocessing_python_spark.plans import queries as Q
 from setsm_postprocessing_python_spark.plans import queries_ext as QE
 from setsm_postprocessing_python_spark.plans import queries_ref as QR
 from setsm_postprocessing_python_spark.session import cache_scope
+from setsm_postprocessing_python_spark.sources.pages import geocoded_pages
 
 from .conftest import SF_TINY
 
@@ -23,6 +26,14 @@ CONFIGS = {
               "false"},
 }
 KEYS = sorted({k for conf in CONFIGS.values() for k in conf})
+
+
+def strip_assembly_host(spark, sf_dir):
+    """bench.py's strip_assembly_host: strip_assemble at the host-pair
+    grain, which is not a registered query."""
+    return M.strip_assemble(with_flags(geocoded_pages(spark, sf_dir)),
+                            max_rmse=M.SYNTHETIC_Z_MAX_RMSE)
+
 
 QUERIES = {
     "q_ann_lsh": QE.q_ann_lsh,
@@ -47,6 +58,7 @@ QUERIES = {
     "q_feather_blend": QE.q_feather_blend,
     "q_feather_field": QE.q_feather_field,
     "q_diff_strips": QR.q_diff_strips,
+    "strip_assembly_host": strip_assembly_host,
     # the rest of the dedup_ann workload's stages
     "q_near_dup": QE.q_near_dup,
     "q_dedup_exact": Q.q_dedup_exact,

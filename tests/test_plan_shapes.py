@@ -5,8 +5,8 @@ pushdown, broadcast of small sides)."""
 from __future__ import annotations
 
 import pytest
-from setsm_postprocessing_python_spark.plans.planview import (
-    formatted_plan, n_exchanges)
+
+from .planview import formatted_plan, n_exchanges
 
 SF = "/root/testdata/sf0.001"
 

@@ -30,8 +30,7 @@ def src_dir(spark):
 
 
 def test_stream_maintains_layout_exactly_once(spark, src_dir, tmp_path):
-    from setsm_postprocessing_python_spark.plans.planview import (
-        formatted_plan, n_exchanges)
+    from .planview import formatted_plan, n_exchanges
     from setsm_postprocessing_python_spark.sources import bucketed as B
     from setsm_postprocessing_python_spark.streaming.stream import (
         write_stream_into_layout)
