@@ -396,23 +396,6 @@ def _signature_meta() -> dict:
             "params_crc": zlib.crc32(repr(MINHASH_PARAMS).encode())}
 
 
-def ingest_signatures(spark, path: str, table: str, build,
-                      ingest_id: str, n_buckets: int = 8,
-                      id_col: str = "doc_id"):
-    """Append a batch's signatures to the state table (exactly-once,
-    kill-safe — sources/bucketed.ensure_bucketed_ingest: replayed
-    ingest_ids no-op, torn appends are swept on the next call). The
-    per-batch flow is: probe first (incremental_near_dup against the
-    current table), then ingest the batch's signatures under the batch
-    id. Returns (table_df, did_append)."""
-    from ..sources.bucketed import ensure_bucketed_ingest
-
-    return ensure_bucketed_ingest(
-        spark, path, table,
-        build=lambda: band_signatures(build(), id_col),
-        ingest_id=ingest_id, n_buckets=n_buckets, key="band_sig")
-
-
 # ---------------------------------------------------------------------------
 # dedup resolution: pairs -> components -> keep/drop decisions
 # ---------------------------------------------------------------------------

@@ -6,7 +6,8 @@ Reference semantics: uint8 mask, bit 0 = EDGE, bit 1 = WATER, bit 2 = CLOUD
   lib/filter_scene.py:461-679, recast to text statistics),
 - bit-unset filtering: clear unselected bits, then mask>0
   (lib/scenes2strips.py:1160-1174, batch_mask.py:853-866),
-- bit_or merge across members of a cell/group (lib/scenes2strips.py:691),
+- bit_or merge across members of a group (lib/scenes2strips.py:691;
+  nodata_policy_stats' census and feather_blend's flags_merged),
 - mask application: value -> NULL where selected bits set
   (batch_mask.py:944-958 nodata policy, engine uses NULL never sentinels).
 
@@ -48,16 +49,6 @@ def masked(df: DataFrame, value_col: str, flags: str = "flags") -> DataFrame:
     return df.withColumn(
         value_col,
         F.when(F.col(flags) > 0, F.lit(None)).otherwise(F.col(value_col)),
-    )
-
-
-def cell_flags_merge(df: DataFrame, key: str = "cell", flags: str = "flags") -> DataFrame:
-    """bit_or merge of flags across pages sharing a cell
-    (lib/scenes2strips.py:691: MD = bitwise_or(MDsub, mdi)). Map-side
-    partial aggregation applies (bit_or is associative/commutative)."""
-    return df.groupBy(key).agg(
-        F.expr(f"bit_or({flags})").alias("flags_merged"),
-        F.count(F.lit(1)).alias("n_pages"),
     )
 
 

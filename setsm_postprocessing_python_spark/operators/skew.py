@@ -1,29 +1,18 @@
-"""Skew handling: hot-key detection + salted two-stage aggregation.
+"""Skew handling: salted two-stage count.
 
 Reference analogue: densely-overlapping strips concentrate work on few
-tiles; the engine's hot cells concentrate rows on few keys. Per the north
-rule, skew is handled explicitly:
-
-1. measure: a cheap count pre-pass finds keys above a threshold,
-2. salt: hot keys get a salt suffix pmod(hash(row-id-ish), S) so their rows
-   spread over S reducers,
-3. aggregate in two stages: partial agg on (key, salt), final agg on key.
-
-Correct for any associative+commutative aggregate (counts, sums, min/max,
-bit_or). AQE's skew-join splitting covers the join side; this covers
-aggregations, which AQE does not re-balance.
+tiles; the engine's hot cells concentrate rows on few keys. Salting
+spreads a hot key's rows over S reducers: each row gets a salt
+pmod(xxhash64(row-id-ish), S), a partial count runs on (key, salt) and
+a final sum on key. Exact for counts (associative and commutative).
+AQE's skew-join splitting covers the join side; this covers the
+aggregation, which AQE does not re-balance.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-
-def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Keys whose row count exceeds threshold (the measurement pre-pass)."""
-    return (df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-              .where(F.col("n") > threshold).select(key))
 
 
 def salted_count(df: DataFrame, key: str, salt_buckets: int = 32,
@@ -35,29 +24,3 @@ def salted_count(df: DataFrame, key: str, salt_buckets: int = 32,
         "_salt", F.pmod(F.xxhash64(F.col(salt_source)), F.lit(salt_buckets)))
     partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("pn"))
     return partial.groupBy(key).agg(F.sum("pn").cast("bigint").alias("n"))
-
-
-def salted_agg(df: DataFrame, key: str, aggs: dict[str, tuple[str, str]],
-               salt_buckets: int = 32, salt_source: str = "url") -> DataFrame:
-    """Generalized two-stage agg for decomposable aggregates.
-
-    aggs: {out_name: (col, fn)} with fn in {sum, count, min, max, bit_or}.
-    Stage 1 computes fn over (key, salt); stage 2 re-combines with the
-    matching combiner (count -> sum). Exact under any partitioning because
-    every supported fn is associative and commutative."""
-    combiner = {"sum": "sum", "count": "sum", "min": "min",
-                "max": "max", "bit_or": "bit_or"}
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(salt_source)), F.lit(salt_buckets)))
-    partial_exprs = []
-    for name, (col, fn) in aggs.items():
-        if fn not in combiner:
-            raise ValueError(f"non-decomposable aggregate: {fn}")
-        expr = f"count({col})" if fn == "count" else f"{fn}({col})"
-        partial_exprs.append(F.expr(expr).alias(f"_p_{name}"))
-    partial = salted.groupBy(key, "_salt").agg(*partial_exprs)
-    final_exprs = [
-        F.expr(f"{combiner[aggs[name][1]]}(_p_{name})").alias(name)
-        for name in aggs
-    ]
-    return partial.groupBy(key).agg(*final_exprs)

@@ -353,7 +353,7 @@ def q_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans/manifest.run_stage (partitioned parquet, fingerprint lineage,
     .fin-style commit record), although only the rollup, which reads tile
     assign alone, is returned; running just the stages a target needs is
-    ROADMAP item 6. Returns the FINAL stage read back from its committed
+    ROADMAP item 4. Returns the FINAL stage read back from its committed
     files, so the driver hash-checks the whole write/read path; the
     oracle recomputes the rollup straight off the pages CTE.
     A fixed per-(process, sf_dir) workdir, cleared on entry, keeps

@@ -24,12 +24,13 @@ PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 # cache lifetime: the one owner of every persist the engine makes
 # ---------------------------------------------------------------------------
 # cached()/checkpointed() register a release with the innermost
-# cache_scope() open on the CURRENT thread (foreachBatch bodies run on the
-# py4j callback thread). Outside any scope it lands in the process-wide
-# default scope, kept until release_caches(): bench.py and the benchmark
-# re-invoke registered queries unscoped and their warm passes reuse these
-# caches (Spark's CacheManager dedupes a re-persist of an identical plan,
-# so repeated calls add no entries).
+# cache_scope() open on the CURRENT thread: any thread can drive Spark (a
+# driver thread pool, a py4j callback), and closing one thread's scope
+# must not release another thread's caches. Outside any scope it lands in
+# the process-wide default scope, kept until release_caches(): bench.py
+# and the benchmark re-invoke registered queries unscoped and their warm
+# passes reuse these caches (Spark's CacheManager dedupes a re-persist of
+# an identical plan, so repeated calls add no entries).
 Release = Callable[[], object]
 
 

@@ -7,9 +7,9 @@ instead of cropping rasters to the shared subwindow before every kernel,
 the pages table is laid out ONCE so every spatial equi-join finds both
 sides already co-located.
 
-In production this is the Iceberg partition transform `bucket(N, block)`
-(plus days(warc_ts)); in the sandbox it is a Spark-native bucketed parquet
-table (`bucketBy(N, block)` + `saveAsTable`), which carries the same
+In production this is the Iceberg partition transform `bucket(N, block)`;
+in the sandbox it is a Spark-native bucketed parquet table
+(`bucketBy(N, block)` + `saveAsTable`), which carries the same
 hash-partitioning contract: a scan of the table reports
 HashPartitioning(block, N), so Catalyst drops the Exchange on that side of
 any equi-join keyed on `block` (see tests/test_plan_shapes.py — the flat
@@ -63,30 +63,17 @@ def blocked_pages(spark: SparkSession, sf_dir: str,
 
 def write_bucketed(spark: SparkSession, df: DataFrame, path: str,
                    table: str, n_buckets: int = 8,
-                   key: str = "block",
-                   partition_by: str | None = None) -> DataFrame:
+                   key: str = "block") -> DataFrame:
     """Write any frame bucketed (and sorted) by `key`, return the catalog
     table. At 10^12 rows this is the once-per-ingest layout job whose cost
     every downstream spatial join amortizes; n_buckets would be sized so
     each bucket is a few hundred MB (here 8 matches the test session's
-    parallelism).
-
-    `partition_by` adds a directory-partition dimension ON TOP of the
-    bucketing — the full Iceberg `days(ts) x bucket(N, key)` analogue: a
-    time filter prunes whole partition directories at planning time
-    (PartitionFilters in the scan) while block-keyed equi-joins still
-    plan ZERO probe Exchanges, because bucketing is a table property
-    carried by every file regardless of which partition dir holds it
-    (both pinned in tests/test_bucketed_partitioned.py). For a web-crawl
-    corpus this is the production layout: queries over a crawl window
-    never list, open, or schedule the other 99% of the table."""
+    parallelism)."""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    w = df.repartition(n_buckets, F.col(key)).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    (w.bucketBy(n_buckets, key).sortBy(key)
-      .option("path", path).format("parquet")
-      .saveAsTable(table))
+    (df.repartition(n_buckets, F.col(key)).write.mode("overwrite")
+       .bucketBy(n_buckets, key).sortBy(key)
+       .option("path", path).format("parquet")
+       .saveAsTable(table))
     return spark.table(table)
 
 
@@ -99,9 +86,7 @@ def _schema_ddl(df: DataFrame) -> str:
 
 def ensure_bucketed(spark: SparkSession, path: str, table: str,
                     build, meta: dict, n_buckets: int = 8,
-                    key: str = "block",
-                    partition_by: str | None = None
-                    ) -> tuple[DataFrame, bool]:
+                    key: str = "block") -> tuple[DataFrame, bool]:
     """Generic idempotent, kill-safe layout job. Returns
     (table_df, did_write). `build()` produces the frame to lay out;
     `meta` identifies the input (staleness check — a marker recording a
@@ -115,15 +100,15 @@ def ensure_bucketed(spark: SparkSession, path: str, table: str,
       bucket spec, so a fresh session's scans still report
       HashPartitioning(key, N) and keep the shuffle elimination (pinned
       in tests/test_plan_shapes.py).
-    - Marker absent or stale (a killed/partial write, or a different
-      corpus/grain): drop the table, delete the dir, rewrite, then commit
-      the marker LAST (the record.py protocol).
+    - Marker absent, torn, without a `files` list, or stale (a
+      killed/partial write, or a different corpus/grain): drop the table,
+      delete the dir, rewrite, then commit the marker LAST (the record.py
+      protocol).
     """
     p = Path(path)
     marker = p / LAYOUT_MARKER
-    want = {**meta, "n_buckets": n_buckets, "key": key,
-            "partition_by": partition_by}
-    rec = read_record(marker)
+    want = {**meta, "n_buckets": n_buckets, "key": key}
+    rec = _layout_record(marker)
     if rec is not None and {k: rec.get(k) for k in want} == want:
         _register_table(spark, table, rec, path)
         return spark.table(table), False
@@ -138,8 +123,7 @@ def ensure_bucketed(spark: SparkSession, path: str, table: str,
     try:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(p, ignore_errors=True)
-        tbl = write_bucketed(spark, build(), path, table, n_buckets, key,
-                             partition_by=partition_by)
+        tbl = write_bucketed(spark, build(), path, table, n_buckets, key)
         write_record(marker, {**want, "ddl": _schema_ddl(tbl),
                               "files": data_files(p), "ingests": []})
     finally:
@@ -149,13 +133,18 @@ def ensure_bucketed(spark: SparkSession, path: str, table: str,
     return tbl, True
 
 
+def _layout_record(marker: Path) -> dict | None:
+    """The marker of a completed layout, or None: absent, torn, or
+    without the `files` list that every committed layout carries."""
+    rec = read_record(marker)
+    return rec if rec is not None and "files" in rec else None
+
+
 def _register_table(spark: SparkSession, table: str, rec: dict,
                     path: str) -> None:
     """DDL re-registration of a trusted layout in a fresh session's
     in-memory catalog — declares the SAME bucket spec so scans keep
-    reporting HashPartitioning(key, N); partitioned layouts also recover
-    their partition dirs (catalog-tracked partitions, not dir listing,
-    drive partitioned scans).
+    reporting HashPartitioning(key, N).
 
     A pre-existing catalog entry is trusted only if its LOCATION is this
     layout's path — the same table name registered for a different path
@@ -165,14 +154,10 @@ def _register_table(spark: SparkSession, table: str, rec: dict,
         if _table_location(spark, table) == _norm_loc(path):
             return
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-    part = (f"PARTITIONED BY ({rec['partition_by']}) "
-            if rec.get("partition_by") else "")
     spark.sql(
         f"CREATE TABLE {table} ({rec['ddl']}) USING parquet "
-        f"{part}CLUSTERED BY ({rec['key']}) SORTED BY ({rec['key']}) "
+        f"CLUSTERED BY ({rec['key']}) SORTED BY ({rec['key']}) "
         f"INTO {rec['n_buckets']} BUCKETS LOCATION '{path}'")
-    if rec.get("partition_by"):
-        spark.sql(f"MSCK REPAIR TABLE {table}")
 
 
 def _norm_loc(loc: str) -> str:
@@ -203,14 +188,13 @@ def ensure_bucketed_ingest(spark: SparkSession, path: str, table: str,
     (`ingests`). Unlisted files (a torn or committed-but-unrecorded
     append) are removed; an applied ingest_id is a no-op (the checkfile,
     reference batch_scenes2strips.py:1518-1533); else append, then commit
-    files + ingest LAST. Markers written before `files` existed adopt
-    their current file set as known-good.
+    files + ingest LAST.
 
     Returns (table_df, did_append).
     """
     p = Path(path)
     marker = p / LAYOUT_MARKER
-    rec = read_record(marker)
+    rec = _layout_record(marker)
     if rec is None:
         raise ValueError(
             f"no completed layout at {path}: run ensure_bucketed first "
@@ -220,27 +204,16 @@ def ensure_bucketed_ingest(spark: SparkSession, path: str, table: str,
             f"layout at {path} is bucket({rec.get('n_buckets')}, "
             f"{rec.get('key')}), ingest asked for bucket({n_buckets}, "
             f"{key}) — appends must match the table's spec")
-    if "files" not in rec:  # pre-protocol marker: adopt current set
-        rec["files"] = data_files(p)
-        rec.setdefault("ingests", [])
-        write_record(marker, rec)
     orphans = remove_unlisted(p, rec["files"])
     _register_table(spark, table, rec, path)
     if orphans:
         spark.catalog.refreshTable(table)
     if ingest_id in rec.get("ingests", []):
         return spark.table(table), False
-    w = (build().repartition(n_buckets, F.col(key))
-         .write.mode("append"))
-    if rec.get("partition_by"):
-        w = w.partitionBy(rec["partition_by"])
-    (w.bucketBy(n_buckets, key).sortBy(key)
-      .option("path", path).format("parquet")
-      .saveAsTable(table))
-    if rec.get("partition_by"):
-        # an ingest may CREATE partition dirs; catalog-tracked partitions
-        # must be recovered before the files are visible to scans
-        spark.sql(f"MSCK REPAIR TABLE {table}")
+    (build().repartition(n_buckets, F.col(key)).write.mode("append")
+       .bucketBy(n_buckets, key).sortBy(key)
+       .option("path", path).format("parquet")
+       .saveAsTable(table))
     spark.catalog.refreshTable(table)
     rec["files"] = data_files(p)
     rec["ingests"] = rec.get("ingests", []) + [ingest_id]
@@ -259,33 +232,6 @@ def ensure_bucketed_pages(spark: SparkSession, sf_dir: str, path: str,
         build=lambda: blocked_pages(spark, sf_dir, block_shift),
         meta={"sf_dir": sf_dir, "block_shift": block_shift},
         n_buckets=n_buckets)
-
-
-def ensure_bucketed_pages_by_day(spark: SparkSession, sf_dir: str,
-                                 path: str,
-                                 table: str = "pages_bucketed_day",
-                                 n_buckets: int = 8,
-                                 block_shift: int = BLOCK_SHIFT,
-                                 ) -> tuple[DataFrame, bool]:
-    """The pages layout in the full Iceberg `days(ts) x bucket(N, block)`
-    shape: warc-day directory partitions OVER block bucketing. A crawl-
-    window filter prunes whole day directories at planning time while
-    block-keyed spatial joins still plan zero probe Exchanges — at 100 TB
-    a one-week query over a three-year crawl never lists, opens, or
-    schedules the other ~99% of the table. Daily ingests append a new
-    day dir via ensure_bucketed_ingest (exactly-once, kill-safe).
-
-    Not the registry default: the driver corpora span a handful of
-    synthetic days, so the flat-bucketed layout measures the join lever
-    without tiny-partition overhead; a real time-spanning corpus wants
-    this variant (pinned in tests/test_bucketed_partitioned.py)."""
-    return ensure_bucketed(
-        spark, path, table,
-        build=lambda: blocked_pages(spark, sf_dir, block_shift)
-            .withColumn("warc_day", F.to_date("warc_ts")),
-        meta={"sf_dir": sf_dir, "block_shift": block_shift,
-              "grain": "day"},
-        n_buckets=n_buckets, partition_by="warc_day")
 
 
 def activate_bucketed_pages(spark: SparkSession, table: str,

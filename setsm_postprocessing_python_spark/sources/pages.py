@@ -84,8 +84,8 @@ def pages(spark: SparkSession, sf_dir: str, with_html: bool = False) -> DataFram
     # its plan eagerly on the driver, and this is the root of nearly every
     # query — keeping it a single projection keeps per-invocation plan
     # cost flat. warc_ts is the real timestamp for engine-side use
-    # (windowing/streaming); oracle comparisons use warc_epoch (bigint)
-    # for stable hashing.
+    # (windowing); oracle comparisons use warc_epoch (bigint) for stable
+    # hashing.
     epoch = F.expr(D.warc_epoch_expr())
     cols = [
         F.expr(D.url_expr(D.SPARK)).alias("url"),

@@ -167,32 +167,6 @@ def test_ingest_guards_spec_and_missing_layout(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_ingest_adopts_pre_protocol_marker(spark, tmp_path):
-    """Layouts written before the ingest protocol existed (marker without
-    `files`) adopt their current file set as known-good instead of
-    nuking it as orphans."""
-    from setsm_postprocessing_python_spark.sources import bucketed as B
-
-    table = "t_ingest_adopt"
-    path = str(tmp_path / "layout")
-    p = Path(path)
-    try:
-        full, base, inc, tbl = _layout(spark, tmp_path, table)
-        n_base, n_full = base.count(), full.count()
-        marker = p / B.LAYOUT_MARKER
-        rec = json.loads(marker.read_text())
-        del rec["files"], rec["ingests"]
-        marker.write_text(json.dumps(rec))
-
-        tbl2, did = B.ensure_bucketed_ingest(
-            spark, path, table, build=lambda: inc,
-            ingest_id="half1", n_buckets=4)
-        assert did
-        assert tbl2.count() == n_full  # base files survived adoption
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_register_rejects_same_name_different_path(spark, tmp_path):
     """A catalog entry is trusted only if its LOCATION is the layout's
     path: the same table name registered for another workdir/corpus in
@@ -224,14 +198,21 @@ def test_register_rejects_same_name_different_path(spark, tmp_path):
 
 
 def test_torn_marker_is_treated_as_incomplete(spark, tmp_path):
-    """A torn (half-written) marker is an incomplete layout, not a crash:
+    """A torn (half-written) marker, or one without the `files` list every
+    committed layout carries, is an incomplete layout, not a crash:
     ensure_bucketed rewrites, ensure_bucketed_ingest refuses with the
     'run ensure_bucketed first' error. (Markers are committed via
-    write-to-temp + rename, so a torn marker can only predate the
-    protocol — it must still not wedge the layout forever.)"""
-    import pytest as _pytest
-
+    write-to-temp + rename, so neither can come from a clean commit — it
+    must still not wedge the layout forever.)"""
     from setsm_postprocessing_python_spark.sources import bucketed as B
+
+    def tear(marker):
+        marker.write_text(marker.read_text()[:17])
+
+    def drop_files(marker):
+        rec = json.loads(marker.read_text())
+        del rec["files"], rec["ingests"]
+        marker.write_text(json.dumps(rec))
 
     table = "t_torn_marker"
     path = str(tmp_path / "layout")
@@ -240,15 +221,18 @@ def test_torn_marker_is_treated_as_incomplete(spark, tmp_path):
         B.ensure_bucketed(spark, path, table, build=lambda: full,
                           meta={"grain": "full"}, n_buckets=2)
         marker = Path(path) / B.LAYOUT_MARKER
-        marker.write_text(marker.read_text()[:17])  # tear it
-        with _pytest.raises(ValueError, match="run ensure_bucketed first"):
-            B.ensure_bucketed_ingest(spark, path, table,
-                                     build=lambda: full.limit(1),
-                                     ingest_id="i1", n_buckets=2)
-        tbl, did = B.ensure_bucketed(spark, path, table, build=lambda: full,
-                                     meta={"grain": "full"}, n_buckets=2)
-        assert did, "torn marker must trigger the rewrite path"
-        assert tbl.count() == full.count()
+        for damage in (tear, drop_files):
+            damage(marker)
+            with pytest.raises(ValueError, match="run ensure_bucketed first"):
+                B.ensure_bucketed_ingest(spark, path, table,
+                                         build=lambda: full.limit(1),
+                                         ingest_id="i1", n_buckets=2)
+            tbl, did = B.ensure_bucketed(spark, path, table,
+                                         build=lambda: full,
+                                         meta={"grain": "full"},
+                                         n_buckets=2)
+            assert did, f"{damage.__name__} must trigger the rewrite path"
+            assert tbl.count() == full.count()
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 

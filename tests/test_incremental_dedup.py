@@ -29,11 +29,11 @@ from setsm_postprocessing_python_spark.operators.dedup import (
     exact_dedup,
     incremental_lsh_pairs,
     incremental_near_dup,
-    ingest_signatures,
     lsh_candidate_pairs,
     merge_exact_groups,
 )
 from setsm_postprocessing_python_spark.session import cache_scope
+from setsm_postprocessing_python_spark.sources.bucketed import ensure_bucketed_ingest
 
 from .conftest import persisted_rdd_ids
 from .planview import formatted_plan, n_exchanges
@@ -220,14 +220,15 @@ def test_signature_ingest_grows_state_exactly_once(spark, tmp_path):
         assert _pairs(incremental_lsh_pairs(band_signatures(b1), tbl)) \
             == want_b1
 
-        tbl, did = ingest_signatures(spark, path, table, build=lambda: b1,
-                                     ingest_id="b1", n_buckets=4)
+        tbl, did = ensure_bucketed_ingest(
+            spark, path, table, build=lambda: band_signatures(b1),
+            ingest_id="b1", n_buckets=4, key="band_sig")
         assert did
         assert tbl.count() == band_signatures(
             old.unionByName(b1)).count()
-        _, did_again = ingest_signatures(spark, path, table,
-                                         build=lambda: b1,
-                                         ingest_id="b1", n_buckets=4)
+        _, did_again = ensure_bucketed_ingest(
+            spark, path, table, build=lambda: band_signatures(b1),
+            ingest_id="b1", n_buckets=4, key="band_sig")
         assert not did_again  # checkfile: replay no-ops
 
         all12 = old.unionByName(b1).unionByName(b2)

@@ -18,6 +18,8 @@ from setsm_postprocessing_python_spark.plans.manifest import (
 )
 from setsm_postprocessing_python_spark.sources.pages import pages
 
+from .conftest import REPO
+
 
 @pytest.fixture()
 def out_dir():
@@ -143,9 +145,9 @@ def test_truncated_record_reruns_every_unit(spark, out_dir):
                       .collect())) == clean
 
 
-_PIPELINE_SCRIPT = """
+_PIPELINE_SCRIPT = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {str(REPO)!r})
 from setsm_postprocessing_python_spark.plans.pipeline import run_pipeline
 from setsm_postprocessing_python_spark.session import get_spark
 
@@ -226,9 +228,9 @@ def test_pipeline_sigkill_midwrite_restart_converges(spark, tmp_path):
             f"{stage}: restarted output differs from uninterrupted run"
 
 
-_LAYOUT_SCRIPT = """
+_LAYOUT_SCRIPT = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {str(REPO)!r})
 import pyspark.sql.functions as F
 from setsm_postprocessing_python_spark.session import get_spark
 from setsm_postprocessing_python_spark.sources.bucketed import (
