@@ -280,17 +280,15 @@ def near_dup_pipeline(df: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 # The 100 TB production shape: a crawl corpus grows by batches (e.g. one
 # Common-Crawl snapshot per month), and each batch must dedup against ALL
-# history without re-reading or re-hashing history. Two persisted state
-# tables make the cost per batch ∝ |batch|:
-#   - exact state: the exact_dedup groups table (text_md5, keep_id,
-#     n_dups), upserted by merge_exact_groups;
-#   - near-dup state: the band_signatures table, stored bucketed by
-#     band_sig (sources/bucketed.ensure_bucketed(key='band_sig')) so the
-#     corpus side of every probe join is Exchange-free, and appended per
-#     batch via the same kill-safe exactly-once ingest protocol as the
-#     pages layout (reference analogue: the checkfile/`.fin` dedup that
-#     keeps re-run batches from redoing finished strips,
-#     /root/reference/batch_scenes2strips.py:1518-1533).
+# history without re-reading or re-hashing history. The persisted state
+# is the band_signatures table, stored bucketed by band_sig
+# (ensure_signature_layout) so the corpus side of every probe join is
+# Exchange-free, and appended per batch via the same kill-safe
+# exactly-once ingest as the pages layout
+# (sources/bucketed.ensure_bucketed_ingest; reference analogue: the
+# checkfile/`.fin` dedup that keeps re-run batches from redoing finished
+# strips, batch_scenes2strips.py:1518-1533). The cost per batch is
+# ∝ |batch|.
 
 
 def incremental_lsh_pairs(batch_sigs: DataFrame, corpus_sigs: DataFrame,
@@ -335,34 +333,6 @@ def incremental_lsh_pairs(batch_sigs: DataFrame, corpus_sigs: DataFrame,
     return (cross.unionByName(within)
             .groupBy("id_a", "id_b")
             .agg(F.countDistinct("band").alias("n_shared_bands")))
-
-
-def incremental_near_dup(batch: DataFrame, corpus_sigs: DataFrame,
-                         id_col: str = "doc_id") -> DataFrame:
-    """Convenience composition: signature the batch once (cached — the
-    frame feeds both the vs-corpus and the within-batch join) and probe
-    the corpus signature state."""
-    sigs = cached(band_signatures(batch, id_col))
-    return incremental_lsh_pairs(sigs, corpus_sigs, id_col)
-
-
-def merge_exact_groups(groups: DataFrame, batch: DataFrame,
-                       id_col: str = "doc_id",
-                       text: str = "text") -> DataFrame:
-    """Upsert a new batch into the exact-dedup state table
-    (text_md5, keep_id, n_dups): the batch's exact_dedup groups are
-    unioned with the state and re-grouped on text_md5 — one shuffle, and
-    corpus text is never re-read (on Iceberg this is a single merge
-    commit). keep_id = min id across history and batch, so the merge is
-    associative and batch-order independent: folding any split of the
-    corpus equals exact_dedup over the union (pytest-pinned), the one
-    NULL-text group included — GROUP BY keeps NULL keys together, as
-    exact_dedup does."""
-    return (groups.select("text_md5", "keep_id", "n_dups")
-            .unionByName(exact_dedup(batch, id_col, text))
-            .groupBy("text_md5")
-            .agg(F.min("keep_id").alias("keep_id"),
-                 F.sum("n_dups").alias("n_dups")))
 
 
 def ensure_signature_layout(spark, path: str, table: str, build,

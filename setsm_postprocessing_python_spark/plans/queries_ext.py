@@ -1168,7 +1168,10 @@ ORACLES["q_feather_field"] = D.with_cells(
 # ONE normal-equations solve for [1,x,y] via 3x3 Cramer, ONE rmse — with
 # the loop's observable iters fixed at 2 (or 0/1 on the gate exits).
 # Block means divide an EXACT DECIMAL(30,12) sum, matching the engine's
-# order-independent partial-sum contract (operators/merge.py).
+# order-independent partial-sum contract (operators/merge.py). The
+# group_a / group_b label is the side's lowest host NUMBER rendered
+# 'host' || n, as merge._fit_aggs / _coregister do: a string min would
+# label a side without host0 'host10', where the engine says 'host2'.
 #
 # Domain note: Cramer assumes the normal matrix is non-singular. If every
 # kept block were COLLINEAR (all bx or all by equal — a 1-block-tall
@@ -1188,20 +1191,20 @@ _COREG_CTES = f"""
     coreg_pts AS (
       SELECT 'host' AS grain,
              CAST(CAST(floor(hostnum / 2) AS BIGINT) AS VARCHAR) AS pair,
-             hostnum % 2 AS side, group_id, block, bx, by, z, flags
+             hostnum % 2 AS side, hostnum, block, bx, by, z, flags
       FROM coreg_base
       UNION ALL
-      SELECT 'super', 'all', hostnum % 2, group_id, block, bx, by, z, flags
+      SELECT 'super', 'all', hostnum % 2, hostnum, block, bx, by, z, flags
       FROM coreg_base),
     coreg_bm AS (
       SELECT grain, pair, side, block, min(bx) AS bx, min(by) AS by,
-             min(group_id) AS gid,
+             min(hostnum) AS hnum,
              CAST(sum(CAST(z AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS zm
       FROM coreg_pts GROUP BY grain, pair, side, block),
     coreg_pair AS (
       SELECT grain, pair,
-             min(CASE WHEN side = 0 THEN gid END) AS group_a,
-             min(CASE WHEN side = 1 THEN gid END) AS group_b
+             'host' || min(CASE WHEN side = 0 THEN hnum END) AS group_a,
+             'host' || min(CASE WHEN side = 1 THEN hnum END) AS group_b
       FROM coreg_bm GROUP BY grain, pair),
     coreg_m AS (
       SELECT a.grain, a.pair, CAST(a.bx AS DOUBLE) AS x,

@@ -61,20 +61,17 @@ def blocked_pages(spark: SparkSession, sf_dir: str,
         "block", block_expr(block_shift))
 
 
-def write_bucketed(spark: SparkSession, df: DataFrame, path: str,
-                   table: str, n_buckets: int = 8,
-                   key: str = "block") -> DataFrame:
-    """Write any frame bucketed (and sorted) by `key`, return the catalog
-    table. At 10^12 rows this is the once-per-ingest layout job whose cost
-    every downstream spatial join amortizes; n_buckets would be sized so
-    each bucket is a few hundred MB (here 8 matches the test session's
-    parallelism)."""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    (df.repartition(n_buckets, F.col(key)).write.mode("overwrite")
+def _append_bucketed(df: DataFrame, path: str, table: str,
+                     n_buckets: int, key: str) -> None:
+    """The one bucketed write: append `df` bucketed (and sorted) by `key`
+    at `path`. Appending to a table that does not exist creates it with
+    the bucket spec, so a layout's first write and every ingest run this
+    same chain. n_buckets would be sized so each bucket is a few hundred
+    MB at 10^12 rows (here 8 matches the test session's parallelism)."""
+    (df.repartition(n_buckets, F.col(key)).write.mode("append")
        .bucketBy(n_buckets, key).sortBy(key)
        .option("path", path).format("parquet")
        .saveAsTable(table))
-    return spark.table(table)
 
 
 def _schema_ddl(df: DataFrame) -> str:
@@ -102,8 +99,9 @@ def ensure_bucketed(spark: SparkSession, path: str, table: str,
       in tests/test_plan_shapes.py).
     - Marker absent, torn, without a `files` list, or stale (a
       killed/partial write, or a different corpus/grain): drop the table,
-      delete the dir, rewrite, then commit the marker LAST (the record.py
-      protocol).
+      delete the dir, write through the same append an ingest uses
+      (`_append_bucketed`, which creates the table), then commit the
+      marker LAST (the record.py protocol).
     """
     p = Path(path)
     marker = p / LAYOUT_MARKER
@@ -123,7 +121,8 @@ def ensure_bucketed(spark: SparkSession, path: str, table: str,
     try:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(p, ignore_errors=True)
-        tbl = write_bucketed(spark, build(), path, table, n_buckets, key)
+        _append_bucketed(build(), path, table, n_buckets, key)
+        tbl = spark.table(table)
         write_record(marker, {**want, "ddl": _schema_ddl(tbl),
                               "files": data_files(p), "ingests": []})
     finally:
@@ -179,8 +178,8 @@ def ensure_bucketed_ingest(spark: SparkSession, path: str, table: str,
     layout — the daily-ingest job at 10^12 rows, where rewriting the
     whole table per batch is not an option. In production this is an
     Iceberg append commit into the same `bucket(N, key)` spec; here it is
-    a `mode("append").bucketBy(...)` write (one extra file per bucket per
-    ingest — the shuffle-elimination contract is a TABLE property, so
+    the layout's own `_append_bucketed` write (one extra file per bucket
+    per ingest — the shuffle-elimination contract is a TABLE property, so
     block-keyed joins stay Exchange-free over any number of ingests).
 
     Exactly-once (single writer) on the record.py protocol: the marker
@@ -210,10 +209,7 @@ def ensure_bucketed_ingest(spark: SparkSession, path: str, table: str,
         spark.catalog.refreshTable(table)
     if ingest_id in rec.get("ingests", []):
         return spark.table(table), False
-    (build().repartition(n_buckets, F.col(key)).write.mode("append")
-       .bucketBy(n_buckets, key).sortBy(key)
-       .option("path", path).format("parquet")
-       .saveAsTable(table))
+    _append_bucketed(build(), path, table, n_buckets, key)
     spark.catalog.refreshTable(table)
     rec["files"] = data_files(p)
     rec["ingests"] = rec.get("ingests", []) + [ingest_id]

@@ -19,6 +19,7 @@ from setsm_postprocessing_python_spark.plans.manifest import (
     run_stage,
 )
 from setsm_postprocessing_python_spark.session import cache_scope
+from setsm_postprocessing_python_spark.sources import bucketed as B
 from setsm_postprocessing_python_spark.sources.pages import (
     bucketed_pages_active,
     geocoded_pages,
@@ -115,6 +116,32 @@ def test_strip_assembly_builds_fire_no_job(spark):
                       lambda: M.feather_weight_field(gp),
                       lambda: M.merge_order(M.with_footprint(gp))):
             assert _build_jobs(spark, build) == 0
+
+
+def test_activating_a_committed_layout_fires_no_job(spark, tmp_path):
+    """A committed layout is served from its marker: in the session that
+    wrote it (the catalog location check, DESCRIBE FORMATTED, is a
+    command, not a job) and after DROP TABLE (the DDL re-registration),
+    neither ensure_bucketed_pages nor the activation nor a pages read
+    built over the activated table fires a job."""
+    path, table = str(tmp_path / "bkt"), "t_bkt_activate"
+
+    def activate():
+        _, did = B.ensure_bucketed_pages(spark, SF_TINY, path, table)
+        assert not did
+        B.activate_bucketed_pages(spark, table, SF_TINY)
+        assert bucketed_pages_active(spark, SF_TINY)
+        geocoded_pages(spark, SF_TINY)
+
+    try:
+        assert B.ensure_bucketed_pages(spark, SF_TINY, path, table)[1]
+        assert _build_jobs(spark, activate) == 0
+        B.deactivate_bucketed_pages(spark)
+        spark.sql(f"DROP TABLE {table}")
+        assert _build_jobs(spark, activate) == 0
+    finally:
+        B.deactivate_bucketed_pages(spark)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_read_stage_fires_no_job(spark, tmp_path):

@@ -1,18 +1,13 @@
 """Incremental (snapshot-over-snapshot) dedup — the per-batch probe over
-persisted state tables (operators/dedup.py, round 6).
+a persisted state table (operators/dedup.py, round 6).
 
 The 100 TB claim under test: a new crawl batch dedups against ALL history
-at cost ∝ |batch|, via two state tables —
-
-  - exact state (text_md5, keep_id, n_dups), upserted by
-    merge_exact_groups: folding any split of the corpus must equal
-    exact_dedup over the union (associative, order-independent);
-  - near-dup state (band_signatures), stored bucketed by band_sig:
-    incremental_lsh_pairs(batch, corpus) must equal EXACTLY the subset of
-    lsh_candidate_pairs(corpus ∪ batch) touching >= 1 batch doc, and the
-    corpus side of the probe join must plan ZERO Exchanges over the
-    bucketed layout (only the batch shuffles — at 10^12 corpus rows the
-    probe cost is batch-sized).
+at cost ∝ |batch|, via one state table — the band_signatures table,
+stored bucketed by band_sig: incremental_lsh_pairs(batch, corpus) must
+equal EXACTLY the subset of lsh_candidate_pairs(corpus ∪ batch) touching
+>= 1 batch doc, and the corpus side of the probe join must plan ZERO
+Exchanges over the bucketed layout (only the batch shuffles — at 10^12
+corpus rows the probe cost is batch-sized).
 
 Reference analogue: the checkfile/`.fin` semantics that keep re-run
 batches from redoing finished work (batch_scenes2strips.py:1518-1533),
@@ -21,21 +16,14 @@ here applied to dedup state instead of strip outputs.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from setsm_postprocessing_python_spark.operators.dedup import (
     band_signatures,
     ensure_signature_layout,
-    exact_dedup,
     incremental_lsh_pairs,
-    incremental_near_dup,
     lsh_candidate_pairs,
-    merge_exact_groups,
 )
-from setsm_postprocessing_python_spark.session import cache_scope
 from setsm_postprocessing_python_spark.sources.bucketed import ensure_bucketed_ingest
 
-from .conftest import persisted_rdd_ids
 from .planview import formatted_plan, n_exchanges
 
 BASE = " ".join(f"w{i}" for i in range(40))
@@ -85,18 +73,6 @@ def test_incremental_lsh_equals_full_recompute_restriction(spark):
     assert got[(2, 7)] == 4
 
 
-def test_incremental_near_dup_scope_releases_its_cache(spark):
-    """The batch-signature cache belongs to the caller's cache_scope —
-    unscoped it used to outlive every caller (nothing could release it)."""
-    old, new = _docs(spark, 0, 6), _docs(spark, 6, 10)
-    before = persisted_rdd_ids(spark)
-    with cache_scope():
-        got = _pairs(incremental_near_dup(new, band_signatures(old)))
-        assert len(persisted_rdd_ids(spark) - before) == 1
-    assert not persisted_rdd_ids(spark) - before
-    assert (2, 7) in got
-
-
 def test_incremental_probe_after_own_ingest_counts_true_bands(spark):
     """The probe-after-crash replay: the batch's signatures are ALREADY
     in the corpus table (ingest committed, downstream lost). Self-pairs
@@ -112,34 +88,6 @@ def test_incremental_probe_after_own_ingest_counts_true_bands(spark):
     overlap = _pairs(incremental_lsh_pairs(sigs_new, merged))
     assert overlap == disjoint
     assert all(1 <= n <= 4 for n in overlap.values())
-
-
-def test_merge_exact_groups_is_split_invariant(spark):
-    # NULL-text docs in two different batches: exact_dedup folds all of
-    # them into ONE null-keyed group, so the merge's null-safe join must
-    # match the sides' NULL groups (a plain equi-join would add a new
-    # NULL row per merge and break the invariance)
-    nulls_a = spark.createDataFrame([(100, None)], "doc_id long, text string")
-    nulls_b = spark.createDataFrame([(101, None)], "doc_id long, text string")
-    b0 = _docs(spark, 0, 6).unionByName(nulls_a)
-    b1, b2 = _docs(spark, 6, 10), _docs(spark, 10, 13).unionByName(nulls_b)
-    want = {r.text_md5: (r.keep_id, r.n_dups)
-            for r in exact_dedup(b0.unionByName(b1).unionByName(b2)).collect()}
-    assert want[None] == (100, 2)  # the single merged NULL group
-
-    def fold(*batches):
-        g = exact_dedup(batches[0])
-        for b in batches[1:]:
-            g = merge_exact_groups(g, b)
-        return {r.text_md5: (r.keep_id, r.n_dups) for r in g.collect()}
-
-    assert fold(b0, b1, b2) == want
-    assert fold(b2, b0, b1) == want  # order-independent (keep_id = min)
-    # the cross-split dup groups actually merged: 2==7, 4==12
-    md5_27 = b0.where("doc_id = 2").select(F.md5("text")).first()[0]
-    assert want[md5_27] == (2, 2)
-    md5_412 = b0.where("doc_id = 4").select(F.md5("text")).first()[0]
-    assert want[md5_412] == (4, 2)
 
 
 def test_signature_layout_probe_is_corpus_side_shuffle_free(

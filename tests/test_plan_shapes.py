@@ -132,8 +132,8 @@ def test_bucketed_layout_eliminates_cell_join_exchange(
     # 4096-cell blocks (shift 12): coarse enough that sf0.001 pages share
     # blocks, so the join is non-vacuous
     flat = B.blocked_pages(spark, SF, block_shift=12)
-    tbl = B.write_bucketed(spark, flat, str(tmp_path / "bkt"),
-                           table="t_bkt_cell_join")
+    tbl, _ = B.ensure_bucketed(spark, str(tmp_path / "bkt"),
+                               "t_bkt_cell_join", build=lambda: flat, meta={})
     try:
         bplan = formatted_plan(_self_join_on_block(tbl))
         fplan = formatted_plan(_self_join_on_block(flat))
@@ -167,8 +167,8 @@ def test_bucketed_layout_drops_knn_probe_exchange(
             .withColumn("cell_x", F.expr(D.knn_cell_x_expr()))
             .withColumn("cell_y", F.expr(D.knn_cell_y_expr()))
             .withColumn("block", B.block_expr(block_shift=2)))
-    tbl = B.write_bucketed(spark, flat, str(tmp_path / "bkt"),
-                           table="t_bkt_knn")
+    tbl, _ = B.ensure_bucketed(spark, str(tmp_path / "bkt"), "t_bkt_knn",
+                               build=lambda: flat, meta={})
     try:
         bres = knn_join_blocked(tbl, k=3, ring=1, block_shift=2,
                                 use_stored_block=True)
