@@ -4,9 +4,9 @@ family.
 Reference semantics (citations into /root/reference):
 - bwareaopen(array, minsize, conn): drop 8-connected components smaller
   than minsize (lib/raster_array_tools.py:2406-2438),
-- binary_fill_holes / clean_mask complement pass: fill interior holes by
-  running CC on the mask complement and keeping only components that touch
-  the array border (lib/filter_scene.py:1691-1722,
+- binary_fill_holes / clean_mask complement pass: fill the complement
+  components that do not touch the array border, or (clean_mask) that are
+  smaller than fill_pix (lib/filter_scene.py:1691-1722,
   lib/raster_array_tools.py:2516).
 
 Engine recast: occupied cells form a graph (8-adjacency in grid cell
@@ -24,6 +24,11 @@ truncate lineage. Non-convergence at max_iter RAISES — silently returning
 partial labels would let bwareaopen mis-size components.
 
 bwareaopen then = CC + component-size filter (groupBy(label).count).
+
+The hole fill runs, like the reference, on a BOUNDED dense grid: each
+group's bbox is one applyInPandas task running a run-length union-find
+over the complement's row runs (complement_hole_mask, fill_holes_grouped);
+fill_holes is the whole frame as one group, so it fires no job to build.
 """
 
 from __future__ import annotations
@@ -116,83 +121,31 @@ def bwareaopen(cells: DataFrame, min_size: int, max_iter: int = 25) -> DataFrame
             .select("cell", "component", "csize"))
 
 
-# Max complement-grid cells fill_holes / fill_small_voids will materialize.
-# The reference fills PER-STRIP rasters (bounded extents); calling the
-# dense-complement path on a global-extent cell set would explode the range
-# crossJoin — raise instead, and point at the per-group variant.
+# Max dense-grid cells one fill task allocates. The reference fills
+# PER-STRIP rasters (bounded extents); a group whose bbox exceeds this
+# skips the fill (fill_holes_grouped) and fill_holes raises for it.
 FILL_BBOX_BUDGET = 1 << 24  # 16.7M cells ~ a 4096x4096 strip raster
 
 
-def _bbox(cells: DataFrame, pad: int, budget: int) -> tuple[int, int, int, int]:
-    b = cells.agg(F.min("cell_x"), F.max("cell_x"),
-                  F.min("cell_y"), F.max("cell_y")).first()
-    x0, x1 = int(b[0]) - pad, int(b[1]) + pad
-    y0, y1 = int(b[2]) - pad, int(b[3]) + pad
-    area = (x1 - x0 + 1) * (y1 - y0 + 1)
-    if area > budget:
-        raise ValueError(
-            f"fill bounding box is {x1 - x0 + 1}x{y1 - y0 + 1} = {area} cells"
-            f" > budget {budget}: the dense complement grid would explode."
-            " Run per bounded region (fill_holes_grouped) or raise the"
-            " budget explicitly for a genuinely bounded grid.")
-    return x0, x1, y0, y1
-
-
-def fill_holes(cells: DataFrame, max_iter: int = 25,
+def fill_holes(cells: DataFrame, fill_pix: int | None = None,
                bbox_budget: int = FILL_BBOX_BUDGET) -> DataFrame:
-    """binary_fill_holes: CC on the mask COMPLEMENT within the 1-padded
-    bounding box; complement components that never touch the box border are
-    interior holes and get filled (lib/raster_array_tools.py:2516).
+    """binary_fill_holes (lib/raster_array_tools.py:2516) for fill_pix=None,
+    the clean_mask fill pass (lib/filter_scene.py:1722) for fill_pix=k:
+    fill_holes_grouped over the whole frame as one group, so the grid is
+    bounded by the frame's extent like the reference's per-strip raster.
     8-connected background, matching the engine's single connectivity rule
     (documented difference from scipy's 4-connected default background).
-    NOTE: unlike the reference clean_mask fill pass this is UNCAPPED
-    (interior holes of any size fill, border-touching voids never do) —
-    the reference-exact capped pass is fill_small_voids.
-
-    Scale note: like the reference (which fills per-strip rasters), this
-    runs on a BOUNDED grid — the bbox agg collapses to 4 driver scalars and
-    the complement grid is materialized distributed via range crossJoin,
-    guarded by bbox_budget.
-    Output: (cell, was_hole) = original cells plus filled hole cells."""
-    x0, x1, y0, y1 = _bbox(cells, 1, bbox_budget)
-    spark = cells.sparkSession
-    grid = (spark.range(x0, x1 + 1).select(F.col("id").alias("cell_x"))
-            .crossJoin(spark.range(y0, y1 + 1).select(F.col("id").alias("cell_y")))
-            .withColumn("cell", F.expr(D.cell_id_from_xy())))
-    comp = grid.join(cells.select("cell"), "cell", "left_anti")
-    labels = connected_components(comp, max_iter)
-    border_cells = comp.where((F.col("cell_x") == x0) | (F.col("cell_x") == x1)
-                              | (F.col("cell_y") == y0) | (F.col("cell_y") == y1))
-    border_comps = (labels.join(border_cells.select("cell"), "cell")
-                    .select("component").distinct())
-    holes = (labels.join(border_comps, "component", "left_anti")
-             .select("cell"))
-    return (cells.select("cell").withColumn("was_hole", F.lit(False))
-            .unionByName(holes.withColumn("was_hole", F.lit(True))))
-
-
-def fill_small_voids(cells: DataFrame, fill_pix: int, max_iter: int = 25,
-                     bbox_budget: int = FILL_BBOX_BUDGET) -> DataFrame:
-    """The clean_mask fill pass, reference-exact: ~bwareaopen(~mask,
-    fill_pix) (lib/filter_scene.py:1722). CC over the complement within
-    the UNPADDED bounding box — the analogue of the reference's finite
-    array extent — and fill complement components SMALLER than fill_pix.
-    Border-touching small voids fill too (they are ordinary components of
-    the bounded complement, exactly as in the reference); voids of
-    fill_pix or more cells stay open regardless of position.
-    Output: (cell, was_hole)."""
-    x0, x1, y0, y1 = _bbox(cells, 0, bbox_budget)
-    spark = cells.sparkSession
-    grid = (spark.range(x0, x1 + 1).select(F.col("id").alias("cell_x"))
-            .crossJoin(spark.range(y0, y1 + 1).select(F.col("id").alias("cell_y")))
-            .withColumn("cell", F.expr(D.cell_id_from_xy())))
-    comp = grid.join(cells.select("cell"), "cell", "left_anti")
-    labels = connected_components(comp, max_iter)
-    sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
-    holes = (labels.join(sizes, "component")
-             .where(F.col("csize") < fill_pix).select("cell"))
-    return (cells.select("cell").withColumn("was_hole", F.lit(False))
-            .unionByName(holes.withColumn("was_hole", F.lit(True))))
+    A bbox over bbox_budget raises when the frame runs; building fires no
+    job. Output: (cell, was_hole) = original cells plus filled hole cells."""
+    out = fill_holes_grouped(cells.withColumn("_fill", F.lit("all")), "_fill",
+                             fill_pix, bbox_budget)
+    too_big = F.raise_error(F.lit(
+        f"fill bounding box exceeds the budget of {bbox_budget} cells: the"
+        " dense grid would explode. Run per bounded region"
+        " (fill_holes_grouped) or raise bbox_budget for a genuinely bounded"
+        " grid."))
+    return out.select("cell", F.when(F.col("fill_skipped"), too_big)
+                      .otherwise(F.col("was_hole")).alias("was_hole"))
 
 
 def clean_mask(cells: DataFrame, remove_pix: int, fill_pix: int,
@@ -207,16 +160,19 @@ def clean_mask(cells: DataFrame, remove_pix: int, fill_pix: int,
     kept_xy = kept.withColumn(
         "cell_y", F.expr(f"cast(floor(cell / {D.LON_CELL_STRIDE}) as bigint)"),
     ).withColumn("cell_x", F.col("cell") - F.col("cell_y") * D.LON_CELL_STRIDE)
-    return fill_small_voids(kept_xy.select("cell", "cell_x", "cell_y"),
-                            fill_pix, max_iter, bbox_budget)
+    return fill_holes(kept_xy.select("cell", "cell_x", "cell_y"), fill_pix,
+                      bbox_budget)
 
 
 def complement_hole_mask(occ, fill_pix: int | None):
-    """Hole mask of a dense boolean occupancy grid: run-length two-pass
-    union-find over the COMPLEMENT's row runs (8-adjacency: a run [s,e)
-    connects to a previous-row run [ps,pe) iff ps <= e and pe >= s —
-    half-open ends make the diagonal reach exactly 1). O(#runs) Python
-    work, all per-pixel operations vectorized.
+    """Hole mask of a dense boolean occupancy grid: run-length union-find
+    over the COMPLEMENT's row runs. Runs are numbered row-major; a run
+    [s,e) connects to a previous-row run [ps,pe) iff ps <= e and pe >= s
+    (8-adjacency: half-open ends make the diagonal reach exactly 1). Ends
+    and starts both ascend row-major, so each run's overlapping
+    previous-row runs are one index range found by two searchsorted calls;
+    the Python work is one union per overlap, O(#runs), and every
+    per-pixel operation is vectorized.
 
     fill_pix=None: complement components not touching the grid border
     (interior holes). fill_pix=k: complement components smaller than k
@@ -226,11 +182,22 @@ def complement_hole_mask(occ, fill_pix: int | None):
     import numpy as np
 
     h, w = occ.shape
-    comp8 = (~occ).astype(np.int8)
-    parent: list[int] = []
-    run_len: list[int] = []
-    run_border: list[bool] = []
-    runs_by_row: list[list[tuple[int, int, int]]] = []
+    edges = np.zeros((h, w + 2), dtype=np.int8)
+    edges[:, 1:-1] = ~occ
+    d = np.diff(edges, axis=1)
+    ry, rs = np.nonzero(d == 1)
+    re_ = np.nonzero(d == -1)[1]
+    # row-major keys row * stride + col; a query in row y-1 can only land
+    # on that row's runs because every column is < stride
+    stride = w + 2
+    up = (ry - 1) * stride
+    lo = np.searchsorted(ry * stride + re_, up + rs, "left")
+    hi = np.searchsorted(ry * stride + rs, up + re_, "right")
+    cnt = np.maximum(hi - lo, 0)
+    a = np.repeat(np.arange(len(ry)), cnt)
+    b = np.arange(cnt.sum()) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+
+    parent = list(range(len(ry)))
 
     def find(i: int) -> int:
         while parent[i] != i:
@@ -238,45 +205,24 @@ def complement_hole_mask(occ, fill_pix: int | None):
             i = parent[i]
         return i
 
-    prev: list[tuple[int, int, int]] = []
-    for yy in range(h):
-        row = comp8[yy]
-        cur: list[tuple[int, int, int]] = []
-        if row.any():
-            d = np.diff(np.concatenate(([0], row, [0])))
-            starts = np.flatnonzero(d == 1)
-            ends = np.flatnonzero(d == -1)
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                li = len(parent)
-                parent.append(li)
-                run_len.append(e - s)
-                run_border.append(yy in (0, h - 1) or s == 0 or e == w)
-                for ps, pe, pl in prev:
-                    if ps <= e and pe >= s:
-                        ra, rb = find(pl), find(li)
-                        if ra != rb:
-                            if rb < ra:
-                                ra, rb = rb, ra
-                            parent[rb] = ra
-                cur.append((s, e, li))
-        runs_by_row.append(cur)
-        prev = cur
-    sizes: dict[int, int] = {}
-    border: set[int] = set()
-    for li in range(len(parent)):
-        r = find(li)
-        sizes[r] = sizes.get(r, 0) + run_len[li]
-        if run_border[li]:
-            border.add(r)
-    hole = np.zeros((h, w), dtype=bool)
-    for yy, runs in enumerate(runs_by_row):
-        for s, e, li in runs:
-            r = find(li)
-            filled = (sizes[r] < fill_pix if fill_pix is not None
-                      else r not in border)
-            if filled:
-                hole[yy, s:e] = True
-    return hole
+    for i, j in zip(a.tolist(), b.tolist()):
+        ri, rj = find(i), find(j)
+        if ri != rj:
+            parent[max(ri, rj)] = min(ri, rj)
+    root = np.array([find(i) for i in range(len(ry))], dtype=np.int64)
+    if fill_pix is None:
+        border = np.zeros(len(ry), dtype=bool)
+        border[root[(ry == 0) | (ry == h - 1) | (rs == 0) | (re_ == w)]] = True
+        fill = ~border[root]
+    else:
+        fill = np.bincount(root, weights=re_ - rs,
+                           minlength=len(ry))[root] < fill_pix
+    # +1 at each filled run's start, -1 past its end: a row cumsum paints
+    # the runs (a run's end never coincides with another run's start)
+    delta = np.zeros((h, w + 1), dtype=np.int32)
+    delta[ry[fill], rs[fill]] = 1
+    delta[ry[fill], re_[fill]] = -1
+    return np.cumsum(delta, axis=1)[:, :w] > 0
 
 
 def fill_holes_grouped(df: DataFrame, group_col: str = "group_id",
@@ -284,15 +230,16 @@ def fill_holes_grouped(df: DataFrame, group_col: str = "group_id",
                        bbox_budget: int = FILL_BBOX_BUDGET) -> DataFrame:
     """Per-group fill: each group's bbox is bounded by ITS extent (the
     reference processes per-scene rasters the same way) and groups fan out
-    as tasks. Runs a run-length two-pass union-find inside applyInPandas —
-    O(#row-runs) Python work, all per-pixel operations vectorized.
+    as tasks. Runs complement_hole_mask's run-length union-find inside
+    applyInPandas — O(#row-runs) Python work, all per-pixel operations
+    vectorized.
 
     A group whose bbox exceeds bbox_budget (hash-scattered members — far-
     apart cells spanning a huge dense grid, the q_footprints global-scatter
     pathology) SKIPS the fill and returns its cells unfilled with
     fill_skipped=true, instead of allocating the dense grid and hanging
-    the executor; sibling fill_holes/fill_small_voids raise for the same
-    condition because they have no per-group fallback grain.
+    the executor; fill_holes, the one-group form, raises for it instead
+    because it has no per-group fallback grain.
 
     fill_pix=None: uncapped interior fill (binary_fill_holes semantics);
     fill_pix=k: reference clean_mask fill pass (fill voids < k cells,

@@ -22,7 +22,7 @@ from __future__ import annotations
 import random
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..session import cached
 from ..sql import dialect as D
@@ -225,7 +225,12 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     on (band, signature). Output (id_a < id_b, n_shared_bands). The only
     shuffles are the per-doc min-agg and the band equi-join (see
     band_signatures for the signature layout)."""
-    bands = band_signatures(df, id_col)
+    return _band_pairs(band_signatures(df, id_col), id_col)
+
+
+def _band_pairs(bands: DataFrame, id_col: str) -> DataFrame:
+    """(id_a < id_b, n_shared_bands): the band self-join over a
+    band_signatures frame."""
     a = bands.select(F.col(id_col).alias("id_a"), "band", "band_sig")
     b = bands.select(F.col(id_col).alias("id_b"), "band", "band_sig")
     return (a.join(b, ["band", "band_sig"]).where(F.col("id_a") < F.col("id_b"))
@@ -261,13 +266,7 @@ def near_dup_pipeline(df: DataFrame, id_col: str = "doc_id",
     # the shingle+minhash pipeline per reference
     reps = cached(collapse_exact(df.withColumn("_md5", F.md5(text)),
                                  "_md5", id_col, keep=[text]).drop("_md5"))
-    bands = cached(band_signatures(reps, id_col))
-    a = bands.select(F.col(id_col).alias("id_a"), "band", "band_sig")
-    b = bands.select(F.col(id_col).alias("id_b"), "band", "band_sig")
-    pairs = (a.join(b, ["band", "band_sig"])
-             .where(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b")
-             .agg(F.count(F.lit(1)).alias("n_shared_bands")))
+    pairs = _band_pairs(cached(band_signatures(reps, id_col)), id_col)
     sz_a = reps.select(F.col(id_col).alias("id_a"),
                        F.col("n").alias("n_docs_a"))
     sz_b = reps.select(F.col(id_col).alias("id_b"),
@@ -465,14 +464,22 @@ def simhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     toks = df.select(
         id_col, F.explode(F.expr(D.tokens_expr(D.SPARK))).alias("tok"))
     toks = toks.withColumn("h", F.expr(D.hex8_i64("tok", 1, D.SPARK)))
-    sums = toks.groupBy(id_col).agg(*[
+    return simhash_agg(toks, id_col)
+
+
+def simhash_agg(toks: DataFrame, key: str, *extra: Column) -> DataFrame:
+    """(key, *extra, simhash) from (key, h) token-hash rows: ONE groupBy
+    computing the `extra` aggregates and the 32 per-bit +-1 sums, then the
+    signature assembled from the sums' signs."""
+    sums = toks.groupBy(key).agg(*extra, *[
         F.sum(F.expr(f"CASE WHEN (shiftright(h, {j}) & 1) = 1 "
                      f"THEN 1 ELSE -1 END")).alias(f"s{j}")
         for j in range(SIMHASH_BITS)])
     sig = " + ".join(
         f"CASE WHEN s{j} > 0 THEN shiftleft(cast(1 as bigint), {j}) "
         f"ELSE cast(0 as bigint) END" for j in range(SIMHASH_BITS))
-    return sums.select(id_col, F.expr(sig).cast("bigint").alias("simhash"))
+    return sums.select(*sums.columns[:1 + len(extra)],
+                       F.expr(sig).cast("bigint").alias("simhash"))
 
 
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,

@@ -78,16 +78,8 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("h", F.expr(D.hex8_i64("tok", 1, D.SPARK))))
     fp_term = (f"(h % {m31}) * element_at(array({powers}), "
                f"cast(pos % 8 + 1 as int)) % {m31}")
-    sums = toks.groupBy("k").agg(
-        F.expr(f"CAST(sum({fp_term}) % {m31} AS BIGINT)").alias("fingerprint"),
-        *[F.sum(F.expr(f"CASE WHEN (shiftright(h, {j}) & 1) = 1 "
-                       f"THEN 1 ELSE -1 END")).alias(f"s{j}")
-          for j in range(DD.SIMHASH_BITS)])
-    sig = " + ".join(
-        f"CASE WHEN s{j} > 0 THEN shiftleft(cast(1 as bigint), {j}) "
-        f"ELSE cast(0 as bigint) END" for j in range(DD.SIMHASH_BITS))
-    fpsh = sums.select("k", "fingerprint",
-                       F.expr(sig).cast("bigint").alias("simhash"))
+    fpsh = DD.simhash_agg(toks, "k", F.expr(
+        f"CAST(sum({fp_term}) % {m31} AS BIGINT)").alias("fingerprint"))
     return (DD.expand(docs.select("doc_id", "k"), fpsh, "k")
             .select(F.col("doc_id").cast("bigint").alias("doc_id"),
                     "fingerprint", "simhash"))

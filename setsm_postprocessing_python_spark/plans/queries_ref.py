@@ -84,7 +84,7 @@ def q_fill_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse-block mask (lib/raster_array_tools.py:2516,
     lib/filter_scene.py:1691-1722). The DuckDB oracle is an INDEPENDENT
     formulation: recursive border-flood over the complement, vs the
-    engine's min-label CC + border-component subtraction."""
+    engine's run-length union-find over the complement's row runs."""
     from ..operators.components import fill_holes
 
     return fill_holes(_blocks(spark, sf_dir)).select("cell", "was_hole")
@@ -739,7 +739,7 @@ ORACLES["q_crawl_intervals"] = D.with_cells(
        ) GROUP BY group_id""")
 
 # binary_fill_holes oracle: WITH RECURSIVE border-flood over the complement
-# (independent of the engine's min-label CC formulation)
+# (independent of the engine's run-length union-find)
 ORACLES["q_fill_holes"] = f"""
 WITH RECURSIVE {D.geo_ctes(_DD)},
 {_BLOCKS_CTE},

@@ -14,6 +14,7 @@ from setsm_postprocessing_python_spark.operators import merge as M
 from setsm_postprocessing_python_spark.operators.flags import with_flags
 from setsm_postprocessing_python_spark.operators.similarity import lsh_topk
 from setsm_postprocessing_python_spark.plans import queries_ext as QE
+from setsm_postprocessing_python_spark.plans import queries_ref as QR
 from setsm_postprocessing_python_spark.plans.manifest import (
     read_stage,
     run_stage,
@@ -98,6 +99,13 @@ def test_source_and_query_builds_fire_no_job(spark):
     assert _build_jobs(spark, lambda: geocoded_pages(spark, SF_TINY)) == 0
     assert _build_jobs(spark, lambda: QE.q_near_dup(spark, SF_TINY)) == 0
     assert _build_jobs(spark, lambda: QE.q_ann_lsh(spark, SF_TINY)) == 0
+
+
+def test_fill_holes_build_fires_no_job(spark):
+    """The hole fill is one lazy applyInPandas over the frame: its bbox and
+    its budget guard are evaluated when the frame runs, not while it
+    builds."""
+    assert _build_jobs(spark, lambda: QR.q_fill_holes(spark, SF_TINY)) == 0
 
 
 def test_strip_assembly_builds_fire_no_job(spark):

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
-import pyspark.sql.functions as F
+import pyspark.errors
 import pytest
 
 from setsm_postprocessing_python_spark.operators.components import bwareaopen, connected_components
@@ -195,43 +195,55 @@ def test_clean_mask_reference_semantics(spark):
 
 
 def test_fill_holes_bbox_budget_guard(spark):
+    """The guard fires when the frame runs: building it fires no job."""
     from setsm_postprocessing_python_spark.operators.components import fill_holes
 
     df = _cells_df(spark, [(0, 0), (100_000, 100_000)])
-    with pytest.raises(ValueError, match="budget"):
-        fill_holes(df, bbox_budget=1 << 20)
+    out = fill_holes(df, bbox_budget=1 << 20)
+    with pytest.raises(pyspark.errors.SparkRuntimeException, match="budget"):
+        out.collect()
 
 
 def test_fill_holes_grouped_matches_global(spark):
-    """Per-group variant == global fill_holes run per group (uncapped),
-    and == fill_small_voids semantics when capped."""
+    """Per-group variant == a BFS flood over each group's own grid:
+    1-padded bbox, border-unreachable voids (uncapped), and unpadded bbox,
+    voids < fill_pix (capped)."""
     from setsm_postprocessing_python_spark.operators.components import (
-        fill_holes, fill_holes_grouped, fill_small_voids)
+        fill_holes_grouped)
 
     ring = [(20 + dx, 20 + dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
             if not (dx == 0 and dy == 0)]
     line = [(100 + i, 0) for i in range(5)]
-    rows = ([("g1", x, y) for x, y in ring] + [("g2", x, y) for x, y in line])
+    groups = {"g1": ring, "g2": line}
     df = spark.createDataFrame(
-        [(g, y * D.LON_CELL_STRIDE + x, x, y) for g, x, y in rows],
+        [(g, y * D.LON_CELL_STRIDE + x, x, y)
+         for g, cells in groups.items() for x, y in cells],
         "group_id string, cell long, cell_x long, cell_y long")
+
+    def want(fill_pix):
+        pad = 1 if fill_pix is None else 0
+        out = set()
+        for g, cells in groups.items():
+            x0 = min(x for x, _ in cells) - pad
+            y0 = min(y for _, y in cells) - pad
+            occ = np.zeros((max(y for _, y in cells) + pad - y0 + 1,
+                            max(x for x, _ in cells) + pad - x0 + 1), dtype=bool)
+            for x, y in cells:
+                occ[y - y0, x - x0] = True
+                out.add((g, y * D.LON_CELL_STRIDE + x, False))
+            for hy, hx in zip(*np.nonzero(_bfs_hole_reference(occ, fill_pix))):
+                out.add((g, int(hy + y0) * D.LON_CELL_STRIDE + int(hx + x0),
+                         True))
+        return out
+
     got = {(r.group_id, r.cell, r.was_hole)
            for r in fill_holes_grouped(df).collect()}
-    want = set()
-    for g in ("g1", "g2"):
-        sub = df.where(F.col("group_id") == g)
-        want |= {(g, r.cell, r.was_hole) for r in fill_holes(sub).collect()}
-    assert got == want
+    assert got == want(None)
     assert ("g1", 20 + 20 * D.LON_CELL_STRIDE, True) in got  # ring center
 
     capped = {(r.group_id, r.cell, r.was_hole)
               for r in fill_holes_grouped(df, fill_pix=2).collect()}
-    want_c = set()
-    for g in ("g1", "g2"):
-        sub = df.where(F.col("group_id") == g)
-        want_c |= {(g, r.cell, r.was_hole)
-                   for r in fill_small_voids(sub, fill_pix=2).collect()}
-    assert capped == want_c
+    assert capped == want(2)
     assert ("g1", 20 + 20 * D.LON_CELL_STRIDE, True) in capped  # 1 < fill_pix
 
 

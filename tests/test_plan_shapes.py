@@ -69,7 +69,7 @@ def test_ring_density_is_join_free(spark):
 KERNEL_EXCHANGES = {
     "q_ring_density": 1, "q_ring_stats": 5, "q_conv2": 2, "q_slope": 3,
     "q_interp_shift": 3, "q_morphology": 6, "q_resize_bilinear": 9,
-    "q_water_compose": 6, "q_bwareaopen": 2, "q_fill_holes": 4,
+    "q_water_compose": 6, "q_bwareaopen": 2, "q_fill_holes": 2,
     "q_knn": 1, "q_hex_knn": 2,
 }
 
